@@ -176,25 +176,6 @@ def _banded(sigs: DataFrame, num_bands: int) -> DataFrame:
     )
 
 
-def minhash_candidate_pairs(sigs: DataFrame, num_bands: int = 8) -> DataFrame:
-    """LSH banding: split the signature into bands, bucket-join on
-    (band_index, band hash). Returns candidate (a, b) pairs with a < b.
-    The O(n²) pair space never materializes — only per-bucket joins.
-
-    ``sigs`` must carry ``4*num_bands`` hashes (validated when built
-    through :func:`minhash_neardup_pairs`; direct callers own the
-    contract — see :func:`require_band_geometry`)."""
-    banded = _banded(sigs, num_bands)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
-        .distinct()
-    )
-
-
 def minhash_neardup_pairs(df: DataFrame, text_col: str, id_col: str,
                           threshold: float = 0.7, num_hashes: int = 32,
                           num_bands: int = 8, shingle_n: int = 3,

@@ -388,20 +388,6 @@ def _encode_bmp24_arr(arr: "np.ndarray") -> bytes:
     return hdr + info + px
 
 
-def _encode_bmp24(w: int, h: int, rgb_at) -> bytes:
-    """Spec-conformant 24bpp BMP container from ``rgb_at(p) -> (r,g,b)``
-    over row-major TOP-DOWN pixel index p (callable form, kept for
-    callers whose pixels aren't already an array; hot paths build the
-    array directly and use ``_encode_bmp24_arr``). Shared by the
-    synthetic builders and the real resize kernel so both write the
-    identical container layout the parser certifies."""
-    arr = np.fromiter(
-        (v for p in range(w * h) for v in rgb_at(p)),
-        dtype=np.uint8, count=w * h * 3,
-    ).reshape(h, w, 3)
-    return _encode_bmp24_arr(arr)
-
-
 def _bmp_bytes(doc_id: int) -> bytes:
     """One real BMP payload from the generative law (see above).
     Channel c of pixel p is ``(doc_id*7 + p*3 + c) % 256``; flattened

@@ -13,23 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def approx_profile(df: DataFrame, key_cols: list[str],
-                   measure_cols: list[str], rsd: float = 0.02) -> DataFrame:
-    """One-pass approximate profile: HLL distinct per key column,
-    approximate quantiles + min/max/mean per measure column."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in key_cols:
-        aggs.append(F.approx_count_distinct(c, rsd).alias(f"approx_distinct_{c}"))
-    for c in measure_cols:
-        aggs += [
-            F.min(c).alias(f"min_{c}"),
-            F.max(c).alias(f"max_{c}"),
-            F.round(F.avg(c), 4).alias(f"avg_{c}"),
-            F.percentile_approx(c, [0.25, 0.5, 0.75, 0.95], 10000).alias(f"quantiles_{c}"),
-        ]
-    return df.agg(*aggs)
-
-
 # --------------------------------------------------------------------------
 # Count-min sketch: mergeable heavy-hitter / frequency estimation
 # --------------------------------------------------------------------------

@@ -187,11 +187,6 @@ def _latest_green_round() -> dict[str, int]:
     return latest
 
 
-def _green_in_recorded_correctness() -> set[str]:
-    """Names with a passing row in any driver CORRECTNESS_r*.json artifact."""
-    return set(_latest_green_round())
-
-
 def _with_cache_rotation(fn: Callable) -> Callable:
     """Release the PREVIOUS query invocation's tracked persists before
     building this one (see ``cache.py`` — harnesses that don't

@@ -13,6 +13,10 @@ Spark's BIGINT — the x26/x27/x31 round-2 lesson).
 from __future__ import annotations
 
 import math
+import os
+import shutil
+import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -4374,6 +4378,36 @@ ORACLE["x123_sampled_quantiles"] = f"""
 """
 
 
+# --- X6 x X7 bridge: the streaming faces' staged backlog ---------------------
+
+@contextmanager
+def _stream_backlog(df: DataFrame):
+    """Stage ``df`` as a 2-file parquet backlog and yield
+    ``(open_stream, root)``: ``open_stream()`` reads the backlog as a
+    stream of one file per micro-batch (``maxFilesPerTrigger=1``, the
+    schema taken from ``df.schema``) — call it again to restart over
+    the same files — and ``root`` is a scratch dir for a fold's
+    checkpoint and state. Everything is removed on exit.
+
+    Why 2 files: the MINIMAL multi-batch backlog. The faces'
+    ``multi_batch`` law needs ≥ 2 micro-batches, and the merge laws
+    make the folded sketch identical for ANY split, so more batches
+    change nothing the oracle sees. Each batch costs ~0.8 s of FIXED
+    streaming-engine overhead (r14 profile: fold work is ~0.1 s of it)
+    plus, in durable mode, one state publish — so extra batches were
+    pure builder latency. x127's crash-replay exercise drops the NEWEST
+    commit, which is split-count-independent. Multi-way-split folds
+    stay pinned in tests/test_streaming.py."""
+    root = tempfile.mkdtemp(prefix="stream_backlog_")
+    src = os.path.join(root, "src")
+    try:
+        df.repartition(2).write.mode("overwrite").parquet(src)
+        yield (lambda: df.sparkSession.readStream.schema(df.schema)
+               .option("maxFilesPerTrigger", 1).parquet(src)), root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 # --- X6 x X7 bridge: streaming KMV sketch maintenance (r13) ------------------
 
 _X124_K = 256
@@ -4406,31 +4440,15 @@ def x124_stream_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefilter-pushed TakeOrdered; driver state O(k); the exact count
     is certification-only, as in x120/x122.
     """
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     from ..operators.profiling import kmv_estimate  # noqa: PLC0415
     from ..streaming.sketches import stream_kmv_sketch  # noqa: PLC0415
 
     k = _X124_K
     ev = load_table(spark, sf_dir, "events").select("event_id")
-    root = tempfile.mkdtemp(prefix="x124_")
-    try:
-        # 2 one-file micro-batches — the minimal multi-batch backlog
-        # (r14: each batch is ~0.8 s of fixed streaming-engine
-        # overhead; the merge law makes the folded sketch identical
-        # for ANY split, so extra batches were pure builder latency —
-        # multi-way-split folds stay pinned in tests/test_streaming.py)
-        ev.repartition(2).write.mode("overwrite").parquet(root)
-        stream = (
-            spark.readStream.schema("event_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-        )
+    with _stream_backlog(ev) as (open_stream, _):
         hs, n_batches, _ = stream_kmv_sketch(
-            stream, "event_id", k, prefilter_denom=_X124_PREFILTER_DENOM)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+            open_stream(), "event_id", k,
+            prefilter_denom=_X124_PREFILTER_DENOM)
     sketch = spark.createDataFrame([(h,) for h in hs], "h long")
     est = kmv_estimate(sketch, k)
     exact = ev.agg(F.countDistinct("event_id").cast("long").alias("n_exact"))
@@ -4730,48 +4748,22 @@ def x127_stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted as one ≤ depth·width-row parquet version per batch;
     merge cost O(depth·width) per batch, independent of batch size.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
+    from ..streaming.coherence import drop_last_commit  # noqa: PLC0415
     from ..streaming.sketches import stream_cms_sketch  # noqa: PLC0415
 
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    root = tempfile.mkdtemp(prefix="x127_")
-    src = os.path.join(root, "src")
-    ckpt = os.path.join(root, "ckpt")
-    state = os.path.join(root, "state")
-    try:
-        # 2 one-file micro-batches (r14, x124's minimal-backlog note):
-        # the crash-replay exercise below deletes the NEWEST commit and
-        # restarts, which is split-count-independent; 2 batches = 2
-        # fewer fixed ~0.8 s micro-batch rounds + 2 fewer durable
-        # publishes than the old 4-file backlog, same oracle counters
-        ev.repartition(2).write.mode("overwrite").parquet(src)
-
-        def _stream():
-            return (
-                spark.readStream.schema("user_id long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
+    with _stream_backlog(ev) as (open_stream, root):
+        ckpt = os.path.join(root, "ckpt")
+        state = os.path.join(root, "state")
         _, n_batches, _ = stream_cms_sketch(
-            _stream(), "user_id", _X127_DEPTH, _X127_WIDTH,
+            open_stream(), "user_id", _X127_DEPTH, _X127_WIDTH,
             state_path=state, checkpoint_dir=ckpt)
         # crash-simulate: the newest commit vanishes (fold published,
         # commit lost); restart must skip the replay via the watermark
-        commits = os.path.join(ckpt, "commits")
-        last = max(int(f) for f in os.listdir(commits) if f.isdigit())
-        os.remove(os.path.join(commits, str(last)))
-        crc = os.path.join(commits, f".{last}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
+        drop_last_commit(ckpt)
         counters, n_refolded, n_skipped = stream_cms_sketch(
-            _stream(), "user_id", _X127_DEPTH, _X127_WIDTH,
+            open_stream(), "user_id", _X127_DEPTH, _X127_WIDTH,
             state_path=state, checkpoint_dir=ckpt)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     sketch = spark.createDataFrame(counters, "i int, b int, cnt long")
     return (
         sketch.groupBy("i")
@@ -4853,28 +4845,15 @@ def x128_stream_sample_quantiles(spark: SparkSession, sf_dir: str,
     partial aggregate over the one-row broadcast sample array) — the
     24/7 product path keeps the k-row sample alone.
     """
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     from ..streaming.sketches import stream_bottomk_sample  # noqa: PLC0415
 
     k = _X128_K
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.col("value").alias("v"))
-    root = tempfile.mkdtemp(prefix="x128_")
-    try:
-        # 2 one-file micro-batches (r14, x124's minimal-backlog note)
-        ev.repartition(2).write.mode("overwrite").parquet(root)
-        stream = (
-            spark.readStream.schema("event_id long, v double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-        )
+    with _stream_backlog(ev) as (open_stream, _):
         sample, n_batches, _ = stream_bottomk_sample(
-            stream, ["event_id"], "v", k,
+            open_stream(), ["event_id"], "v", k,
             prefilter_denom=_X128_PREFILTER_DENOM)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     samp = spark.createDataFrame(sample, "h long, v double")
     srow = samp.agg(
         F.sort_array(F.collect_list("v")).alias("arr"),
@@ -5675,9 +5654,6 @@ def x133_stream_overlap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise phase touches two ≤ k-row tables; the exact counts are
     certification-only (x120/x122 discipline).
     """
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     from ..operators.profiling import kmv_set_algebra  # noqa: PLC0415
     from ..streaming.sketches import (  # noqa: PLC0415
         stream_kmv_sketch_by_group,
@@ -5689,26 +5665,14 @@ def x133_stream_overlap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_returnflag") == "R").cast("int").alias("a"),
         (F.col("l_quantity") >= 25).cast("int").alias("b"),
     )
-    root = tempfile.mkdtemp(prefix="x133_")
-    try:
-        # 2 one-file micro-batches — the MINIMAL multi-batch backlog
-        # (the multi_batch law needs n_batches ≥ 2, and the per-lane
-        # merge law makes the folded state identical for ANY split, so
-        # 2 vs 3 batches changes nothing the oracle sees). Each batch
-        # costs ~0.8 s of FIXED streaming-engine overhead (r14 profile:
-        # fold work is ~0.1 s of it), so the third batch was pure
-        # latency; the 3-way-split fold law stays pinned in the unit
-        # tests (tests/test_streaming.py).
-        li.repartition(2).write.mode("overwrite").parquet(root)
-        lanes = [
-            F.when(F.col(flag) == 1, F.struct(
-                F.lit(flag).alias("g"), F.col("key").alias("key")))
-            for flag in ("a", "b")
-        ]
+    lanes = [
+        F.when(F.col(flag) == 1, F.struct(
+            F.lit(flag).alias("g"), F.col("key").alias("key")))
+        for flag in ("a", "b")
+    ]
+    with _stream_backlog(li) as (open_stream, _):
         melted = (
-            spark.readStream.schema("key long, a int, b int")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
+            open_stream()
             .select(F.explode(F.filter(
                 F.array(*lanes), lambda x: x.isNotNull())).alias("e"))
             .select("e.g", "e.key")
@@ -5716,8 +5680,6 @@ def x133_stream_overlap_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         folded, n_batches, _ = stream_kmv_sketch_by_group(
             melted, "g", "key", k,
             prefilter_denom=_X129_PREFILTER_DENOM)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     sk_a = spark.createDataFrame(
         [(h,) for h in folded.get("a", [])], "h long")
     sk_b = spark.createDataFrame(

@@ -43,6 +43,7 @@ from ..operators.multimodal import (
 )
 from ..operators.similarity import cosine_topk, lsh_topk
 from ..sources import load_table
+from ..sources.testdata import events_stream
 
 
 # --- X1: exact dedup --------------------------------------------------------
@@ -856,7 +857,6 @@ def x17_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    from ..sources.testdata import events_stream
     from ..streaming.windows import tumbling_counts
 
     agg = tumbling_counts(
@@ -874,15 +874,6 @@ def x17_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name).orderBy("window_start", "event_type")
 
 
-def _events_nanostream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming reader for the events table — delegates to the shared
-    footer-dispatching reader (sources/testdata.events_stream) so a testdata
-    regeneration changes one function, not every streaming query."""
-    from ..sources.testdata import events_stream
-
-    return events_stream(spark, sf_dir)
-
-
 def x24_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 — stateful streaming dedup through the real engine:
     ``dropDuplicatesWithinWatermark`` over a deliberately DOUBLED stream
@@ -896,8 +887,8 @@ def x24_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.windows import dedup_within_watermark
 
-    doubled = _events_nanostream(spark, sf_dir).unionAll(
-        _events_nanostream(spark, sf_dir)
+    doubled = events_stream(spark, sf_dir).unionAll(
+        events_stream(spark, sf_dir)
     )
     dd = dedup_within_watermark(doubled, ["event_id"], watermark="2 hours")
     name = "x24_" + uuid.uuid4().hex[:8]
@@ -927,7 +918,7 @@ def x25_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import session_counts
 
     agg = session_counts(
-        _events_nanostream(spark, sf_dir), gap="30 minutes", watermark="4 hours"
+        events_stream(spark, sf_dir), gap="30 minutes", watermark="4 hours"
     )
     name = "x25_" + uuid.uuid4().hex[:8]
     q = (
@@ -1620,8 +1611,8 @@ def x29_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.windows import stream_interval_join
 
-    errors = _events_nanostream(spark, sf_dir).filter(F.col("event_type") == "error")
-    clicks = _events_nanostream(spark, sf_dir).filter(F.col("event_type") == "click")
+    errors = events_stream(spark, sf_dir).filter(F.col("event_type") == "error")
+    clicks = events_stream(spark, sf_dir).filter(F.col("event_type") == "click")
     joined = stream_interval_join(errors, clicks, key="user_id",
                                   lookback="30 minutes")
     name = "x29_" + uuid.uuid4().hex[:8]
@@ -2275,8 +2266,6 @@ def x55_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow behind the DuckDB oracle, like x17/x24/x25.
     """
     import uuid
-
-    from ..sources.testdata import events_stream
 
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -3176,7 +3165,7 @@ def x111_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.stateful import user_running_totals
 
-    totals = user_running_totals(_events_nanostream(spark, sf_dir))
+    totals = user_running_totals(events_stream(spark, sf_dir))
     name = "x111_" + uuid.uuid4().hex[:8]
     q = (
         totals.writeStream.format("memory")

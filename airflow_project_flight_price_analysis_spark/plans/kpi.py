@@ -40,10 +40,6 @@ from ..sources import load_table
 _FARE_SQL = "l_extendedprice * (1 - l_discount) * (1 + l_tax)"
 
 
-def _fare() -> F.Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
-
-
 def _seasonality(month_col: F.Column) -> F.Column:
     return (
         F.when(month_col.isin(6, 7), F.lit("Peak"))

@@ -9,6 +9,11 @@ one. This module runs that fold through the real streaming engine:
 merges the ≤ k-row result into the running sketch driver-side (the
 bounded-collect class — every collect here is capped at k or
 depth·width rows by the sketch's own definition, never by the data).
+The fold itself — and with it the versioned-watermark protocol below
+— runs in exactly one place, :func:`fold_stream`; each public
+``stream_*`` function is a thin caller supplying the batch sketch
+(``batch_fn``) and a pure-Python merge over the state rows
+(``merge_fn``).
 
 Correctness is the merge LAW, not luck: bottom-k of a union equals
 bottom-k of the concatenated member bottom-ks, and count-min counters
@@ -53,12 +58,11 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import Counter
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_CMS_STATE_SCHEMA = "i int, b int, cnt long"
-_KMV_STATE_SCHEMA = "h long"
 
 
 def _read_fold_state(spark: SparkSession, state_path: str,
@@ -127,6 +131,51 @@ def _check_fold_coherence(batch_id: int, watermark: int | None,
     )
 
 
+def fold_stream(stream_df: DataFrame,
+                batch_fn: Callable[[DataFrame], DataFrame],
+                merge_fn: Callable[[list, list], list], schema: str,
+                what: str, state_path: str | None,
+                checkpoint_dir: str | None) -> tuple[list, int, int]:
+    """Run one sketch fold over a streaming DataFrame to completion
+    (availableNow) — the ONE place the versioned-watermark protocol
+    (module docstring) runs. The running sketch is the sorted list of
+    row tuples that ``schema`` describes and the durable mode
+    publishes. Per micro-batch: the coherence check (a replay skips
+    with no Spark job), ONE bounded collect of ``batch_fn(batch_df)``
+    (≤ k or depth·width rows by the sketch's definition), then
+    ``rows = merge_fn(rows, batch_rows)`` driver-side, the publish,
+    and the watermark advance. ``merge_fn`` must return the rows
+    sorted, so the in-memory state and the published state are the
+    same list. State is read only when ``state_path`` is set.
+
+    Returns ``(rows, n_folded, n_skipped)``."""
+    spark = stream_df.sparkSession
+    wm, rows = (
+        _read_fold_state(spark, state_path, schema)
+        if state_path else (None, [])
+    )
+    state: dict = {"rows": [tuple(r) for r in rows], "wm": wm,
+                   "folded": 0, "skipped": 0}
+
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        if not _check_fold_coherence(batch_id, state["wm"], what):
+            state["skipped"] += 1
+            return
+        batch_rows = [tuple(r) for r in batch_fn(batch_df).collect()]
+        state["rows"] = merge_fn(state["rows"], batch_rows)
+        if state_path:
+            _publish_fold_state(
+                spark, state_path, schema, state["rows"], batch_id)
+        state["wm"] = batch_id
+        state["folded"] += 1
+
+    writer = stream_df.writeStream.foreachBatch(_fold)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return state["rows"], state["folded"], state["skipped"]
+
+
 def stream_kmv_sketch(stream_df: DataFrame, key_col: str, k: int,
                       prefilter_denom: int | None = None,
                       state_path: str | None = None,
@@ -153,34 +202,12 @@ def stream_kmv_sketch(stream_df: DataFrame, key_col: str, k: int,
 
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    spark = stream_df.sparkSession
-    wm, rows = (
-        _read_fold_state(spark, state_path, _KMV_STATE_SCHEMA)
-        if state_path else (None, [])
-    )
-    state: dict = {"hs": {r.h for r in rows}, "wm": wm,
-                   "folded": 0, "skipped": 0}
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if not _check_fold_coherence(batch_id, state["wm"], "KMV"):
-            state["skipped"] += 1
-            return
-        bk = kmv_sketch_table(batch_df, key_col, k, prefilter_denom)
-        state["hs"] = set(sorted(
-            state["hs"] | {r.h for r in bk.collect()})[:k])
-        if state_path:
-            _publish_fold_state(
-                spark, state_path, _KMV_STATE_SCHEMA,
-                [(h,) for h in sorted(state["hs"])], batch_id)
-        state["wm"] = batch_id
-        state["folded"] += 1
-
-    writer = stream_df.writeStream.foreachBatch(_merge)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    return sorted(state["hs"]), state["folded"], state["skipped"]
+    rows, folded, skipped = fold_stream(
+        stream_df,
+        lambda b: kmv_sketch_table(b, key_col, k, prefilter_denom),
+        lambda rows, new: sorted(set(rows) | set(new))[:k],
+        "h long", "KMV", state_path, checkpoint_dir)
+    return [h for (h,) in rows], folded, skipped
 
 
 def stream_bottomk_sample(stream_df: DataFrame, key_cols: list[str],
@@ -219,37 +246,13 @@ def stream_bottomk_sample(stream_df: DataFrame, key_cols: list[str],
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    schema = "h long, v double"
-    spark = stream_df.sparkSession
-    wm, rows = (
-        _read_fold_state(spark, state_path, schema)
-        if state_path else (None, [])
-    )
-    state: dict = {"sample": [(r.h, r.v) for r in rows], "wm": wm,
-                   "folded": 0, "skipped": 0}
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if not _check_fold_coherence(batch_id, state["wm"], "bottom-k"):
-            state["skipped"] += 1
-            return
-        bk = hash_bottomk_sample(
-            batch_df, key_cols, k, prefilter_denom
-        ).select(F.col("__sample_h").alias("h"),
-                 F.col(value_col).cast("double").alias("v"))
-        state["sample"] = sorted(
-            state["sample"] + [(r.h, r.v) for r in bk.collect()])[:k]
-        if state_path:
-            _publish_fold_state(
-                spark, state_path, schema, state["sample"], batch_id)
-        state["wm"] = batch_id
-        state["folded"] += 1
-
-    writer = stream_df.writeStream.foreachBatch(_merge)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    return state["sample"], state["folded"], state["skipped"]
+    return fold_stream(
+        stream_df,
+        lambda b: hash_bottomk_sample(b, key_cols, k, prefilter_denom)
+        .select(F.col("__sample_h").alias("h"),
+                F.col(value_col).cast("double").alias("v")),
+        lambda rows, new: sorted(rows + new)[:k],
+        "h long, v double", "bottom-k", state_path, checkpoint_dir)
 
 
 def stream_cms_sketch(stream_df: DataFrame, key_col: str,
@@ -280,44 +283,18 @@ def stream_cms_sketch(stream_df: DataFrame, key_col: str,
 
     if depth < 1 or width < 1:
         raise ValueError(f"depth/width must be >= 1, got {depth}/{width}")
-    spark = stream_df.sparkSession
-    wm, rows = (
-        _read_fold_state(spark, state_path, _CMS_STATE_SCHEMA)
-        if state_path else (None, [])
-    )
-    state: dict = {
-        "counters": {(r.i, r.b): r.cnt for r in rows},
-        "wm": wm, "folded": 0, "skipped": 0,
-    }
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if not _check_fold_coherence(batch_id, state["wm"], "count-min"):
-            state["skipped"] += 1
-            return
-        bk = count_min_sketch_table(batch_df, key_col, depth, width)
-        for r in bk.collect():  # ≤ depth·width rows — bounded collect
-            key = (r.i, r.b)
-            state["counters"][key] = state["counters"].get(key, 0) + r.cnt
-        if state_path:
-            _publish_fold_state(
-                spark, state_path, _CMS_STATE_SCHEMA,
-                [(i, b, c) for (i, b), c in sorted(state["counters"].items())],
-                batch_id)
-        state["wm"] = batch_id
-        state["folded"] += 1
+    def _add(rows: list, new: list) -> list:
+        counters: Counter = Counter()
+        for i, b, cnt in rows + new:
+            counters[i, b] += cnt
+        return sorted((i, b, cnt) for (i, b), cnt in counters.items())
 
-    writer = stream_df.writeStream.foreachBatch(_merge)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    return (
-        sorted((i, b, c) for (i, b), c in state["counters"].items()),
-        state["folded"], state["skipped"],
-    )
-
-
-_KMV_GROUP_STATE_SCHEMA = "g string, h long"
+    return fold_stream(
+        stream_df,
+        lambda b: count_min_sketch_table(b, key_col, depth, width),
+        _add, "i int, b int, cnt long", "count-min", state_path,
+        checkpoint_dir)
 
 
 def stream_kmv_sketch_by_group(stream_df: DataFrame, group_col: str,
@@ -353,41 +330,24 @@ def stream_kmv_sketch_by_group(stream_df: DataFrame, group_col: str,
 
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    spark = stream_df.sparkSession
-    wm, rows = (
-        _read_fold_state(spark, state_path, _KMV_GROUP_STATE_SCHEMA)
-        if state_path else (None, [])
-    )
+
+    def _union(rows: list, new: list) -> list:
+        lanes: dict = {}
+        for g, h in set(rows) | set(new):
+            lanes.setdefault(g, []).append(h)
+        # a NULL group is a lane too: order it first instead of
+        # comparing None with the other group values
+        return sorted(((g, h) for g, hs in lanes.items()
+                       for h in sorted(hs)[:k]),
+                      key=lambda r: (r[0] is not None, r))
+
+    rows, folded, skipped = fold_stream(
+        stream_df,
+        lambda b: kmv_sketch_by_group(b, group_col, key_col, k,
+                                      prefilter_denom),
+        _union, "g string, h long", "grouped-KMV", state_path,
+        checkpoint_dir)
     groups: dict = {}
-    for r in rows:
-        groups.setdefault(r.g, set()).add(r.h)
-    state: dict = {"groups": groups, "wm": wm, "folded": 0, "skipped": 0}
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if not _check_fold_coherence(batch_id, state["wm"], "grouped-KMV"):
-            state["skipped"] += 1
-            return
-        bk = kmv_sketch_by_group(batch_df, group_col, key_col, k,
-                                 prefilter_denom)
-        for r in bk.collect():  # ≤ k·|groups| rows — bounded collect
-            state["groups"].setdefault(r.g, set()).add(r.h)
-        for g, hs in state["groups"].items():
-            state["groups"][g] = set(sorted(hs)[:k])
-        if state_path:
-            _publish_fold_state(
-                spark, state_path, _KMV_GROUP_STATE_SCHEMA,
-                [(g, h) for g in sorted(state["groups"])
-                 for h in sorted(state["groups"][g])],
-                batch_id)
-        state["wm"] = batch_id
-        state["folded"] += 1
-
-    writer = stream_df.writeStream.foreachBatch(_merge)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    return (
-        {g: sorted(hs) for g, hs in state["groups"].items()},
-        state["folded"], state["skipped"],
-    )
+    for g, h in rows:
+        groups.setdefault(g, []).append(h)
+    return groups, folded, skipped

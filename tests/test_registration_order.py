@@ -30,7 +30,7 @@ def test_unverified_queries_fit_in_driver_budget():
     explicitly declared as deliberate overflow in
     ``plans._BUDGET_OVERFLOW_OK`` (still gate- and replica-verified)."""
     names = list(entrymod.queries())
-    green = plans._green_in_recorded_correctness()
+    green = set(plans._latest_green_round())
     late_unverified = [
         n for i, n in enumerate(names)
         if n not in green and i >= DRIVER_BUDGET

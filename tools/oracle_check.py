@@ -1,7 +1,9 @@
 """Targeted oracle equivalence check: run named queries() entries
 against their DuckDB oracles at one or more scale factors — the
 per-change proof step of the optimization rounds (the full driver-sim
-gate stays the pre-commit bar; this is the fast inner loop).
+gate stays the pre-commit bar; this is the fast inner loop). The
+comparison is tests/oracle_util.assert_matches_oracle, the same
+comparator the test suite and perfbench use.
 
 Usage: python tools/oracle_check.py <sf[,sf...]> <name> [<name> ...]
 e.g.   python tools/oracle_check.py 0.001,0.01,0.1 q73_waiting_suppliers
@@ -9,38 +11,19 @@ e.g.   python tools/oracle_check.py 0.001,0.01,0.1 q73_waiting_suppliers
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _norm(pdf):
-    cols = sorted(pdf.columns)
-    out = []
-    for row in pdf[cols].itertuples(index=False, name=None):
-        out.append(tuple(
-            "<null>" if v is None or (isinstance(v, float) and math.isnan(v))
-            else f"{v:.9g}" if isinstance(v, float) else str(v)
-            for v in row
-        ))
-    return sorted(out)
-
 
 def main() -> None:
-    import duckdb
-
     from airflow_project_flight_price_analysis_spark.plans import (
         all_oracle_sql,
         all_queries,
     )
     from airflow_project_flight_price_analysis_spark.session import get_spark
+    from tests.oracle_util import assert_matches_oracle
 
     sfs = sys.argv[1].split(",")
     names = sys.argv[2:]
@@ -49,20 +32,15 @@ def main() -> None:
     bad = []
     for sf in sfs:
         sf_dir = f"/root/testdata/sf{sf}"
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
         for name in names:
-            sdf = qs[name](spark, sf_dir).toPandas()
-            odf = con.execute(os_[name]).fetchdf()
-            ok = (sorted(sdf.columns) == sorted(odf.columns)
-                  and len(sdf) == len(odf) and _norm(sdf) == _norm(odf))
-            print(f"sf{sf} {name}: {'MATCH' if ok else 'MISMATCH'}",
-                  flush=True)
-            if not ok:
+            try:
+                assert_matches_oracle(qs[name](spark, sf_dir), os_[name],
+                                      sf_dir, name)
+                verdict = "MATCH"
+            except AssertionError as e:
+                verdict = f"MISMATCH ({e})"
                 bad.append((sf, name))
-        con.close()
+            print(f"sf{sf} {name}: {verdict}", flush=True)
     print("FAILED:", bad) if bad else print("ALL MATCH")
     spark.stop()
     if bad:
