@@ -24,36 +24,23 @@ from pyspark.sql import DataFrame, SparkSession
 #      automatically re-certify whatever the driver has not seen longest,
 #      with no hand-maintained per-round rotation list (round 5).
 _DRIVER_PRIORITY: tuple[str, ...] = (
-    # Round 15 (optimization round 2): the r14 pins served their
-    # purpose (all 15 green in CORRECTNESS_r14, individually verified
-    # by the r14 judge). This round's tier 1 carries every face whose
-    # PHYSICAL composition changed (values and oracles unchanged —
-    # each re-proven locally at sf0.001/0.01/0.1 plus the full
-    # driver-sim gate; see OPTIMIZATION_r15.md):
-    # q73: the credited-supplier pass collapsed into the per-order
-    # aggregate (2 SortMergeJoins -> 0, 10 -> 6 scans)
-    "q73_waiting_suppliers",
-    # x115: embeddings cache re-clustered via scale_out (the x131
-    # cache-width hazard) + the exact float baseline persisted (it fed
-    # two consumers unpersisted)
-    "x115_quantized_ann",
-    # codec family: the BMP/WAV kernels (encode, decode, resize,
-    # resample, video builder) vectorized with numpy whole-array ops —
-    # byte-identical containers (pinned by
-    # tests/test_extensions.py::test_codec_numpy_kernels_match_bytewise_reference),
-    # same plans, new Python internals. x105 shares _parse_bmp.
+    # The r15 plan restructures (q73, x115, x88, x132) landed green in
+    # CORRECTNESS_r15 and are untouched since, so they rotate with
+    # tier 3 again. Tier 1 now carries the media faces whose PHYSICAL
+    # plans changed (values and oracles unchanged — re-proven locally
+    # at sf0.001/0.01/0.1): every codec operator in
+    # operators/multimodal.py crosses into Python through the one
+    # ``_map_rows`` adapter, so each MapInPandas node became a
+    # MapInArrow node over a column-pruned input.
+    "x11_media_features",
     "x103_wav_decode_stats",
     "x105_bmp_decode_stats",
     "x116_bmp_resize_stats",
     "x117_frame_sample_stats",
     "x118_wav_resample_stats",
     "x119_png_decode_stats",
-    # x88/x132 share _bm25_raw_scores, whose persisted per-doc token
-    # frame is now scale_out-widened (same hazard as x115)
-    "x88_bm25_ranking",
-    "x132_rrf_fusion",
-    # The remaining ~40 tier-3 slots sweep the stalest green cohort
-    # (r9/r10) automatically — r14 verdict item 7.
+    # The remaining tier-3 slots sweep the stalest green cohort
+    # automatically — r14 verdict item 7.
 )
 # Tier 2 (automatic, no green row) as of round-14: empty — every
 # registered query has a green driver row (215/215 after r13). New
@@ -111,10 +98,10 @@ _CERT_FAMILIES: tuple[tuple[str, ...], ...] = (
     # the cleaning family shares functions/cleaning.py's coercion /
     # regex-standardize / parse expressions
     ("q06_clean_project", "q07_parse_priority", "q23_standardize_text"),
-    # the codec family shares the mapInPandas decode harness
-    # (operators/multimodal.py) — WAV and BMP are the two stdlib read
-    # paths; x116 (r11) adds the BMP WRITE side (real NN resize
-    # re-encodes, then re-parses through the same decoder)
+    # the codec family shares the mapInArrow row adapter
+    # (operators/multimodal.py::_map_rows) — WAV and BMP are the two
+    # stdlib read paths; x116 (r11) adds the BMP WRITE side (real NN
+    # resize re-encodes, then re-parses through the same decoder)
     ("x103_wav_decode_stats", "x105_bmp_decode_stats",
      "x116_bmp_resize_stats", "x117_frame_sample_stats",
      "x118_wav_resample_stats", "x119_png_decode_stats"),

@@ -277,12 +277,12 @@ def x10_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def x11_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing: documents → media table (payload bytes +
-    typed metadata) → Arrow-batched mapInPandas feature extraction.
-    n_bytes + sha256 are oracle-checked; the fake feature vector is not
-    (it exists to pin batch shapes)."""
+    typed metadata) → feature extraction through the media module's
+    Arrow row adapter (mapInArrow). n_bytes + sha256 are oracle-checked;
+    the stand-in feature vector is not (it exists to pin batch shapes)."""
     docs = load_table(spark, sf_dir, "documents")
     media = media_from_documents(docs)
-    feats = extract_features(media, fake=True)
+    feats = extract_features(media)
     return feats.select("media_id", "n_bytes", "sha").orderBy("media_id")
 
 
@@ -1816,8 +1816,8 @@ ORACLE.update({
 
 def x32_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 — video frame-sampling plan: per-video frame timestamps every
-    1000 ms from the typed metadata (JVM ``sequence`` + explode; the
-    per-frame decode would then run through the mapInPandas kernel).
+    1000 ms from the typed metadata (JVM ``sequence`` + explode; x117
+    runs the executed per-frame decode, ``frame_sample_decode``).
     Summarized per video as (media_id, n_frames, last_frame_ms) so the
     oracle pins the exact sampling grid."""
     docs = load_table(spark, sf_dir, "documents")
@@ -1844,8 +1844,9 @@ def x117_frame_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies frame boundary walking (a demuxer off by one byte or
     one frame breaks the cell structure), the per-frame decode, and
     the every-n selection. Swapping the slicer for libav's packet
-    iterator keeps schema/batch/partitioning identical (the documented
-    upgrade path at multimodal.py:76).
+    iterator keeps schema/batch/partitioning identical: only the per-row
+    kernel that ``frame_sample_decode`` hands to the module's one
+    mapInArrow adapter (``_map_rows``) changes.
 
     Scale shape: ONE fused Arrow pipeline (build → walk → decode;
     payloads never shuffle — the explosion to per-frame rows happens
@@ -2578,7 +2579,7 @@ def x103_wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     RIFF/WAVE PCM16 payloads deterministically from doc_id, then parse
     the actual container bytes with the stdlib `struct` kernel
     (operators/multimodal.py::decode_wav_features) inside Arrow-batched
-    mapInPandas — header walk, fmt validation, int16 frame unpack, RMS/
+    mapInArrow — header walk, fmt validation, int16 frame unpack, RMS/
     peak over the samples. The DuckDB oracle never sees the bytes: it
     recomputes the statistics analytically from the shared generative
     law (n = 40 + doc_id % 25; s_i = ((doc_id*31 + i*7) % 65536) -
@@ -2587,7 +2588,7 @@ def x103_wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_int) is one correctly-rounded IEEE op on identical inputs.
 
     Scale shape: the builder batch carries ONE long column (never the
-    text); payloads stay inside a single mapInPandas stage (built,
+    text); payloads stay inside a single mapInArrow stage (built,
     parsed, reduced to fixed-width stats) and are projected away before
     the final aggregate's shuffle — wide binary rows never shuffle.
     The result folds per-doc stats into a compact global profile so the
@@ -2777,8 +2778,8 @@ _X116_RW, _X116_RH = 10, 8
 
 
 def x116_bmp_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image resize certified end-to-end (upgrades X5's resize
-    from a PIL-gated stub to a working stdlib kernel for the BMP path):
+    """REAL image resize certified end-to-end (X5's resize as a
+    working stdlib kernel for the BMP path):
     build real BMP payloads from the x105 generative law, resample each
     through the REAL nearest-neighbor kernel
     (operators/multimodal.py::resize_bmp_nn — parse, floor-map

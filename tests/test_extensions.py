@@ -17,6 +17,8 @@ from airflow_project_flight_price_analysis_spark.operators.dedup import (
     simhash_signatures,
 )
 from airflow_project_flight_price_analysis_spark.operators.multimodal import (
+    _bmp_pixels_arr,
+    _wav_samples_np,
     extract_features,
     frame_sample_plan,
     media_from_documents,
@@ -115,13 +117,13 @@ def test_lsh_recall_against_brute_force(spark):
 def test_multimodal_feature_extraction(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     media = media_from_documents(docs)
-    feats = extract_features(media, fake=True, dim=8)
+    feats = extract_features(media, dim=8)
     rows = feats.collect()
     assert len(rows) == docs.count()
     assert all(len(r.feature) == 8 for r in rows)
     assert all(0.0 <= v < 1.0 for r in rows for v in r.feature)
     # deterministic: same payload → same sha/feature on rerun
-    again = extract_features(media, fake=True, dim=8).collect()
+    again = extract_features(media, dim=8).collect()
     assert {r.media_id: r.sha for r in rows} == {r.media_id: r.sha for r in again}
 
 
@@ -132,25 +134,6 @@ def test_frame_sample_plan_explodes_video(spark):
     )
     frames = frame_sample_plan(media, every_ms=1000).collect()
     assert [r.frame_ms for r in frames] == [0, 1000, 2000, 3000]
-
-
-def test_resize_rewrites_meta_preserves_payload(spark):
-    from airflow_project_flight_price_analysis_spark.operators.multimodal import (
-        media_from_documents,
-        resize,
-    )
-    from airflow_project_flight_price_analysis_spark.sources import load_table
-
-    from tests.conftest import SF_SMALL
-
-    docs = load_table(spark, SF_SMALL, "documents").limit(20)
-    media = media_from_documents(docs)
-    out = resize(media, 224, 224, fake=True)
-    rows = out.collect()
-    assert len(rows) == media.count()
-    assert all(r["meta"]["width"] == 224 and r["meta"]["height"] == 224 for r in rows)
-    orig = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    assert all(bytes(r["payload"]) == orig[r["media_id"]] for r in rows)
 
 
 def test_pii_redaction_semantics(spark):
@@ -324,6 +307,18 @@ def test_x34_window_is_sharded(spark):
 
 # --- real stdlib WAV codec (operators/multimodal.py, r7) -------------------
 
+def _wav_samples(payload):
+    """(sample_rate, samples as an int tuple) of a WAV payload."""
+    rate, arr = _wav_samples_np(payload)
+    return rate, tuple(arr.tolist())
+
+
+def _bmp_pixels(payload):
+    """(width, height, row-major top-down RGB bytes) of a BMP payload."""
+    w, h, arr = _bmp_pixels_arr(payload)
+    return w, h, arr.tobytes()
+
+
 def test_wav_roundtrip_decode(spark):
     """synth → decode recovers the generative law exactly: the decode
     parses REAL RIFF bytes (not the fake featurizer)."""
@@ -374,6 +369,22 @@ def test_wav_parser_walks_extra_chunks_and_rejects_garbage():
             + b"data" + st.pack("<I", 4) + b"\0\0\0\0")
     with pytest.raises(ValueError, match="unsupported"):
         _parse_wav(b"RIFF" + st.pack("<I", len(body)) + body)
+
+    def riff(fmt_body, data):
+        body = (b"WAVE" + b"fmt " + st.pack("<I", len(fmt_body)) + fmt_body
+                + b"data" + st.pack("<I", len(data)) + data
+                + b"\0" * (len(data) & 1))
+        return b"RIFF" + st.pack("<I", len(body)) + body
+
+    pcm16 = st.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+    # a fmt chunk too short for its 16 fixed bytes: ValueError, not
+    # struct.error
+    with pytest.raises(ValueError, match="fmt chunk"):
+        _parse_wav(riff(pcm16[:12], b"\0\0"))
+    # an odd-length PCM16 data chunk holds half a sample: rejected, not
+    # silently truncated
+    with pytest.raises(ValueError, match="odd-length"):
+        _parse_wav(riff(pcm16, b"\0\0\0"))
 
 
 def test_bmp_roundtrip_decode(spark):
@@ -435,7 +446,6 @@ def test_bmp_nn_resize_kernel():
     parser accepts; bad target dims raise."""
     from airflow_project_flight_price_analysis_spark.operators.multimodal import (
         _bmp_bytes,
-        _bmp_pixels,
         _parse_bmp,
         _resize_bmp_nn,
     )
@@ -532,6 +542,44 @@ def test_frame_sample_decode_operator(spark):
     assert all(r.n_frames == _video_n_frames(r.media_id) for r in rows)
 
 
+def test_media_operators_batch_contract(spark):
+    """Batch contract of the media operators, through public functions
+    only: an empty media table yields 0 rows with the declared schema,
+    a NULL payload featurizes as the empty byte string, and the frame
+    sampler emits one row per sampled frame (every_n=1 -> n_frames)."""
+    import hashlib
+
+    from airflow_project_flight_price_analysis_spark.operators.multimodal import (
+        BMP_FEATURE_SCHEMA,
+        MEDIA_SCHEMA,
+        VIDEO_FRAME_SCHEMA,
+        _video_n_frames,
+        decode_bmp_features,
+        frame_sample_decode,
+        synth_video_media,
+    )
+
+    empty = spark.createDataFrame([], MEDIA_SCHEMA)
+    for op, schema in ((decode_bmp_features, BMP_FEATURE_SCHEMA),
+                       (frame_sample_decode, VIDEO_FRAME_SCHEMA)):
+        out = op(empty)
+        assert out.schema.simpleString() == schema.simpleString()
+        assert out.collect() == []
+
+    null_payload = spark.createDataFrame([(1, None, None)], MEDIA_SCHEMA)
+    (row,) = extract_features(null_payload).collect()
+    assert (row.media_id, row.n_bytes) == (1, 0)
+    assert row.sha == hashlib.sha256(b"").hexdigest()
+
+    ids = (0, 1, 2, 5)
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    rows = frame_sample_decode(synth_video_media(docs), every_n=1).collect()
+    assert sorted((r.media_id, r.frame_idx, r.n_frames) for r in rows) == [
+        (d, f, _video_n_frames(d)) for d in ids
+        for f in range(_video_n_frames(d))
+    ]
+
+
 def test_wav_nn_resample_kernel():
     """Identity rate round-trips samples exactly; up/down-sampling
     match a reference NN time map; re-encoded output satisfies the
@@ -540,7 +588,6 @@ def test_wav_nn_resample_kernel():
         _parse_wav,
         _resample_wav_nn,
         _wav_bytes,
-        _wav_samples,
     )
 
     for did in (0, 7, 24):
@@ -625,6 +672,14 @@ def test_png_codec_roundtrip_and_strictness():
     p[16:29] = ihdr_body; p[29:33] = st.pack(">I", crc)
     with pytest.raises(ValueError, match="unsupported"):
         _parse_png(bytes(p))
+    # an IHDR body that is not 13 bytes (valid CRC) -> ValueError, not
+    # struct.error
+    png = _png_bytes(0)
+    short = b"IHDR" + png[16:28]
+    p = (png[:8] + st.pack(">I", 12) + short
+         + st.pack(">I", zlib.crc32(short) & 0xFFFFFFFF) + png[33:])
+    with pytest.raises(ValueError, match="IHDR"):
+        _parse_png(p)
 
 
 def test_png_decode_operator(spark):
@@ -675,7 +730,6 @@ def test_codec_numpy_kernels_match_bytewise_reference():
         WAV_SAMPLE_RATE,
         _bmp_bytes,
         _bmp_dims,
-        _bmp_pixels,
         _parse_bmp,
         _parse_wav,
         _png_bytes,
@@ -683,7 +737,6 @@ def test_codec_numpy_kernels_match_bytewise_reference():
         _resize_bmp_nn,
         _video_bytes,
         _wav_bytes,
-        _wav_samples,
     )
 
     def ref_bmp(w, h, rgb_at):

@@ -435,7 +435,7 @@ def test_q85_single_pass_conditional_counts(spark):
 
 def test_x103_x105_payloads_never_shuffle(spark):
     """Media-decode scale discipline: the binary payload must exist
-    only inside the fused MapInPandas chain — every Exchange carries
+    only inside the fused MapInArrow chain — every Exchange carries
     either the 8-byte doc_id (pre-synth repartition) or fixed-width
     stats (post-decode aggregate), and the documents scan reads ONLY
     doc_id."""

@@ -183,7 +183,7 @@ SECTIONS = [
      "broadcast back to orders"),
     ("x103_wav_decode_stats",
      "real stdlib WAV decode: payload exists only inside the fused "
-     "MapInPandas chain — the only exchanges carry doc_id (8 bytes) "
+     "MapInArrow chain — the only exchanges carry doc_id (8 bytes) "
      "and fixed-width stats with map-side combine"),
     ("x104_cdc_span_dedup",
      "content-defined chunking: boundary flags prefix-summed in ONE "
@@ -217,7 +217,7 @@ SECTIONS = [
      "aggregates attach via bounded BNLJ"),
     ("x116_bmp_resize_stats",
      "real NN resize: build -> resize -> re-parse fused into ONE "
-     "MapInPandas chain (payloads never shuffle); grouping dims are "
+     "MapInArrow chain (payloads never shuffle); grouping dims are "
      "a codegen projection of media_id, not a second codec pass"),
     ("x117_frame_sample_stats",
      "real video frame sampling: demux walk + per-frame decode with "
@@ -225,7 +225,7 @@ SECTIONS = [
      "fixed-width per-frame stats, never payload bytes"),
     ("x118_wav_resample_stats",
      "real audio resample: build -> resample -> re-parse fused into "
-     "ONE MapInPandas chain; grouping key replays the law on media_id "
+     "ONE MapInArrow chain; grouping key replays the law on media_id "
      "instead of a second builder pass"),
     ("x119_png_decode_stats",
      "real compressed PNG decode: CRC-verified chunk walk + zlib "

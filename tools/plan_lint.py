@@ -18,8 +18,8 @@ What it flags and why:
   each upstream partition contributes one partial row, so the funnel
   carries |partitions| rows, not |data|.)
 - ``BatchEvalPython`` — row-at-a-time Python UDF. The tree is supposed
-  to contain ZERO (Arrow ``mapInPandas``/``applyInPandas`` show as
-  ``MapInPandas``/``FlatMapGroupsInPandas`` and are fine where used).
+  to contain ZERO (Arrow ``mapInArrow``/``applyInPandas`` show as
+  ``MapInArrow``/``FlatMapGroupsInPandas`` and are fine where used).
 
 Queries that EXECUTE a streaming protocol inside their builder (the
 availableNow faces) are skipped: their returned DataFrame reads a
