@@ -1,14 +1,14 @@
 """Flight pipeline job — the spark-submit entry point the orchestrator
 (Airflow, per the driver mandate) schedules.
 
-Mirrors the reference DAG's task bodies
-(``dags/flight_pipeline_dag.py:49-68``): ingest → transform → validate,
-as one Spark job per stage or a single end-to-end run. Emits a JSON
-report to stdout (the reference logs counts; ``dags/tasks/validation.py``).
+Mirrors the reference DAG's task bodies (``dags/flight_pipeline_dag.py:49-68``):
+ingest → transform → validate in one run. The report's counts are
+``Observation`` metrics of jobs that run anyway, plus the reconciliation
+gate's two read-backs (``dags/tasks/validation.py``).
 
 Usage:
     python -m airflow_project_flight_price_analysis_spark.jobs.flight_pipeline \
-        --csv /path/flights.csv --warehouse /path/warehouse [--stage all]
+        --csv /path/flights.csv --warehouse /path/warehouse
 """
 
 from __future__ import annotations
@@ -17,7 +17,8 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators import star
 from ..session import get_spark
@@ -25,58 +26,56 @@ from ..sources.flights_csv import read_flights_csv
 from ..validation import reconcile
 
 
+def _counted(df, name: str):
+    """``df`` with its row count observed by the first action that runs it."""
+    obs = Observation(name)
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def _read_back(df, path: str):
+    """``df`` as written to ``path``, read with its schema: no footer read."""
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
     bronze_path = f"{warehouse}/bronze_flights"
     ledger_path = f"{warehouse}/processed_hashes"
+    dims = {"dim_airlines": 0, "dim_airports": 0, "dim_date": 0}
+    clean = {"rows_in": 0, "rows_dropped_invalid": 0}
+    staged_rows = fact_rows = 0
 
-    # --- ingest (ingestion.py:18-129) ---
-    raw = read_flights_csv(spark, csv_path)
-    source_rows = raw.count()
+    # --- ingest (ingestion.py:18-129); its count job also counts the CSV ---
+    raw, source_obs = _counted(read_flights_csv(spark, csv_path), "source_rows")
     n_new = star.ingest_increment(spark, raw, bronze_path, ledger_path)
+    # an empty first load writes no bronze: a no-op run, all counts 0
+    if star.path_exists(spark, bronze_path):
+        # --- transform (transformation.py:45-138) ---
+        # clean_obs counts the bronze scan feeding the build (deduped_rows)
+        # and its invalid rows (A7); each dim is counted as it is written
+        clean_obs = Observation("clean_metrics")
+        bronze = spark.read.parquet(bronze_path)
+        silver = star.clean_flights(bronze, observation=clean_obs)
+        schema = star.build_star_schema(silver)
+        observed = {name: _counted(getattr(schema, name), name) for name in dims}
+        for name, (dim, _) in observed.items():
+            dim.write.mode("overwrite").parquet(f"{warehouse}/{name}")
+        # FKs resolve against the dims as written: no dim aggregation reruns
+        fact = star.build_fact(silver, *(_read_back(observed[n][0], f"{warehouse}/{n}")
+                                         for n in ("dim_airlines", "dim_airports")))
+        fact.write.mode("overwrite").parquet(f"{warehouse}/fact_flights")
+        dims = {name: obs.get["rows"] for name, (_, obs) in observed.items()}
+        clean = clean_obs.get
 
-    # --- transform (transformation.py:45-138) ---
-    from pyspark.sql import Observation
-
-    bronze = spark.read.parquet(bronze_path)
-    deduped_rows = bronze.count()
-    clean_obs = Observation("clean_metrics")
-    silver = star.clean_flights(bronze, observation=clean_obs)
-    schema = star.build_star_schema(silver)
-
-    for name, df in [
-        ("dim_airlines", schema.dim_airlines),
-        ("dim_airports", schema.dim_airports),
-        ("dim_date", schema.dim_date),
-        ("fact_flights", schema.fact_flights),
-    ]:
-        df.write.mode("overwrite").parquet(f"{warehouse}/{name}")
-
-    # --- validate (validation.py:17-49, post-dedup semantics) ---
-    # staged_rows is a fresh READ-BACK of the bronze table counted
-    # AFTER the star build — passing the earlier deduped_rows variable
-    # here would make staging_ok compare a value to itself (vacuously
-    # true, validating nothing); the re-count catches a bronze
-    # partition lost or doubled between ingest and validation.
-    staged_rows = spark.read.parquet(bronze_path).count()
-    fact_rows = spark.read.parquet(f"{warehouse}/fact_flights").count()
-    report = reconcile(
-        source_rows=source_rows,
-        deduped_rows=deduped_rows,
-        staged_rows=staged_rows,
-        fact_rows=fact_rows,
-    )
-    return {
-        "ingested_new_rows": n_new,
-        # single-pass dropped-row accounting (A7) via df.observe — no
-        # extra count() jobs; available after the first action over silver
-        "rows_dropped_invalid": int(clean_obs.get["rows_dropped_invalid"] or 0),
-        "dims": {
-            "dim_airlines": schema.dim_airlines.count(),
-            "dim_airports": schema.dim_airports.count(),
-            "dim_date": schema.dim_date.count(),
-        },
-        **report.as_dict(),
-    }
+        # --- validate (validation.py:17-49, post-dedup semantics) ---
+        # independent read-backs: staged_rows re-counts bronze AFTER the build
+        # (a partition lost or doubled since its scan fails staging_ok)
+        staged_rows = _read_back(bronze, bronze_path).count()
+        fact_rows = _read_back(fact, f"{warehouse}/fact_flights").count()
+    report = reconcile(source_rows=source_obs.get["rows"], deduped_rows=clean["rows_in"],
+                       staged_rows=staged_rows, fact_rows=fact_rows)
+    return {"ingested_new_rows": n_new,
+            "rows_dropped_invalid": int(clean["rows_dropped_invalid"] or 0),
+            "dims": dims, **report.as_dict()}
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -78,19 +78,21 @@ def dedup_against_ledger(incoming: DataFrame, ledger: DataFrame | None) -> DataF
     return hashed.dropDuplicates(["row_hash"])
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Ask the path's file system whether ``path`` exists. A check up
+    front, not a caught read failure: the session's Observation listener
+    re-analyzes a failed read and logs its stack trace as an ERROR."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jpath.getFileSystem(conf).exists(jpath)
+
+
 def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame | None:
     """Read the hash ledger; only a genuinely absent path means 'first
     run' (→ None). Any other failure — corrupt parquet, permissions —
     must surface: swallowing it would silently re-ingest the entire
     source as if the ledger were empty."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(ledger_path)
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
+    return spark.read.parquet(ledger_path) if path_exists(spark, ledger_path) else None
 
 
 def ingest_increment(
@@ -234,10 +236,16 @@ def build_dim_date(silver: DataFrame) -> DataFrame:
 
 @dataclass
 class StarSchema:
+    silver: DataFrame
     dim_airlines: DataFrame
     dim_airports: DataFrame
     dim_date: DataFrame
-    fact_flights: DataFrame
+
+    @property
+    def fact_flights(self) -> DataFrame:
+        """The fact keyed against these lazy dims, planned only when asked
+        for: a caller that keys it against written dims never pays for it."""
+        return build_fact(self.silver, self.dim_airlines, self.dim_airports)
 
 
 def build_fact(silver: DataFrame,
@@ -283,8 +291,5 @@ def build_fact(silver: DataFrame,
 
 
 def build_star_schema(silver: DataFrame) -> StarSchema:
-    dim_airlines = build_dim_airlines(silver)
-    dim_airports = build_dim_airports(silver)
-    dim_date = build_dim_date(silver)
-    fact = build_fact(silver, dim_airlines, dim_airports)
-    return StarSchema(dim_airlines, dim_airports, dim_date, fact)
+    return StarSchema(silver, build_dim_airlines(silver), build_dim_airports(silver),
+                      build_dim_date(silver))

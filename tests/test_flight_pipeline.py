@@ -158,6 +158,76 @@ def test_dropped_row_accounting_single_pass(spark, csv_file, tmp_path):
     assert report["fact_rows"] <= silver_rows <= report["deduped_rows"]
 
 
+def test_run_pipeline_report_and_rerun(spark, csv_file, tmp_path):
+    """The full report of the 5-row fixture, and of a rerun of the same
+    file into the same warehouse: nothing new is ingested, every other
+    count is unchanged."""
+    from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import (
+        run_pipeline,
+    )
+
+    want = {
+        "ingested_new_rows": 4,
+        "rows_dropped_invalid": 1,
+        "dims": {"dim_airlines": 3, "dim_airports": 4, "dim_date": 2},
+        "source_rows": 5,
+        "deduped_rows": 4,
+        "staged_rows": 4,
+        "fact_rows": 2,
+        "staging_ok": True,
+        "loss_pct": 50.0,
+        "loss_ok": False,
+        "passed": False,
+    }
+    wh = str(tmp_path / "wh")
+    assert run_pipeline(spark, csv_file, wh) == want
+    assert run_pipeline(spark, csv_file, wh) == {**want, "ingested_new_rows": 0}
+
+
+def test_run_pipeline_runs_three_count_actions(spark, csv_file, tmp_path):
+    """Only ingest's no-op guard and the two reconciliation read-backs are
+    count actions; every other number rides a job that runs anyway."""
+    from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import (
+        run_pipeline,
+    )
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    as_java = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    def executions():
+        return {e.executionId(): e.description() for e in as_java(store.executionsList())}
+
+    mark = max(executions(), default=-1)
+    run_pipeline(spark, csv_file, str(tmp_path / "wh"))
+    counts = [d for i, d in executions().items() if i > mark and d.startswith("count")]
+    assert len(counts) == 3, counts
+
+
+def test_empty_first_load_is_a_noop(spark, tmp_path):
+    """A header-only CSV into an empty warehouse ingests nothing and
+    writes no bronze; the run is a legitimate no-op that passes."""
+    from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import (
+        run_pipeline,
+    )
+
+    p = tmp_path / "empty.csv"
+    p.write_text(CSV_HEADER + "\n")
+    report = run_pipeline(spark, str(p), str(tmp_path / "wh"))
+    assert report == {
+        "ingested_new_rows": 0,
+        "rows_dropped_invalid": 0,
+        "dims": {"dim_airlines": 0, "dim_airports": 0, "dim_date": 0},
+        "source_rows": 0,
+        "deduped_rows": 0,
+        "staged_rows": 0,
+        "fact_rows": 0,
+        "staging_ok": True,
+        "loss_pct": 0.0,
+        "loss_ok": True,
+        "passed": True,
+    }
+
+
 def test_jdbc_wrappers_contract(spark):
     """No DB (or JDBC driver) ships in this environment. Pin the API
     contract: missing partition bounds raise ValueError before any remote
