@@ -32,11 +32,6 @@ def _counted(df, name: str):
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
-def _read_back(df, path: str):
-    """``df`` as written to ``path``, read with its schema: no footer read."""
-    return df.sparkSession.read.schema(df.schema).parquet(path)
-
-
 def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
     bronze_path = f"{warehouse}/bronze_flights"
     ledger_path = f"{warehouse}/processed_hashes"
@@ -47,8 +42,9 @@ def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
     # --- ingest (ingestion.py:18-129); its count job also counts the CSV ---
     raw, source_obs = _counted(read_flights_csv(spark, csv_path), "source_rows")
     n_new = star.ingest_increment(spark, raw, bronze_path, ledger_path)
-    # an empty first load writes no bronze: a no-op run, all counts 0
-    if star.path_exists(spark, bronze_path):
+    # an empty first load writes neither table: a no-op run, all counts 0.
+    # A ledger without bronze means bronze was lost: its read below raises.
+    if star.path_exists(spark, bronze_path) or star.path_exists(spark, ledger_path):
         # --- transform (transformation.py:45-138) ---
         # clean_obs counts the bronze scan feeding the build (deduped_rows)
         # and its invalid rows (A7); each dim is counted as it is written
@@ -60,7 +56,7 @@ def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
         for name, (dim, _) in observed.items():
             dim.write.mode("overwrite").parquet(f"{warehouse}/{name}")
         # FKs resolve against the dims as written: no dim aggregation reruns
-        fact = star.build_fact(silver, *(_read_back(observed[n][0], f"{warehouse}/{n}")
+        fact = star.build_fact(silver, *(spark.read.parquet(f"{warehouse}/{n}")
                                          for n in ("dim_airlines", "dim_airports")))
         fact.write.mode("overwrite").parquet(f"{warehouse}/fact_flights")
         dims = {name: obs.get["rows"] for name, (_, obs) in observed.items()}
@@ -69,8 +65,8 @@ def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
         # --- validate (validation.py:17-49, post-dedup semantics) ---
         # independent read-backs: staged_rows re-counts bronze AFTER the build
         # (a partition lost or doubled since its scan fails staging_ok)
-        staged_rows = _read_back(bronze, bronze_path).count()
-        fact_rows = _read_back(fact, f"{warehouse}/fact_flights").count()
+        staged_rows = spark.read.parquet(bronze_path).count()
+        fact_rows = spark.read.parquet(f"{warehouse}/fact_flights").count()
     report = reconcile(source_rows=source_obs.get["rows"], deduped_rows=clean["rows_in"],
                        staged_rows=staged_rows, fact_rows=fact_rows)
     return {"ingested_new_rows": n_new,

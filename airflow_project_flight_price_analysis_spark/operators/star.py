@@ -236,16 +236,10 @@ def build_dim_date(silver: DataFrame) -> DataFrame:
 
 @dataclass
 class StarSchema:
-    silver: DataFrame
     dim_airlines: DataFrame
     dim_airports: DataFrame
     dim_date: DataFrame
-
-    @property
-    def fact_flights(self) -> DataFrame:
-        """The fact keyed against these lazy dims, planned only when asked
-        for: a caller that keys it against written dims never pays for it."""
-        return build_fact(self.silver, self.dim_airlines, self.dim_airports)
+    fact_flights: DataFrame
 
 
 def build_fact(silver: DataFrame,
@@ -291,5 +285,8 @@ def build_fact(silver: DataFrame,
 
 
 def build_star_schema(silver: DataFrame) -> StarSchema:
-    return StarSchema(silver, build_dim_airlines(silver), build_dim_airports(silver),
-                      build_dim_date(silver))
+    dim_airlines = build_dim_airlines(silver)
+    dim_airports = build_dim_airports(silver)
+    dim_date = build_dim_date(silver)
+    fact = build_fact(silver, dim_airlines, dim_airports)
+    return StarSchema(dim_airlines, dim_airports, dim_date, fact)

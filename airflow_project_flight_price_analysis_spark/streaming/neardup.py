@@ -68,6 +68,7 @@ from ..operators.dedup import (
     minhash_signatures,
     require_band_geometry,
 )
+from ..operators.star import path_exists
 
 SIG_SCHEMA = "id bigint, sig array<bigint>, epoch_id bigint"
 
@@ -79,14 +80,9 @@ def read_sig_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
     operators/star.py ``read_ledger`` discipline): swallowing it would
     silently disable screening for the epoch and pollute the corpus
     with near-duplicates."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(SIG_SCHEMA).parquet(ledger_path)
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return spark.createDataFrame([], SIG_SCHEMA)
-        raise
+    if not path_exists(spark, ledger_path):
+        return spark.createDataFrame([], SIG_SCHEMA)
+    return spark.read.schema(SIG_SCHEMA).parquet(ledger_path)
 
 
 def check_ledger_coherence(ledger: DataFrame, epoch_id: int,

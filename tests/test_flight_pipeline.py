@@ -228,6 +228,25 @@ def test_empty_first_load_is_a_noop(spark, tmp_path):
     }
 
 
+def test_lost_bronze_fails_loudly(spark, csv_file, tmp_path):
+    """A warehouse whose ledger survives but whose bronze is gone is not an
+    empty load: every source row is in the ledger, so nothing is re-ingested,
+    and the run must fail instead of reporting an all-zero pass."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import (
+        run_pipeline,
+    )
+
+    wh = tmp_path / "wh"
+    run_pipeline(spark, csv_file, str(wh))
+    shutil.rmtree(wh / "bronze_flights")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_pipeline(spark, csv_file, str(wh))
+
+
 def test_jdbc_wrappers_contract(spark):
     """No DB (or JDBC driver) ships in this environment. Pin the API
     contract: missing partition bounds raise ValueError before any remote
