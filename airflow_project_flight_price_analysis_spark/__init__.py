@@ -15,7 +15,7 @@ Layout:
                    profiling
 - ``plans``      — named analytical queries (the judge-facing surface;
                    mirrored in ``__spark_entry__.py``)
-- ``streaming``  — Structured Streaming: incremental ingest, windowed aggs
+- ``streaming``  — Structured Streaming: windowed aggs, sketch folds, near-dup ingest
 - ``validation`` — row-count reconciliation quality gate
 """
 

@@ -24,12 +24,12 @@ NULL_SENTINEL = "␀"  # ␀ — distinguishes NULL from empty string in hashes
 #: re-ingests the whole history as "new" exactly once. Deployments
 #: upgrading over existing state must either rebuild the ledger once or
 #: stamp ledger rows with this constant (a ``hash_version`` column) and
-#: re-hash the old cohort; ``streaming/ingest.py`` and
-#: ``operators/star.py::dedup_against_ledger`` consume these hashes.
+#: re-hash the old cohort; ``operators/star.py::dedup_against_ledger``
+#: consumes these hashes.
 ROW_HASH_VERSION = 3
 
 
-def row_hash_expr(cols: list[Column | str], algo: str = "md5") -> Column:
+def row_hash_expr(cols: list[Column | str]) -> Column:
     """Deterministic content hash of a row (reference: MD5 over the
     stringified value tuple, row-at-a-time — ``dags/tasks/ingestion.py:69``).
 
@@ -45,9 +45,6 @@ def row_hash_expr(cols: list[Column | str], algo: str = "md5") -> Column:
       merged the rows. The ``n``/``v`` tag lives outside the value
       alphabet — no value can imitate NULL.
 
-    ``sha2-256`` recommended at 100 TB scale (X1) where md5-collision
-    odds over ~10^12 rows start to matter for exact-dedup counts.
-
     FORMAT BREAK: see ``ROW_HASH_VERSION`` for the
     upgrade-over-persisted-ledger implications.
     """
@@ -61,14 +58,7 @@ def row_hash_expr(cols: list[Column | str], algo: str = "md5") -> Column:
         )
         for p in strs
     ]
-    joined = F.concat_ws("|", *parts)
-    if algo == "md5":
-        return F.md5(joined)
-    if algo == "sha256":
-        return F.sha2(joined, 256)
-    if algo == "xxhash64":
-        return F.xxhash64(joined).cast("string")
-    raise ValueError(f"unknown hash algo {algo!r}")
+    return F.md5(F.concat_ws("|", *parts))
 
 
 def surrogate_key_expr(*natural_key_cols: str) -> Column:
@@ -89,40 +79,12 @@ def clean_text_expr(col: Column | str, title: bool = True) -> Column:
 
     Divergence (documented, SURVEY P5): pandas ``.str.title()`` capitalizes
     after any non-letter (``Cox'S Bazar``); Spark ``initcap`` splits on
-    whitespace only (``Cox's Bazar``). The engine standardizes on initcap;
-    a user porting the reference byte-for-byte opts into
-    :func:`title_parity_expr`.
+    whitespace only (``Cox's Bazar``). The engine standardizes on
+    initcap.
     """
     c = F.col(col) if isinstance(col, str) else col
     c = F.trim(c)
     return F.initcap(c) if title else F.lower(c)
-
-
-def title_parity_expr(col: Column | str) -> Column:
-    """Exact pandas ``.str.title()`` parity, JVM-side (r2 VERDICT
-    missing #3 — described there as needing a pandas_udf; it doesn't).
-
-    Python ``str.title()`` uppercases the first cased character of every
-    letter run and lowercases the rest, treating ANY non-letter as a
-    boundary (``"cox's bazar".title() == "Cox'S Bazar"``). Re-expressed
-    as pure Catalyst: split on letter/non-letter boundaries with
-    zero-width lookarounds (runs survive intact), then capitalize each
-    run — no Python in the hot path, stays inside whole-stage codegen.
-    ``\\p{L}`` matches Unicode letters, mirroring Python's str.isalpha()
-    boundary rule for the BMP text this pipeline carries.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    runs = F.split(c, r"(?=\p{L})(?<!\p{L})|(?<=\p{L})(?!\p{L})")
-    return F.array_join(
-        F.transform(
-            runs,
-            lambda p: F.concat(
-                F.upper(p.substr(F.lit(1), F.lit(1))),
-                F.lower(p.substr(F.lit(2), F.length(p))),
-            ),
-        ),
-        "",
-    )
 
 
 def parse_stopovers_expr(col: Column | str) -> Column:

@@ -32,6 +32,15 @@ def _counted(df, name: str):
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
+def _clean_metrics(bronze):
+    """``rows_in``/``rows_dropped_invalid`` of the clean pass over ``bronze``,
+    observed inside a global aggregate: AQE never replaces that with an empty
+    relation, so the shuffle stage carrying the metrics stays in its plan."""
+    obs = Observation("clean_metrics")
+    star.clean_flights(bronze, observation=obs).agg(F.count(F.lit(1))).collect()
+    return obs.get
+
+
 def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
     bronze_path = f"{warehouse}/bronze_flights"
     ledger_path = f"{warehouse}/processed_hashes"
@@ -60,7 +69,11 @@ def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
                                          for n in ("dim_airlines", "dim_airports")))
         fact.write.mode("overwrite").parquet(f"{warehouse}/fact_flights")
         dims = {name: obs.get["rows"] for name, (_, obs) in observed.items()}
-        clean = clean_obs.get
+        # the first dim write completes clean_obs. If its shuffle stage came
+        # out empty (no valid row, or no airline), AQE replaced the write's
+        # plan with an empty relation and the metrics observed inside that
+        # stage were dropped: the observation holds an empty row, not zeros
+        clean = clean_obs.get if clean_obs._jo.getRow().length() else _clean_metrics(bronze)
 
         # --- validate (validation.py:17-49, post-dedup semantics) ---
         # independent read-backs: staged_rows re-counts bronze AFTER the build

@@ -1,112 +1,13 @@
-"""General as-of join — the union-then-scan plan, extracted from q32
-(plans/temporal.py) into a reusable operator.
-
-For every left row, attach the value columns of the most recent right
-row with the same key at-or-before (backward, inclusive) the left row's
-timestamp. No join, no range explosion: both sides union into one
-stream, ONE shuffle on the key, and one ordered window carries the
-latest right values forward — at scale the window sort piggybacks the
-shuffle's sort order. Property-tested against a brute-force per-row
-reference on arbitrary generated event sets.
+"""Time-range join without a range explosion — the q35 banding rewrite
+(plans/temporal.py) as a reusable operator, property-tested against a
+brute-force inequality join on arbitrary generated event sets. (The
+as-of join lives in q32 as a fused single-scan window.)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-    *,
-    right_tiebreak: str | None = None,
-    tolerance_seconds: float | None = None,
-) -> DataFrame:
-    """Backward inclusive as-of: left columns + ``asof_<v>`` for each
-    ``v`` in ``value_cols`` (NULL when no right row precedes).
-
-    Tie rule: a right row sharing the left row's exact timestamp IS
-    seen (right sorts before left on ties — the q32 inclusive-bound
-    rule). Among several right rows at one timestamp, the winner is the
-    LAST under ``right_tiebreak`` (pass a unique column for determinism;
-    without one, equal-timestamp right rows with differing values make
-    the result sort-tie dependent).
-
-    ``tolerance_seconds`` additionally voids matches older than the
-    given horizon (like pandas ``merge_asof(tolerance=...)``).
-
-    The matched right row is carried as ONE struct (one
-    ``last(ignorenulls)`` over the whole row, not one per value column),
-    so every ``asof_*`` output — including genuine NULLs inside the
-    matched row — comes from the same right row, and the tolerance gate
-    keys on that row's own timestamp.
-    """
-    if "__rts" in value_cols:
-        raise ValueError("value column name '__rts' is reserved")
-    # reserved-name guard (the bloom.py rule, r7 review): a left side
-    # already carrying one of the internals would be silently
-    # overwritten-then-dropped (or die in a confusing union error)
-    clash = [c for c in left.columns
-             if c in ("__ts", "__side", "__r", "__last", "__tb")]
-    if clash:
-        raise ValueError(
-            f"left columns {clash} collide with asof_join internals — "
-            "rename them first"
-        )
-    lt = left.withColumn("__ts", F.col(left_ts)).withColumn(
-        "__side", F.lit(1)
-    )
-    rt = right.select(
-        *key_cols,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        F.struct(
-            F.col(right_ts).alias("__rts"),
-            *[F.col(v) for v in value_cols],
-        ).alias("__r"),
-        *(
-            [F.col(right_tiebreak).alias("__tb")]
-            if right_tiebreak
-            else []
-        ),
-    )
-    unioned = lt.unionByName(rt, allowMissingColumns=True)
-    order = ["__ts", "__side"] + (["__tb"] if right_tiebreak else [])
-    w = (
-        W.partitionBy(*key_cols)
-        .orderBy(*order)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    # left rows union in with __r = NULL (allowMissingColumns), so
-    # last(ignorenulls) skips them but keeps a matched struct whose
-    # FIELDS are null — NULLs in the matched row survive intact.
-    carried = unioned.withColumn(
-        "__last", F.last("__r", ignorenulls=True).over(w)
-    )
-    out = carried.filter(F.col("__side") == 1)
-    match_ok = F.col("__last").isNotNull()
-    if tolerance_seconds is not None:
-        match_ok = match_ok & (
-            (
-                F.col("__ts").cast("double")
-                - F.col("__last").getField("__rts").cast("double")
-            )
-            <= tolerance_seconds
-        )
-    for v in value_cols:
-        out = out.withColumn(
-            f"asof_{v}", F.when(match_ok, F.col("__last").getField(v))
-        )
-    drop = ["__ts", "__side", "__r", "__last"]
-    if right_tiebreak:
-        drop.append("__tb")
-    return out.drop(*drop)
 
 
 def banded_range_join(

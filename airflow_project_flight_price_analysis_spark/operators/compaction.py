@@ -1,7 +1,7 @@
 """Small-file compaction — the table-maintenance operator every long-lived
 100 TB lake needs.
 
-Micro-batch ingestion (streaming/ingest.py appends per trigger) and
+Micro-batch ingestion (streaming/neardup.py appends per trigger) and
 fine-grained upserts produce many small files; small files poison scan
 parallelism (one task per file), NameNode/listing pressure, and parquet
 footer overhead. Compaction rewrites a table directory into

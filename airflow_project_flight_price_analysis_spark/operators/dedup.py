@@ -2,13 +2,11 @@
 
 Generalizes the reference's MD5 row-hash dedup
 (``dags/tasks/ingestion.py:69-90``) to the operators a training-data
-pipeline needs: exact content dedup, MinHash+LSH near-dedup, SimHash,
-and n-gram Jaccard similarity dedup.
+pipeline needs: MinHash+LSH near-dedup, SimHash, and n-gram Jaccard
+similarity dedup. Exact content dedup is one aggregate on the
+normalized-content fingerprint inside ``jobs/corpus_pipeline.py``.
 
 Scale posture:
-- Exact dedup = hash + per-key reduction (``row_number``/``min``) — one
-  shuffle on the hash, map-side partial where possible. sha2-256 keys (md5
-  collision odds over 10^12 rows are no longer negligible).
 - MinHash/LSH: banding turns O(n²) pair generation into an equi-join on
   (band, bucket-signature) — the shuffle key is the band hash, so skew is
   bounded by band-bucket size, not corpus size.
@@ -27,33 +25,6 @@ from pyspark.sql.window import Window as W
 
 from ..functions.text import shingles_expr, tokens_expr
 from ..session import scale_out
-
-
-# --------------------------------------------------------------------------
-# X1: exact dedup
-# --------------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, content_cols: list[str],
-                keep_order_col: str | None = None) -> DataFrame:
-    """Keep one row per content hash. With ``keep_order_col``, keeps the
-    row with the smallest value (deterministic — ``dropDuplicates`` keeps
-    an arbitrary one); otherwise uses ``dropDuplicates`` (cheaper: partial
-    aggregation, no window)."""
-    # row_hash_expr's injective length-prefix encoding — plain
-    # concat_ws is separator-injectable and would delete distinct rows
-    from ..functions.cleaning import row_hash_expr
-
-    hashed = df.withColumn(
-        "__content_hash", row_hash_expr(list(content_cols), algo="sha256")
-    )
-    if keep_order_col is None:
-        return hashed.dropDuplicates(["__content_hash"]).drop("__content_hash")
-    w = W.partitionBy("__content_hash").orderBy(F.col(keep_order_col).asc())
-    return (
-        hashed.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__content_hash", "__rn")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -355,43 +326,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
         "a", "b",
         (F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))).alias("jaccard"),
     ).filter(F.col("jaccard") >= threshold)
-
-
-# --------------------------------------------------------------------------
-# X2a': pyspark.ml MinHashLSH variant (library-backed reference point)
-# --------------------------------------------------------------------------
-
-def minhash_ml_neardup_pairs(df: DataFrame, text_col: str, id_col: str,
-                             jaccard_distance: float = 0.6,
-                             num_hash_tables: int = 8,
-                             num_features: int = 1 << 18) -> DataFrame:
-    """MinHash LSH via pyspark.ml (HashingTF token-set features →
-    MinHashLSH.approxSimilarityJoin). The hand-rolled expression version
-    (minhash_neardup_pairs) is the engine default — this wrapper exists
-    as a library-backed cross-check and for users already on pyspark.ml
-    pipelines. Returns (a, b, jaccard_dist ≤ jaccard_distance)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH, RegexTokenizer
-
-    prepared = scale_out(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")), "id")
-    tok = RegexTokenizer(inputCol="text", outputCol="toks", pattern=r"\s+")
-    tf = HashingTF(inputCol="toks", outputCol="features",
-                   numFeatures=num_features, binary=True)
-    feats = tf.transform(tok.transform(prepared)).filter(
-        F.expr("size(toks) > 0")
-    )
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes",
-                     numHashTables=num_hash_tables, seed=42)
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, jaccard_distance,
-                                       distCol="jaccard_dist")
-    return (
-        pairs.filter(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("a"),
-            F.col("datasetB.id").alias("b"),
-            F.round("jaccard_dist", 6).alias("jaccard_dist"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------

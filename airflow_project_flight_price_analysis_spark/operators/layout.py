@@ -32,11 +32,11 @@ Design notes:
   range exchange, sampled bounds, same cost as any clustered write) →
   ``sortWithinPartitions`` on z → write. The z column itself is
   persisted so the footer carries its min/max too.
-- The payoff is measurable without a cluster: ``file_minmax`` reads
-  each output file's per-dimension min/max (the exact stats a scan
-  planner prunes on) and ``tests/test_layout.py`` asserts a 2-D box
-  query intersects strictly fewer z-ordered files than time-sorted
-  files of the same count.
+- The payoff is measurable without a cluster: ``tests/test_layout.py``
+  reads each output file's per-dimension min/max (the exact stats a
+  scan planner prunes on) and asserts a 2-D box query intersects
+  strictly fewer z-ordered files than time-sorted files of the same
+  count.
 """
 
 from __future__ import annotations
@@ -111,20 +111,3 @@ def zorder_write(
         .parquet(path)
     )
 
-
-def file_minmax(spark, path: str, cols: list[str]) -> list[dict]:
-    """Per-file min/max of ``cols`` for every parquet part-file under
-    ``path`` — the footer statistics a scan planner prunes with,
-    surfaced so tests (and capacity planning) can count how many files
-    a predicate box would actually touch."""
-    import glob
-    import os
-
-    out = []
-    for f in sorted(glob.glob(os.path.join(path, "part-*.parquet"))):
-        aggs = []
-        for c in cols:
-            aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-        row = spark.read.parquet(f).agg(*aggs).collect()[0]
-        out.append({"file": os.path.basename(f), **row.asDict()})
-    return out

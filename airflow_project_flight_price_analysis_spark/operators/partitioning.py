@@ -1,27 +1,13 @@
-"""Physical-layout levers for 100 TB scale: bucketed co-located joins and
-salt-based skew mitigation.
+"""Salt-based skew mitigation for aggregations at 100 TB scale.
 
 The reference runs single-process pandas and has no notion of data layout
-(SURVEY.md §4); these operators are the Spark-native mechanisms that make
-its workloads survive a 1000-executor cluster:
-
-- **Bucketing** (`bucketize`, `bucketed_join`): persist both sides of a
-  recurring large-large join (lineitem ⋈ orders — the engine's one
-  genuine shuffle, plans/kpi.py) pre-hash-partitioned on the join key.
-  Catalyst then plans a SortMergeJoin with **zero Exchange** on either
-  side — the shuffle is paid once at write time and amortized over every
-  subsequent query. Verified by test_partitioning (asserts no
-  shuffle-Exchange in the joined plan).
-
-- **Salting** (`salted_agg`, `salted_join`): a skewed key (one airline
-  with 40% of bookings; one hot route) makes one reducer the straggler.
-  `salted_agg` does the classic two-phase aggregate: partial per
-  (key, salt) → final per key; legal for any algebraic aggregate
-  (sum/count/min/max — avg decomposes into sum+count). `salted_join`
-  spreads a skewed fact key across `n_salts` reducers and replicates the
-  (small) build side per salt — the manual form of what AQE skew-join
-  does adaptively (session.py enables AQE; this exists for plans AQE
-  can't fix, e.g. a skewed *aggregation* key or a non-AQE environment).
+(SURVEY.md §4). A skewed key (one airline with 40% of bookings; one hot
+route) makes one reducer the straggler. `salted_agg` does the classic
+two-phase aggregate: partial per (key, salt) → final per key; legal for
+any algebraic aggregate (sum/count/min/max — avg decomposes into
+sum+count). AQE's skew-join splitting (session.py enables AQE) cannot
+reach a skewed *aggregation* key; the salted join twin is
+``operators/skew.py::salted_equi_join``.
 
 Salts are deterministic (hash of a unique column, not ``rand()``), so
 re-runs and retried tasks produce identical partitions — nondeterministic
@@ -31,31 +17,8 @@ model.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def bucketize(df: DataFrame, table_name: str, key: str, num_buckets: int = 8,
-              sort: bool = True) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) managed table.
-
-    At 100 TB: bucket count is chosen so each bucket file lands in the
-    128-256 MB range per partition; the sort makes the later SMJ skip its
-    sort entirely (both sides pre-sorted within buckets).
-    """
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table_name)
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  key_left: str, key_right: str) -> DataFrame:
-    """Join two same-bucket-count tables on their bucket keys — planned
-    as an Exchange-free SortMergeJoin."""
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.join(right, left[key_left] == right[key_right])
 
 
 def _salt(col: Column, n_salts: int) -> Column:
@@ -90,15 +53,3 @@ def salted_agg(df: DataFrame, group_key: str, salt_source: str,
         .agg(*final_exprs)
     )
 
-
-def salted_join(fact: DataFrame, dim: DataFrame, key: str,
-                salt_source: str, n_salts: int = 16) -> DataFrame:
-    """Skew-proof equi-join: the fact side gets a deterministic salt, the
-    dim side is replicated once per salt value (explode of a literal
-    range — dim must be the small side), and the join key becomes
-    (key, salt) so a hot key spreads over ``n_salts`` reducers."""
-    salted_fact = fact.withColumn("__salt", _salt(F.col(salt_source), n_salts))
-    replicated_dim = dim.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return salted_fact.join(replicated_dim, [key, "__salt"]).drop("__salt")

@@ -267,37 +267,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     )
 
 
-def ivf_kmeans_centroids(corpus: DataFrame, n_centroids: int = 8,
-                         seed: int = 42, id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
-    """Trained coarse quantizer: k-means|| cluster centers as the IVF
-    centroid table, in the same (id, vec) shape ``ivf_assign`` expects —
-    the drop-in replacement for the deterministic first-N seeding that
-    ``ivf_topk`` defaults to. On corpora with real cluster structure,
-    density-aware centroids keep each query's neighbors inside fewer
-    buckets; on near-isotropic data (like the synthetic testdata) IVF
-    recall at small n_probe is geometry-limited whichever way centroids
-    are chosen — which is why the product path's recall is certified
-    in-engine by x15 rather than assumed.
-
-    Uses pyspark.ml KMeans (seeded — deterministic given data and seed);
-    the only Vector<->array conversions happen at this training boundary,
-    once per index build, never in the search path."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = corpus.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=n_centroids, seed=seed, featuresCol="features").fit(feats)
-    centers = model.clusterCenters()
-    sdf = corpus.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        f"{id_col} long, {vec_col} array<double>",
-    )
-    return sdf
-
-
 # --------------------------------------------------------------------------
 # Int8 quantization tier: 4x-smaller vectors, exact-integer scoring
 # --------------------------------------------------------------------------

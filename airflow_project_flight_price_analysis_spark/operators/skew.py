@@ -97,40 +97,3 @@ def salted_equi_join(
     )
     return joined.drop("__salt")
 
-
-def sampled_heavy_hitters(
-    df: DataFrame,
-    key_col: str,
-    *,
-    min_share: float = 0.01,
-    sample_share: float = 0.05,
-) -> DataFrame:
-    """Keys carrying ≥ ``min_share`` of rows, estimated from a
-    deterministic hash sample — the pre-pass that feeds
-    ``salted_equi_join(hot_keys=...)`` at 100 TB, where an exact
-    key-frequency groupBy would itself hit the skew it is diagnosing
-    (the hot key's count rows all shuffle to one reducer; the sample cuts
-    that by 1/``sample_share`` while a genuinely hot key remains hot in
-    any uniform sample).
-
-    Sampling is by hash of a per-row uniformizer (all columns), NOT of
-    the key — sampling by key would keep or drop each key wholesale.
-    Deterministic: same data → same sample → same hot set (no
-    ``rand(seed)`` partition-layout dependence). Returns a one-column
-    DataFrame of hot ``key_col`` values (broadcast-small by
-    construction: at most ``1/min_share`` keys qualify).
-    """
-    from .sampling import content_hash64
-
-    # content_hash64 spans 60 bits (15 hex chars), so the threshold
-    # scales against 2^60 — not 2^63 — for the share to be exact
-    bound = int(sample_share * (1 << 60))
-    h = content_hash64(F.concat_ws("\x1f", *df.columns))
-    sampled = df.filter(h <= F.lit(bound))
-    counts = sampled.groupBy(key_col).agg(F.count(F.lit(1)).alias("__n"))
-    total = counts.agg(F.sum("__n").alias("__tot"))
-    return (
-        counts.crossJoin(F.broadcast(total))
-        .filter(F.col("__n") >= F.col("__tot") * min_share)
-        .select(key_col)
-    )

@@ -109,10 +109,9 @@ def ingest_increment(
     Delivery contract: **at-least-once into bronze**. A crash in the
     window between the bronze append and the ledger append means the
     next run re-appends those rows (their hashes never made the ledger).
-    Readers that need exactly-once use the streaming path
-    (``streaming.ingest``), whose epoch-partitioned dynamic-overwrite
-    sink is replay-idempotent; batch replays leave content-identical
-    rows, removable with a full-row distinct.
+    Such replays leave content-identical rows, removable with a
+    full-row distinct; exactly-once needs an epoch-keyed overwrite sink,
+    as ``streaming/neardup.py`` writes its ledger.
 
     Returns the number of newly ingested rows.
     """

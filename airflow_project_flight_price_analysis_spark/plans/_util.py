@@ -5,6 +5,8 @@ file's underscore-private name)."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+
 
 def parquet_num_rows(path: str) -> int | None:
     """Row count from parquet footers only (driver-side, a few KiB of
@@ -28,3 +30,28 @@ def parquet_num_rows(path: str) -> int | None:
         return pq.ParquetFile(path).metadata.num_rows
     except Exception:  # noqa: BLE001 — any unreadable footer ⇒ size unknown
         return None
+
+
+def drain_to_memory(stream: DataFrame, prefix: str,
+                    output_mode: str) -> DataFrame:
+    """Run ``stream`` to completion into the memory sink with an
+    ``availableNow`` trigger and return the sink's rows as a batch
+    DataFrame, so a streaming face sits behind the same oracle gate as a
+    batch one. The sink's temporary view is dropped before returning:
+    the returned DataFrame keeps the rows it was resolved against, and
+    nothing of the query outlives that DataFrame in the session."""
+    import uuid
+
+    spark = stream.sparkSession
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    rows = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return rows

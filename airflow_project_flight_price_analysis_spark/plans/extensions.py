@@ -44,6 +44,7 @@ from ..operators.multimodal import (
 from ..operators.similarity import cosine_topk, lsh_topk
 from ..sources import load_table
 from ..sources.testdata import events_stream
+from ._util import drain_to_memory
 
 
 # --- X1: exact dedup --------------------------------------------------------
@@ -855,23 +856,13 @@ def x17_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle gate (same plan a 24/7 micro-batch deployment would run;
     availableNow processes the backlog and stops).
     """
-    import uuid
-
     from ..streaming.windows import tumbling_counts
 
     agg = tumbling_counts(
         events_stream(spark, sf_dir), width="1 hour", watermark="2 hours"
     )
-    name = "x17_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("window_start", "event_type")
+    return drain_to_memory(agg, "x17", "complete").orderBy(
+        "window_start", "event_type")
 
 
 def x24_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -883,28 +874,17 @@ def x24_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-events answer. The watermark TTLs dedup state — the
     bounded-memory replacement for the batch hash ledger (state size is
     the duplicate horizon, not corpus history)."""
-    import uuid
-
     from ..streaming.windows import dedup_within_watermark
 
     doubled = events_stream(spark, sf_dir).unionAll(
         events_stream(spark, sf_dir)
     )
     dd = dedup_within_watermark(doubled, ["event_id"], watermark="2 hours")
-    name = "x24_" + uuid.uuid4().hex[:8]
-    q = (
-        dd.select(
-            "event_id", F.unix_micros("ts").alias("ts_us"),
-            "user_id", "event_type", "value",
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    out = dd.select(
+        "event_id", F.unix_micros("ts").alias("ts_us"),
+        "user_id", "event_type", "value",
     )
-    q.awaitTermination()
-    return spark.table(name).orderBy("event_id")
+    return drain_to_memory(out, "x24", "append").orderBy("event_id")
 
 
 def x25_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -913,29 +893,19 @@ def x25_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionization. Session = events per user with < 30 min between
     them; session_end = last event + gap (Spark's definition, mirrored
     in the oracle). The streaming twin of the batch q19."""
-    import uuid
-
     from ..streaming.windows import session_counts
 
     agg = session_counts(
         events_stream(spark, sf_dir), gap="30 minutes", watermark="4 hours"
     )
-    name = "x25_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.select(
-            "user_id",
-            F.unix_micros("session_start").alias("start_us"),
-            F.unix_micros("session_end").alias("end_us"),
-            "n_events",
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    out = agg.select(
+        "user_id",
+        F.unix_micros("session_start").alias("start_us"),
+        F.unix_micros("session_end").alias("end_us"),
+        "n_events",
     )
-    q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "start_us")
+    return drain_to_memory(out, "x25", "complete").orderBy(
+        "user_id", "start_us")
 
 
 QUERIES.update({
@@ -1607,31 +1577,21 @@ def x29_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode plan a 24/7 deployment runs; availableNow processes the
     backlog and stops). Value-checked against DuckDB's interval self
     join."""
-    import uuid
-
     from ..streaming.windows import stream_interval_join
 
     errors = events_stream(spark, sf_dir).filter(F.col("event_type") == "error")
     clicks = events_stream(spark, sf_dir).filter(F.col("event_type") == "click")
     joined = stream_interval_join(errors, clicks, key="user_id",
                                   lookback="30 minutes")
-    name = "x29_" + uuid.uuid4().hex[:8]
-    q = (
-        joined.select(
-            F.col("l_event_id").alias("error_id"),
-            F.col("r_event_id").alias("click_id"),
-            F.col("l_user_id").alias("user_id"),
-            F.unix_micros("l_ts").alias("error_ts_us"),
-            F.unix_micros("r_ts").alias("click_ts_us"),
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    out = joined.select(
+        F.col("l_event_id").alias("error_id"),
+        F.col("r_event_id").alias("click_id"),
+        F.col("l_user_id").alias("user_id"),
+        F.unix_micros("l_ts").alias("error_ts_us"),
+        F.unix_micros("r_ts").alias("click_ts_us"),
     )
-    q.awaitTermination()
-    return spark.table(name).orderBy("error_id", "click_id")
+    return drain_to_memory(out, "x29", "append").orderBy(
+        "error_id", "click_id")
 
 
 QUERIES.update({"x29_stream_interval_join": x29_stream_interval_join})
@@ -2266,8 +2226,6 @@ def x55_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern for clickstream × account data). Executed to completion with
     availableNow behind the DuckDB oracle, like x17/x24/x25.
     """
-    import uuid
-
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -2279,16 +2237,8 @@ def x55_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
-    name = "x55_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("c_mktsegment", "event_type")
+    return drain_to_memory(agg, "x55", "complete").orderBy(
+        "c_mktsegment", "event_type")
 
 
 QUERIES.update({"x55_stream_static_enrich": x55_stream_static_enrich})
@@ -3162,22 +3112,11 @@ def x111_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate expresses (unbounded lifetime accumulation with optional
     per-group TTL).
     """
-    import uuid
-
     from ..streaming.stateful import user_running_totals
 
     totals = user_running_totals(events_stream(spark, sf_dir))
-    name = "x111_" + uuid.uuid4().hex[:8]
-    q = (
-        totals.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        drain_to_memory(totals, "x111", "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),

@@ -304,14 +304,15 @@ def q17_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- §2.6/§2.7: window functions -------------------------------------------
 
 def q18_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k per group via ``row_number()`` window — partitioned by customer
-    (high-cardinality ⇒ scales out; never a global window). Deterministic
-    tie-break on orderkey."""
+    """Top-k per group via ``topk_per_group`` (the ``row_number() ≤ k``
+    window) — partitioned by customer (high-cardinality ⇒ scales out;
+    never a global window). Deterministic tie-break on orderkey."""
+    from ..operators.ranking import topk_per_group
+
     orders = load_table(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
-        orders.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        topk_per_group(orders, ["o_custkey"],
+                       [F.desc("o_totalprice"), F.asc("o_orderkey")], 3)
         .select(
             F.col("o_custkey").alias("customer_id"),
             F.col("o_orderkey").alias("order_id"),

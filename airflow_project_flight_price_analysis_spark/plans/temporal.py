@@ -43,13 +43,9 @@ def q32_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASOF's inclusive ``e.ts >= c.ts`` bound (ts-only ordering made
     same-timestamp inclusion a sort-tie coin flip).
 
-    The general two-table form of this algorithm (arbitrary key/value
-    columns, optional tolerance) is ``operators/asof.py::asof_join``,
-    property-tested against a brute-force reference; this registered
-    query keeps the fused SINGLE-SCAN special case — both sides live in
-    one source table, so going through the two-DataFrame operator would
-    scan events twice and carry an extra timestamp column (measured
-    0.9s vs 0.3s at sf0.1).
+    Both sides live in one source table, so the as-of is one scan and
+    one window; a two-DataFrame as-of operator scanned events twice and
+    carried an extra timestamp column (measured 0.9s vs 0.3s at sf0.1).
     """
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("error", "click")
@@ -89,8 +85,7 @@ def q33_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q34_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding event-time windows (1 h width, 30 min slide) per
     event_type — native ``window()``: each event fans out to exactly
-    width/slide = 2 windows map-side; the shuffle key is (window, type).
-    Batch twin of streaming/windows.sliding_avg."""
+    width/slide = 2 windows map-side; the shuffle key is (window, type)."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(

@@ -1,13 +1,11 @@
-"""Checkpoint/output coherence — shared by every epoch-partitioned
-foreachBatch sink (streaming/ingest.py exact-dedup, streaming/neardup.py
-near-dup).
+"""Checkpoint/output coherence — the guard of the epoch-partitioned
+foreachBatch sink (streaming/neardup.py near-dup).
 
 Epoch ids are CHECKPOINT-scoped: a wiped/relocated checkpoint restarts
 them at 0 while the epoch-partitioned outputs persist, and dynamic
 partition overwrite would then clobber historical partitions (plus, for
 screens filtered to ``epoch_id < current``, silently disable cross-epoch
-dedup). One guard, one implementation, both sinks (r7 review item: the
-two inline copies had already started diverging).
+dedup).
 """
 
 from __future__ import annotations
@@ -18,10 +16,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def check_epoch_coherence(ledger: DataFrame, epoch_id: int, *, what: str,
-                          num_hashes: int | None = None) -> None:
-    """Raise on checkpoint/ledger incoherence; optionally also pin the
-    MinHash sketch geometry (``num_hashes`` — the neardup ledger's
+def check_epoch_coherence(ledger: DataFrame, epoch_id: int,
+                          num_hashes: int) -> None:
+    """Raise on checkpoint/ledger incoherence, and pin the MinHash
+    sketch geometry (``num_hashes`` — the neardup ledger's
     ``sig array<bigint>`` column must have exactly that length, else
     zip_with pads with NULLs and every cross-epoch match silently
     drops).
@@ -30,20 +28,16 @@ def check_epoch_coherence(ledger: DataFrame, epoch_id: int, *, what: str,
     the CURRENT max epoch is legitimate at-least-once delivery, so the
     check is strictly ``>``.
     """
-    aggs = [
+    row = ledger.agg(
         F.max("epoch_id").alias("max_epoch"),
         F.count(F.lit(1)).alias("n"),
-    ]
-    if num_hashes is not None:
-        aggs.append(
-            F.sum((F.size("sig") != num_hashes).cast("long")).alias("bad")
-        )
-    row = ledger.agg(*aggs).collect()[0]
+        F.sum((F.size("sig") != num_hashes).cast("long")).alias("bad"),
+    ).collect()[0]
     if row["n"] == 0:
         return
     if row["max_epoch"] is not None and row["max_epoch"] > epoch_id:
         raise RuntimeError(
-            f"{what} ledger holds epoch_id={row['max_epoch']} > current "
+            f"signature ledger holds epoch_id={row['max_epoch']} > current "
             f"epoch {epoch_id}: the streaming checkpoint was reset or "
             "relocated independently of the output/ledger paths. "
             "Proceeding would overwrite historical epoch partitions "
@@ -51,7 +45,7 @@ def check_epoch_coherence(ledger: DataFrame, epoch_id: int, *, what: str,
             "to epoch_id < current) — wipe checkpoint AND all output/"
             "ledger paths together, or restore the original checkpoint."
         )
-    if num_hashes is not None and row["bad"]:
+    if row["bad"]:
         raise RuntimeError(
             f"{row['bad']} ledger signatures have length != {num_hashes}: "
             "the ledger was written with a different num_hashes. "

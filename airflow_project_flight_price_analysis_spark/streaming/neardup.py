@@ -8,11 +8,11 @@ anything the corpus already holds (or of each other), and how do the
 corpus sketches grow as clean documents land" — without ever
 re-sketching the 100 TB corpus per batch. Reference analog:
 ``dags/tasks/ingestion.py:88-127`` keeps an md5 ledger for EXACT
-replay dedup (our streaming/ingest.py twin); this module is the
+replay dedup (our ``operators/star.py`` hash ledger); this module is the
 extension-surface near-dup version of the same ledger discipline
 (SURVEY.md §2.9), with the signature table playing the ledger.
 
-Mechanics per micro-batch (foreachBatch, like ingest.py — the join
+Mechanics per micro-batch (foreachBatch — the join
 topology here: explode-to-bands + two joins + groupBy is beyond what
 an append-mode streaming plan may contain, and the ledger must be
 re-READ each epoch, which a stream-static join would freeze at query
@@ -32,7 +32,7 @@ start):
   ledger — the corpus is never re-sketched.
 
 Exactly-once: all three writes key on ``epoch_id`` with dynamic
-partition overwrite (the ingest.py replay discipline), and the screen
+partition overwrite (replay-idempotent), and the screen
 reads the ledger restricted to ``epoch_id < current`` — so an epoch
 replay sees exactly the pre-epoch corpus (not its own first-attempt
 signatures, which would flag every replayed doc as a dup of itself),
@@ -110,14 +110,10 @@ def check_ledger_coherence(ledger: DataFrame, epoch_id: int,
     the marginal cost is one extra columnar scan of (epoch_id,
     size(sig)) — and max(epoch_id) prunes to partition metadata.
 
-    Thin wrapper over the SHARED guard (streaming/coherence.py — one
-    implementation for every epoch-partitioned sink), adding the
-    signature-geometry pin."""
+    The guard itself lives in streaming/coherence.py."""
     from .coherence import check_epoch_coherence
 
-    check_epoch_coherence(
-        ledger, epoch_id, what="signature", num_hashes=num_hashes
-    )
+    check_epoch_coherence(ledger, epoch_id, num_hashes)
 
 
 def _est_jaccard(num_hashes: int):
@@ -205,8 +201,9 @@ def make_neardup_sink(clean_path: str, flagged_path: str, ledger_path: str,
                       *, text_col: str = "text", id_col: str = "doc_id",
                       threshold: float = 0.7, num_hashes: int = 32,
                       num_bands: int = 8, shingle_n: int = 3):
-    """foreachBatch sink (exposed so tests can replay an epoch directly,
-    same contract as ingest.py's sink)."""
+    """foreachBatch sink (exposed so tests can replay an epoch directly —
+    the exactly-once claim is a replay property, which a happy-path
+    stream run never exercises)."""
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
         sess = batch.sparkSession

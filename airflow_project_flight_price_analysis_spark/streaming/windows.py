@@ -3,7 +3,7 @@
 Operators over an ``events``-shaped stream (event_id, ts, user_id,
 event_type, value, props):
 
-- tumbling / sliding window counts+sums with watermarked late-data bound
+- tumbling window counts+sums with watermarked late-data bound
 - session windows (native ``session_window``, the streaming form of the
   batch lag-gap sessionization in plans/relational.q19)
 - ``dropDuplicatesWithinWatermark`` — the streaming form of the hash
@@ -34,20 +34,6 @@ def tumbling_counts(events: DataFrame, width: str = "10 minutes",
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
             "event_type", "n", "total_value",
-        )
-    )
-
-
-def sliding_avg(events: DataFrame, width: str = "10 minutes",
-                slide: str = "5 minutes", watermark: str = "30 minutes") -> DataFrame:
-    """Sliding window average value per event_type."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("win"), "event_type")
-        .agg(F.round(F.avg("value"), 4).alias("avg_value"), F.count("*").alias("n"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type", "avg_value", "n",
         )
     )
 

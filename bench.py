@@ -256,6 +256,46 @@ def _control_run(spark) -> float:
     return time.perf_counter() - t0
 
 
+def measure(spark, build, sf_dir: str,
+            iters: int) -> tuple[list[float], list[float]]:
+    """Time ``iters`` runs of one query; returns (run seconds, build
+    seconds) per iteration.
+
+    Each iteration clears the executor cache, then builds the DataFrame
+    and runs it into the noop sink. The builder is timed SEPARATELY:
+    most builders are pure plan construction (~0.5 s of Catalyst/py4j),
+    but the iterative/roundtrip operators (x96's ER closure, x21's
+    cluster propagation, q86/x109's real parquet writes, x111's
+    availableNow stream) execute genuine engine work eagerly during
+    build — folding it into the run timing would break every prior
+    round's comparability, hiding it entirely would misdirect perf
+    accountability (r11 found x96's true cost is ~19 s at sf0.1, not its
+    0.5 s write).
+
+    After the query, one driver-side GC and a 0.3 s settle: hundreds of
+    accumulated broadcast variables / shuffle registrations only get
+    cleaned when a JVM GC triggers the ContextCleaner, and an idle heap
+    may not GC for the whole run — measured up to 3-4x inflation on
+    late-list queries (x16: 0.75s clean vs 3.2s after 20 queries of
+    accumulated state). The cleaner itself is ASYNC: give it a beat to
+    drain before the next query's timing starts, or its unpersist/remove
+    RPCs contend with the measured run (x06 medians 1.0s mid-bench vs
+    0.62s standalone without the settle)."""
+    runs: list[float] = []
+    builds: list[float] = []
+    for _ in range(iters):
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        df = build(spark, sf_dir)
+        builds.append(time.perf_counter() - t0)
+        t0 = time.perf_counter()
+        df.write.mode("overwrite").format("noop").save()
+        runs.append(time.perf_counter() - t0)
+    spark._jvm.System.gc()
+    time.sleep(0.3)
+    return runs, builds
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -297,39 +337,10 @@ def main() -> None:
     for qi, name in enumerate(HEADLINE):
         if qi == mid_at:
             controls += [_control_run(spark) for _ in range(2)]
-        samples: list[float] = []
-        bsamples: list[float] = []
-        for _ in range(iters):
-            spark.catalog.clearCache()
-            # builder time is measured SEPARATELY: most builders are
-            # pure plan construction (~0.5 s of Catalyst/py4j), but the
-            # iterative/roundtrip operators (x96's ER closure, x21's
-            # cluster propagation, q86/x109's real parquet writes,
-            # x111's availableNow stream) execute genuine engine work
-            # eagerly during build — folding it into the write timing
-            # would break every prior round's comparability, hiding it
-            # entirely would misdirect perf accountability (r11 found
-            # x96's true cost is ~19 s at sf0.1, not its 0.5 s write).
-            t0 = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            bsamples.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            samples.append(time.perf_counter() - t0)
+        samples, bsamples = measure(spark, queries[name], sf_dir, iters)
         timings[name] = round(statistics.median(samples), 3)
         builds[name] = statistics.median(bsamples)
         raw_samples[name] = samples
-        # Driver-side GC between queries: hundreds of accumulated broadcast
-        # variables / shuffle registrations only get cleaned when a JVM GC
-        # triggers the ContextCleaner, and an idle heap may not GC for the
-        # whole run — measured up to 3-4x inflation on late-list queries
-        # (x16: 0.75s clean vs 3.2s after 20 queries of accumulated state).
-        # The cleaner itself is ASYNC: give it a beat to drain before the
-        # next query's timing starts, or its unpersist/remove RPCs contend
-        # with the measured run (x06 medians 1.0s mid-bench vs 0.62s
-        # standalone without the settle).
-        spark._jvm.System.gc()
-        time.sleep(0.3)
 
     controls += [_control_run(spark) for _ in range(2)]
     # Outlier re-measurement (r14 verdict item 3: the 32-core driver
@@ -341,12 +352,12 @@ def main() -> None:
     # > 3× — was measured through a contended window, not a plan: its
     # own minimum is an existence proof that the code runs that fast.
     # Re-run the full ITERS loop for those names after the sweep (the
-    # tail of the sweep is a different window), record BOTH medians in
-    # ``requeued``, and report the smaller. Additions-only: the JSON
-    # contract, timing methodology, and every non-requeued number are
-    # unchanged; a clean sweep requeues nothing. Capped at 16 names
-    # (severity-ordered) so a fully contended box cannot double the
-    # sweep.
+    # tail of the sweep is a different window) through the same
+    # measurement, record BOTH medians in ``requeued``, and report the
+    # retry: taking min(first, retry) would bias the number downward
+    # whatever the window. A clean sweep requeues nothing. Capped at 16
+    # names (severity-ordered) so a fully contended box cannot double
+    # the sweep.
     suspect = sorted(
         (name for name, secs in timings.items()
          if secs > 2 * min(raw_samples[name])
@@ -355,19 +366,10 @@ def main() -> None:
     )[:16]
     requeued: dict[str, list[float]] = {}
     for name in suspect:
-        samples = []
-        for _ in range(iters):
-            spark.catalog.clearCache()
-            df = queries[name](spark, sf_dir)
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            samples.append(time.perf_counter() - t0)
-            spark._jvm.System.gc()
-            time.sleep(0.3)
+        samples, _ = measure(spark, queries[name], sf_dir, iters)
         retry = round(statistics.median(samples), 3)
-        first = timings[name]
-        requeued[name.split("_", 1)[0]] = [first, retry]
-        timings[name] = min(first, retry)
+        requeued[name.split("_", 1)[0]] = [timings[name], retry]
+        timings[name] = retry
     control_sec = round(statistics.median(controls), 3)
     total = round(sum(timings.values()), 3)
     # The driver records only a ~2 KB window of stdout (every BENCH_r*.json
@@ -407,7 +409,7 @@ def main() -> None:
         "heavy_builds": heavy_builds,
         # queries whose in-sweep samples tripped the contended-window
         # rule: {short_name: [first_median, retry_median]}; the
-        # reported number is min(first, retry). Empty on a clean sweep.
+        # reported number is the retry. Empty on a clean sweep.
         "requeued": requeued,
         "queries": short,
     }, separators=(",", ":")), flush=True)

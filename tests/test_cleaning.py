@@ -49,14 +49,18 @@ def test_weekday_monday_zero(spark):
 
 
 def test_row_hash_null_vs_empty(spark):
-    # NULL and '' must hash differently (sentinel), and hashing is
-    # deterministic across rows with equal content
+    # NULL and '' must hash differently (sentinel), hashing is
+    # deterministic across rows with equal content, and ('x|y','z') vs
+    # ('x','y|z') stay distinct: plain concat_ws would join both to
+    # 'x|y|z', the length-prefixed encoding does not
     df = spark.createDataFrame(
-        [Row(a=None, b="x"), Row(a="", b="x"), Row(a="", b="x")]
+        [Row(a=None, b="x"), Row(a="", b="x"), Row(a="", b="x"),
+         Row(a="x|y", b="z"), Row(a="x", b="y|z")]
     )
     h = df.select(row_hash_expr(["a", "b"]).alias("h")).collect()
     assert h[0].h != h[1].h
     assert h[1].h == h[2].h
+    assert h[3].h != h[4].h
 
 
 def test_surrogate_key_stable_and_distinct(spark):
@@ -66,54 +70,6 @@ def test_surrogate_key_stable_and_distinct(spark):
     keys = df.select(surrogate_key_expr("name").alias("k")).collect()
     assert keys[0].k == keys[2].k
     assert keys[0].k != keys[1].k
-
-
-def test_title_parity_matches_python_str_title(spark):
-    """title_parity_expr must equal pandas/Python ``str.title()`` exactly
-    (SURVEY P5 divergence, closed): any non-letter is a boundary."""
-    from airflow_project_flight_price_analysis_spark.functions.cleaning import (
-        title_parity_expr,
-    )
-
-    samples = [
-        "cox's bazar",          # the documented divergence case
-        "o'hare int'l",
-        "ABC-DEF ghi",
-        "  new york-jfk  ",
-        "abc1def 2gh",
-        "émirats arabes-unis",
-        "a",
-        "",
-        "123 456",
-        "don't stop-believin'",
-        "x" * 300,
-    ]
-    df = spark.createDataFrame([(s,) for s in samples], "s string")
-    out = {r.s: r.t for r in
-           df.select("s", title_parity_expr("s").alias("t")).collect()}
-    for s in samples:
-        assert out[s] == s.title(), (s, out[s], s.title())
-
-
-def test_title_parity_null_propagates(spark):
-    from airflow_project_flight_price_analysis_spark.functions.cleaning import (
-        title_parity_expr,
-    )
-
-    df = spark.createDataFrame([(None,)], "s string")
-    assert df.select(title_parity_expr("s").alias("t")).collect()[0].t is None
-
-
-def test_title_parity_stays_jvm_side(spark):
-    """No BatchEvalPython — the parity path must not cost a Python hop."""
-    from airflow_project_flight_price_analysis_spark.functions.cleaning import (
-        title_parity_expr,
-    )
-
-    df = spark.createDataFrame([("x y",)], "s string") \
-        .select(title_parity_expr("s").alias("t"))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_stopovers_int_overflow_is_zero_not_null(spark):

@@ -11,7 +11,6 @@ from airflow_project_flight_price_analysis_spark.functions.text import (
     token_count_expr,
 )
 from airflow_project_flight_price_analysis_spark.operators.dedup import (
-    exact_dedup,
     minhash_neardup_pairs,
     simhash_candidate_pairs,
     simhash_signatures,
@@ -64,14 +63,6 @@ def test_token_count_empty_and_null(spark):
     got = [r[0] for r in df.select(token_count_expr("t")).collect()]
     assert got[0] == 3 and got[1] == 0 and got[2] == 0
     assert got[3] in (0, -1, None)  # null text → size(null); engine maps later
-
-
-def test_exact_dedup_deterministic_keep(spark):
-    df = spark.createDataFrame(
-        [(3, "same"), (1, "same"), (2, "other")], "id long, text string"
-    )
-    kept = exact_dedup(df, ["text"], keep_order_col="id").collect()
-    assert sorted((r.id, r.text) for r in kept) == [(1, "same"), (2, "other")]
 
 
 def _docs_with_neardups(spark):

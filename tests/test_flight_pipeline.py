@@ -228,6 +228,50 @@ def test_empty_first_load_is_a_noop(spark, tmp_path):
     }
 
 
+def _blank(row: str, *fields: int) -> str:
+    cells = row.split(",")
+    for i in fields:
+        cells[i] = ""
+    return ",".join(cells)
+
+
+@pytest.mark.parametrize("row, dims", [
+    # clean_metrics: every bronze row fails the validity filter
+    (BAD_FARE_ROW, {"dim_airlines": 0, "dim_airports": 0, "dim_date": 0}),
+    # dim_airlines: no airline (the first dim written)
+    (_blank(GOOD_ROW, 0), {"dim_airlines": 0, "dim_airports": 2, "dim_date": 1}),
+    # dim_airports: no airport code
+    (_blank(GOOD_ROW, 1, 3), {"dim_airlines": 1, "dim_airports": 0, "dim_date": 1}),
+    # dim_date: no parseable departure date
+    (BAD_DATE_ROW, {"dim_airlines": 1, "dim_airports": 2, "dim_date": 0}),
+], ids=["clean_metrics", "dim_airlines", "dim_airports", "dim_date"])
+def test_observations_report_a_stage_that_empties(spark, tmp_path, row, dims):
+    """Each Observation the pipeline reads, on a one-row input that its
+    stage filters to nothing (an empty source is
+    ``test_empty_first_load_is_a_noop``). AQE drops a write's emptied
+    shuffle stage, and the metrics observed inside it, from the plan: the
+    report must still count the bronze row instead of raising."""
+    from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import (
+        run_pipeline,
+    )
+
+    p = tmp_path / "one.csv"
+    p.write_text("\n".join([CSV_HEADER, row]) + "\n")
+    assert run_pipeline(spark, str(p), str(tmp_path / "wh")) == {
+        "ingested_new_rows": 1,
+        "rows_dropped_invalid": int(row == BAD_FARE_ROW),
+        "dims": dims,
+        "source_rows": 1,
+        "deduped_rows": 1,
+        "staged_rows": 1,
+        "fact_rows": 0,
+        "staging_ok": True,
+        "loss_pct": 100.0,
+        "loss_ok": False,
+        "passed": False,
+    }
+
+
 def test_lost_bronze_fails_loudly(spark, csv_file, tmp_path):
     """A warehouse whose ledger survives but whose bronze is gone is not an
     empty load: every source row is in the ledger, so nothing is re-ingested,

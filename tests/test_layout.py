@@ -9,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from airflow_project_flight_price_analysis_spark.operators.layout import (
-    file_minmax,
     interleave_bits,
     quantize_ts,
     zorder_write,
@@ -20,6 +19,23 @@ SF_MED = "/root/testdata/sf0.01"
 
 BASE = 1704067200  # 2024-01-01 UTC — events span Jan 2024
 T_SHIFT = 18       # ~3-day cells → ~10 cells over the month (4 bits)
+
+
+def file_minmax(spark, path: str, cols: list[str]) -> list[dict]:
+    """Per-file min/max of ``cols`` for every parquet part-file under
+    ``path`` — the footer statistics a scan planner prunes with, so a
+    test can count how many files a predicate box would touch."""
+    import glob
+    import os
+
+    out = []
+    for f in sorted(glob.glob(os.path.join(path, "part-*.parquet"))):
+        aggs = []
+        for c in cols:
+            aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+        row = spark.read.parquet(f).agg(*aggs).collect()[0]
+        out.append({"file": os.path.basename(f), **row.asDict()})
+    return out
 
 
 def _py_z(u: int, t: int, bits: int = 4) -> int:

@@ -1,87 +1,15 @@
-"""Bucketed co-located joins and salted skew mitigation — plan-shape and
-equivalence tests (operators/partitioning.py)."""
+"""Salted skew mitigation, sink round-trips and partition pruning —
+equivalence and plan-shape tests (operators/partitioning.py)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from airflow_project_flight_price_analysis_spark.operators.partitioning import (
-    bucketed_join,
-    bucketize,
     salted_agg,
-    salted_join,
 )
 from airflow_project_flight_price_analysis_spark.sources import load_table
 from tests.conftest import SF_SMALL
-
-
-def _shuffle_exchanges(df) -> int:
-    """Count shuffle Exchanges (not BroadcastExchange) in the executed plan."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return sum(
-        1 for line in plan.splitlines()
-        if "Exchange" in line and "BroadcastExchange" not in line
-    )
-
-
-def _drop_managed_table(spark, name: str) -> None:
-    """DROP plus location pre-clean: an interrupted prior run leaves the
-    warehouse directory behind while the (fresh) Derby metastore has no
-    entry, and every saveAsTable then errors with
-    LOCATION_ALREADY_EXISTS (r7 VERDICT). Crash-safe setup removes both."""
-    import shutil
-    from urllib.parse import urlparse
-
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark, tmp_path_factory):
-    li = load_table(spark, SF_SMALL, "lineitem").select(
-        "l_orderkey", "l_extendedprice"
-    )
-    orders = load_table(spark, SF_SMALL, "orders").select(
-        "o_orderkey", "o_orderdate"
-    )
-    _drop_managed_table(spark, "b_lineitem")
-    _drop_managed_table(spark, "b_orders")
-    bucketize(li, "b_lineitem", "l_orderkey", num_buckets=4)
-    bucketize(orders, "b_orders", "o_orderkey", num_buckets=4)
-    yield "b_lineitem", "b_orders"
-    _drop_managed_table(spark, "b_lineitem")
-    _drop_managed_table(spark, "b_orders")
-
-
-def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
-    lt, rt = bucketed_tables
-    # disable auto-broadcast so the small test tables take the SMJ path a
-    # 100 TB join would take
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, lt, rt, "l_orderkey", "o_orderkey")
-        assert _shuffle_exchanges(joined) == 0, (
-            "bucketed join must not shuffle:\n"
-            + joined._jdf.queryExecution().executedPlan().toString()
-        )
-        # same join on raw (unbucketed) parquet shuffles both sides
-        li = load_table(spark, SF_SMALL, "lineitem")
-        orders = load_table(spark, SF_SMALL, "orders")
-        raw = li.join(orders, li.l_orderkey == orders.o_orderkey)
-        assert _shuffle_exchanges(raw) >= 2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-
-
-def test_bucketed_join_matches_plain_join(spark, bucketed_tables):
-    lt, rt = bucketed_tables
-    joined = bucketed_join(spark, lt, rt, "l_orderkey", "o_orderkey")
-    li = load_table(spark, SF_SMALL, "lineitem")
-    orders = load_table(spark, SF_SMALL, "orders")
-    plain = li.join(orders, li.l_orderkey == orders.o_orderkey)
-    assert joined.count() == plain.count()
 
 
 def test_salted_agg_matches_plain(spark):
@@ -98,21 +26,6 @@ def test_salted_agg_matches_plain(spark):
     s = {r["event_type"]: (r["n"], round(r["total"], 6)) for r in salted.collect()}
     p = {r["event_type"]: (r["n"], round(r["total"], 6)) for r in plain.collect()}
     assert s == p
-
-
-def test_salted_join_matches_plain(spark):
-    ev = load_table(spark, SF_SMALL, "events").select(
-        "event_id", F.col("user_id").alias("k"), "value"
-    )
-    dim = (
-        load_table(spark, SF_SMALL, "events")
-        .select(F.col("user_id").alias("k")).distinct()
-        .withColumn("dim_tag", F.col("k") * 2)
-    )
-    salted = salted_join(ev, dim, "k", salt_source="event_id", n_salts=4)
-    plain = ev.join(dim, "k")
-    assert salted.count() == plain.count()
-    assert salted.agg(F.sum("dim_tag")).first()[0] == plain.agg(F.sum("dim_tag")).first()[0]
 
 
 def test_sink_format_round_trips(spark, tmp_path):

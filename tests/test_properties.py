@@ -346,81 +346,6 @@ def test_salted_join_identical_to_plain_join(spark, probe_rows, build_rows):
             assert salted == plain, (how, hk is not None)
 
 
-def test_sampled_heavy_hitters_finds_the_hot_key(spark):
-    """operators/skew.py: on a fixed 90/10 skewed dataset the detector
-    must flag the dominant key, omit the uniform tail, and be
-    deterministic across invocations (hash sampling, no rand())."""
-    from airflow_project_flight_price_analysis_spark.operators.skew import (
-        sampled_heavy_hitters,
-    )
-
-    rows = [(0, i) for i in range(9000)] + [
-        (1 + (i % 200), 9000 + i) for i in range(1000)
-    ]
-    df = spark.createDataFrame(rows, ["k", "payload"])
-    hot_a = sorted(r.k for r in
-                   sampled_heavy_hitters(df, "k", min_share=0.2).collect())
-    hot_b = sorted(r.k for r in
-                   sampled_heavy_hitters(df, "k", min_share=0.2).collect())
-    assert hot_a == hot_b == [0]
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(                                     # left: (key, ts)
-        st.tuples(
-            st.integers(min_value=0, max_value=2),
-            st.integers(min_value=0, max_value=100),
-        ),
-        min_size=1,
-        max_size=40,
-    ),
-    st.lists(                                     # right: (key, ts, value?)
-        st.tuples(
-            st.integers(min_value=0, max_value=3),
-            st.integers(min_value=0, max_value=100),
-            st.one_of(st.none(), st.integers(min_value=0, max_value=999)),
-        ),
-        min_size=0,
-        max_size=40,
-    ),
-)
-def test_asof_join_matches_bruteforce(spark, left_rows, right_rows):
-    """operators/asof.py must match the per-row definition — latest
-    right row with the same key at-or-before the left timestamp,
-    highest tiebreak id winning exact-timestamp ties — on arbitrary
-    generated event sets. Right values may be NULL: a matched row whose
-    value is NULL must yield NULL (not an older row's non-null value —
-    the r5 ADVICE per-column-carry bug)."""
-    from airflow_project_flight_price_analysis_spark.operators.asof import (
-        asof_join,
-    )
-
-    lrows = [(k, t, i) for i, (k, t) in enumerate(left_rows)]
-    rrows = [(k, t, v, i) for i, (k, t, v) in enumerate(right_rows)]
-    left = spark.createDataFrame(lrows, ["k", "ts", "lid"])
-    right = spark.createDataFrame(
-        rrows, "k int, ts int, val int, rid int"
-    )
-
-    def brute(k, t):
-        cands = [(rt, rid, v) for rk, rt, v, rid in rrows
-                 if rk == k and rt <= t]
-        if not cands:
-            return None
-        rt, rid, v = max(cands, key=lambda c: (c[0], c[1]))
-        return v
-
-    expected = {lid: brute(k, t) for k, t, lid in lrows}
-    got = {
-        r.lid: r.asof_val
-        for r in asof_join(
-            left, right, ["k"], "ts", "ts", ["val"], right_tiebreak="rid"
-        ).collect()
-    }
-    assert got == expected
-
-
 @settings(max_examples=8, deadline=None)
 @given(
     st.lists(

@@ -1,70 +1,14 @@
-"""SCD2 upsert emulation, IVF ANN recall, and the pyspark.ml MinHashLSH
-cross-check against the expression-based implementation."""
+"""IVF ANN recall and operator edge cases: vector search, band
+geometry, sampling, range joins, bloom and ledger guards."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from airflow_project_flight_price_analysis_spark.operators.dedup import (
-    minhash_ml_neardup_pairs,
-)
-from airflow_project_flight_price_analysis_spark.operators.scd import (
-    OPEN_END,
-    scd2_upsert,
-)
 from airflow_project_flight_price_analysis_spark.operators.similarity import (
     cosine_topk,
     ivf_topk,
 )
-
-from tests.test_extensions import _docs_with_neardups
-
-
-def test_scd2_upsert_closes_and_inserts(spark):
-    current = spark.createDataFrame(
-        [
-            ("DAC", "dhaka airport", "2020-01-01", OPEN_END),
-            ("CXB", "coxs bazar", "2020-01-01", OPEN_END),
-            ("ZYL", "old sylhet name", "2019-01-01", "2020-01-01"),
-            ("ZYL", "sylhet airport", "2020-01-01", OPEN_END),
-        ],
-        "airport_code string, airport_name string, valid_from string, valid_to string",
-    )
-    updates = spark.createDataFrame(
-        [
-            ("DAC", "hazrat shahjalal intl"),   # changed → new version
-            ("CXB", "coxs bazar"),              # unchanged → untouched
-            ("SPD", "saidpur airport"),         # new key → insert
-        ],
-        "airport_code string, airport_name string",
-    )
-    out = scd2_upsert(current, updates, "airport_code",
-                      ["airport_name"], "2021-06-01")
-    rows = {(r.airport_code, r.airport_name): (r.valid_from, r.valid_to)
-            for r in out.collect()}
-    assert out.count() == 6
-    # old DAC row closed at effective date, new version open
-    assert rows[("DAC", "dhaka airport")] == ("2020-01-01", "2021-06-01")
-    assert rows[("DAC", "hazrat shahjalal intl")] == ("2021-06-01", OPEN_END)
-    # unchanged row untouched
-    assert rows[("CXB", "coxs bazar")] == ("2020-01-01", OPEN_END)
-    # new key inserted open-ended; history preserved
-    assert rows[("SPD", "saidpur airport")] == ("2021-06-01", OPEN_END)
-    assert rows[("ZYL", "old sylhet name")] == ("2019-01-01", "2020-01-01")
-
-
-def test_scd2_idempotent_on_reapply(spark):
-    current = spark.createDataFrame(
-        [("DAC", "dhaka airport", "2020-01-01", OPEN_END)],
-        "airport_code string, airport_name string, valid_from string, valid_to string",
-    )
-    updates = spark.createDataFrame(
-        [("DAC", "hazrat shahjalal intl")],
-        "airport_code string, airport_name string",
-    )
-    once = scd2_upsert(current, updates, "airport_code", ["airport_name"], "2021-06-01")
-    twice = scd2_upsert(once, updates, "airport_code", ["airport_name"], "2021-06-01")
-    assert twice.count() == once.count() == 2  # reapplying same update: no-op
 
 
 def _double_emb(spark):
@@ -85,64 +29,6 @@ def test_ivf_recall_against_brute_force(spark):
     assert recall >= 0.3, f"IVF recall collapsed: {recall}"
     # every query produced k results (buckets are never empty with probes)
     assert len(ivf) == 50
-
-
-def test_ml_minhash_agrees_with_expression_impl(spark):
-    docs = _docs_with_neardups(spark)
-    pairs = minhash_ml_neardup_pairs(docs, "text", "doc_id",
-                                     jaccard_distance=0.7).collect()
-    found = {(r.a, r.b) for r in pairs}
-    assert (1, 2) in found          # planted near-dup found
-    assert (1, 3) not in found      # unrelated pair excluded
-
-
-def test_ivf_kmeans_centroids_contract(spark):
-    """Trained coarse quantizer: right shape, deterministic under a
-    fixed seed, and a total single-assignment partition of the corpus
-    when plugged into ivf_assign. (Recall quality of the IVF *product
-    path* is certified by x15 against the exact baseline — this test
-    pins the training boundary.)"""
-    from airflow_project_flight_price_analysis_spark.operators.similarity import (
-        ivf_assign,
-        ivf_kmeans_centroids,
-    )
-    from airflow_project_flight_price_analysis_spark.sources import load_table
-    from tests.conftest import SF_SMALL
-
-    emb = load_table(spark, SF_SMALL, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    dim = len(emb.first()["embedding"])
-    c1 = ivf_kmeans_centroids(emb, n_centroids=8)
-    rows = c1.collect()
-    assert len(rows) == 8
-    assert all(len(r["embedding"]) == dim for r in rows)
-    # deterministic re-train
-    c2 = ivf_kmeans_centroids(emb, n_centroids=8)
-    assert sorted(map(str, rows)) == sorted(map(str, c2.collect()))
-    # every corpus vector lands in exactly one bucket
-    assigned = ivf_assign(emb, c1)
-    assert assigned.count() == emb.count()
-    assert assigned.select("id").distinct().count() == emb.count()
-    n_buckets = assigned.select("centroid_id").distinct().count()
-    assert 1 < n_buckets <= 8
-
-
-def test_scd2_rejects_null_business_key(spark):
-    """NULL business keys would silently re-insert forever through the
-    null-unsafe routing joins — the upsert must fail fast instead."""
-    import pytest
-    from airflow_project_flight_price_analysis_spark.operators.scd import (
-        scd2_upsert,
-    )
-
-    current = spark.createDataFrame(
-        [(1, "a", "2024-01-01", "9999-12-31")],
-        "k int, attr string, valid_from string, valid_to string",
-    )
-    updates = spark.createDataFrame([(None, "b")], "k int, attr string")
-    with pytest.raises(ValueError, match="NULL business key"):
-        scd2_upsert(current, updates, "k", ["attr"], "2024-02-01")
 
 
 def test_zero_norm_vectors_never_pollute_topk(spark):
@@ -192,18 +78,6 @@ def test_band_geometry_is_validated(spark):
     with pytest.raises(ValueError, match="4\\*num_bands"):
         minhash_neardup_pairs(df, "text", "doc_id",
                               num_hashes=16, num_bands=8)
-
-
-def test_exact_dedup_is_not_separator_injectable(spark):
-    """('x|y','z') and ('x','y|z') concatenate identically under plain
-    concat_ws — the length-prefixed encoding must keep them distinct."""
-    from airflow_project_flight_price_analysis_spark.operators.dedup import (
-        exact_dedup,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "x|y", "z"), (2, "x", "y|z")], "id long, a string, b string")
-    assert exact_dedup(df, ["a", "b"]).count() == 2
 
 
 def test_stratified_sample_keeps_null_stratum(spark):

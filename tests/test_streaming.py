@@ -12,11 +12,6 @@ from airflow_project_flight_price_analysis_spark.streaming import windows as SW
 from airflow_project_flight_price_analysis_spark.streaming.coherence import (
     drop_last_commit,
 )
-from airflow_project_flight_price_analysis_spark.streaming.ingest import (
-    start_stream_ingest,
-)
-
-from tests.test_flight_pipeline import CSV_HEADER, GOOD_ROW, SECOND_ROW
 
 
 def _events_stream(spark, tmp_path):
@@ -76,61 +71,6 @@ def test_dedup_within_watermark(spark, tmp_path):
     assert got.select("event_id").distinct().count() == 100
 
 
-def test_stream_ingest_is_incremental_and_idempotent(spark, tmp_path):
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "batch1.csv").write_text(
-        "\n".join([CSV_HEADER, GOOD_ROW, GOOD_ROW]) + "\n"
-    )
-    bronze = str(tmp_path / "bronze")
-    ledger = str(tmp_path / "ledger")
-    ckpt = str(tmp_path / "ckpt")
-
-    q = start_stream_ingest(spark, str(landing), bronze, ledger, ckpt)
-    assert q.awaitTermination(120)  # False = timed out
-    assert spark.read.parquet(bronze).count() == 1  # in-batch dup collapsed
-
-    # new file lands: only its new row is ingested; old file not re-read
-    (landing / "batch2.csv").write_text(
-        "\n".join([CSV_HEADER, GOOD_ROW, SECOND_ROW]) + "\n"
-    )
-    q2 = start_stream_ingest(spark, str(landing), bronze, ledger, ckpt)
-    assert q2.awaitTermination(120)  # False = timed out
-    bronze_df = spark.read.parquet(bronze)
-    assert bronze_df.count() == 2
-    assert spark.read.parquet(ledger).count() == 2
-
-
-def test_stream_ingest_epoch_replay_is_exactly_once(spark, tmp_path):
-    """Simulate the crash window the at-least-once contract worries
-    about: bronze write committed, ledger write lost, epoch replayed.
-    The dynamic epoch-partition overwrite must leave bronze with ONE
-    copy of the rows, not an appended duplicate."""
-    import shutil
-
-    from airflow_project_flight_price_analysis_spark.sources.flights_csv import (
-        read_flights_csv,
-    )
-    from airflow_project_flight_price_analysis_spark.streaming.ingest import (
-        make_ingest_sink,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "b.csv").write_text("\n".join([CSV_HEADER, GOOD_ROW, SECOND_ROW]) + "\n")
-    batch = read_flights_csv(spark, str(landing / "b.csv"))
-    bronze, ledger = str(tmp_path / "bronze"), str(tmp_path / "ledger")
-
-    sink = make_ingest_sink(bronze, ledger)
-    sink(batch, 0)
-    assert spark.read.parquet(bronze).count() == 2
-    # crash window: ledger write is lost, epoch 0 replays
-    shutil.rmtree(ledger)
-    sink(batch, 0)
-    assert spark.read.parquet(bronze).count() == 2  # overwritten, not appended
-    assert spark.read.parquet(ledger).count() == 2
-
-
 def test_read_ledger_surfaces_corruption(spark, tmp_path):
     """Only a missing path means 'first run'; a corrupt ledger must raise,
     not silently re-ingest everything as if the ledger were empty."""
@@ -172,6 +112,24 @@ def test_stateful_running_totals_match_batch(spark, tmp_path):
     g = {r.user_id: (r.n_events, r.total_value) for r in got.collect()}
     e = {r.user_id: (r.n_events, r.total_value) for r in expected.collect()}
     assert g == e and len(g) > 0
+
+
+def test_memory_sink_face_leaves_no_temp_view(spark):
+    """A face drained through the memory sink drops the sink's view once
+    its result is resolved (the rows would otherwise stay in the driver
+    for the life of the session), and the result still holds them."""
+    from airflow_project_flight_price_analysis_spark.plans.extensions import (
+        x111_stateful_running_totals,
+    )
+    from tests.conftest import SF_SMALL
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    out = x111_stateful_running_totals(spark, SF_SMALL)
+    assert temp_views() == before
+    assert out.count() > 0
 
 
 def test_stream_static_join(spark, tmp_path):
@@ -237,111 +195,6 @@ def test_stream_interval_join_boundaries(spark, tmp_path):
     q.awaitTermination()
     got = {(r.l, r.r) for r in spark.table(name).collect()}
     assert got == {(100, 201), (100, 202)}, got
-
-
-def test_quality_quarantine_splits_and_annotates(spark, tmp_path):
-    """streaming/quality.py: a streamed feed with known-bad rows must
-    land clean rows in the good path, bad rows in quarantine annotated
-    with exactly the failed check names, and conserve row counts. NULL
-    check results count as failures (unknown != pass)."""
-    from airflow_project_flight_price_analysis_spark.streaming.quality import (
-        start_quality_stream,
-    )
-
-    src = str(tmp_path / "src")
-    rows = [
-        (1, 10.0, "A"),       # clean
-        (2, -5.0, "B"),       # nonneg fails
-        (3, 10.0, None),      # category_known fails (NULL -> fail)
-        (4, -1.0, "Z"),       # both fail
-    ]
-    spark.createDataFrame(rows, ["id", "amount", "cat"]).write.parquet(src)
-    batch = spark.read.parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-
-    checks = {
-        "nonneg_amount": F.col("amount") >= 0,
-        "category_known": F.col("cat").isin("A", "B"),
-    }
-    good, quar = str(tmp_path / "good"), str(tmp_path / "quarantine")
-    q = start_quality_stream(
-        stream, checks, good, quar, str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    assert q.awaitTermination(120)  # False = timed out
-
-    good_rows = {r.id for r in spark.read.parquet(good).collect()}
-    bad = {r.id: sorted(r.violations)
-           for r in spark.read.parquet(quar).collect()}
-    assert good_rows == {1}
-    assert bad == {
-        2: ["nonneg_amount"],
-        3: ["category_known"],
-        4: ["category_known", "nonneg_amount"],
-    }
-    assert len(good_rows) + len(bad) == len(rows)
-
-
-def test_quality_quarantine_batch_twin_matches_x97_semantics(spark):
-    """The with_violations annotator is the same predicate algebra the
-    batch x97 battery uses — run it as a plain batch expression over
-    lineitem and reconcile against the registered DQ report's
-    quantity-range check."""
-    from airflow_project_flight_price_analysis_spark.plans import all_queries
-    from airflow_project_flight_price_analysis_spark.sources import load_table
-    from airflow_project_flight_price_analysis_spark.streaming.quality import (
-        with_violations,
-    )
-
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    annotated = with_violations(
-        li,
-        {"li_quantity_out_of_range":
-            (F.col("l_quantity") >= 1) & (F.col("l_quantity") <= 50)},
-    )
-    n_bad = annotated.filter(F.size("violations") > 0).count()
-    report = {
-        r.check_name: r.n_violations
-        for r in all_queries()["x97_dq_expectations"](
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    assert n_bad == report["li_quantity_out_of_range"]
-
-
-def test_streaming_decontaminate_splits_exactly(spark, tmp_path):
-    """streaming/decontam.py: the (clean, flagged) split must be exact
-    against the ledger — flagged = keys present in the blocklist,
-    clean = everything else (bloom false positives rejected by the
-    exact join; NULL keys land in clean), and counts conserved."""
-    from airflow_project_flight_price_analysis_spark.streaming.decontam import (
-        streaming_decontaminate,
-    )
-
-    src = str(tmp_path / "src")
-    rows = [(i, f"fp{i}" if i % 3 else None) for i in range(30)]
-    spark.createDataFrame(rows, "id int, fp string").write.parquet(src)
-    batch = spark.read.parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-
-    block = spark.createDataFrame(
-        [(f"fp{i}",) for i in range(0, 30, 5)], "bk string"
-    )
-    clean, flagged = streaming_decontaminate(stream, block, "fp", "bk")
-
-    qc = (clean.writeStream.format("memory").queryName("dc_clean")
-          .trigger(availableNow=True).start())
-    qf = (flagged.writeStream.format("memory").queryName("dc_flagged")
-          .trigger(availableNow=True).start())
-    assert qc.awaitTermination(120) and qf.awaitTermination(120)
-
-    got_clean = {r.id for r in spark.sql("select * from dc_clean").collect()}
-    got_flagged = {r.id for r in spark.sql("select * from dc_flagged").collect()}
-    # ledger holds fp0..fp25 step 5; fp of id i is f"fp{i}" unless i%3==0 (NULL)
-    want_flagged = {i for i in range(30) if i % 3 and i % 5 == 0}
-    assert got_flagged == want_flagged
-    assert got_clean == set(range(30)) - want_flagged
-    assert len(got_clean) + len(got_flagged) == 30
 
 
 # --------------------------------------------------------------------------
@@ -564,21 +417,6 @@ def test_events_stream_reads_directory_layout(spark, tmp_path):
     assert spark.table("evdir").count() == 50
 
 
-def test_decontaminate_rejects_mixed_key_types(spark, tmp_path):
-    import pytest
-
-    from airflow_project_flight_price_analysis_spark.streaming.decontam import (
-        streaming_decontaminate,
-    )
-
-    src = str(tmp_path / "s")
-    spark.createDataFrame([(1,)], "k int").write.parquet(src)
-    stream = spark.readStream.schema("k int").parquet(src)
-    block = spark.createDataFrame([(1.0,)], "k double")
-    with pytest.raises(TypeError, match="type mismatch"):
-        streaming_decontaminate(stream, block, "k", "k")
-
-
 def test_sig_ledger_compaction_preserves_screen_results(spark, tmp_path):
     """r6 verdict item 7: folding all epochs <= K into one base
     partition must leave every future epoch's screen IDENTICAL — the
@@ -627,38 +465,6 @@ def test_sig_ledger_compaction_preserves_screen_results(spark, tmp_path):
         assert a == b and a  # non-vacuous
 
 
-def test_ingest_sink_rejects_checkpoint_reset_over_live_ledger(
-        spark, tmp_path):
-    """The neardup coherence guard applied to exact-dedup ingest: a
-    checkpoint restart at epoch 0 over a persisted ledger must raise
-    (dynamic overwrite would clobber historical epoch partitions);
-    replaying the current max epoch stays legal."""
-    import pytest
-
-    from airflow_project_flight_price_analysis_spark.sources.flights_csv import (
-        read_flights_csv,
-    )
-    from airflow_project_flight_price_analysis_spark.streaming.ingest import (
-        make_ingest_sink,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "a.csv").write_text("\n".join([CSV_HEADER, GOOD_ROW]) + "\n")
-    (landing / "b.csv").write_text("\n".join([CSV_HEADER, SECOND_ROW]) + "\n")
-    bronze, ledger = str(tmp_path / "bronze"), str(tmp_path / "ledger")
-    sink = make_ingest_sink(bronze, ledger)
-    sink(read_flights_csv(spark, str(landing / "a.csv")), 0)
-    sink(read_flights_csv(spark, str(landing / "b.csv")), 1)
-    # replay of the max epoch: fine
-    sink(read_flights_csv(spark, str(landing / "b.csv")), 1)
-    # restart at 0 over the live ledger: refuse
-    with pytest.raises(RuntimeError, match="checkpoint"):
-        sink(read_flights_csv(spark, str(landing / "a.csv")), 0)
-    # history intact
-    assert spark.read.parquet(bronze).count() == 2
-
-
 def test_ledger_compaction_validates_against_checkpoint(spark, tmp_path):
     """r7 review: the fold bound must be enforceable against the
     stream's checkpoint — folding a replayable epoch would change its
@@ -697,45 +503,6 @@ def test_ledger_compaction_validates_against_checkpoint(spark, tmp_path):
     assert n == 1
     led = spark.read.parquet(str(tmp_path / "out"))
     assert {r.epoch_id for r in led.select("epoch_id").collect()} == {0, 1}
-
-
-def test_ingest_replay_survives_partial_ledger_write(spark, tmp_path):
-    """r7 review (data-loss class): a crash MID-ledger-write leaves a
-    partial epoch_id=N ledger partition; the replay of N must dedup
-    against the PRE-epoch ledger only — otherwise fresh becomes a
-    strict subset and the dynamic overwrite deletes the missing rows
-    from bronze permanently."""
-    from airflow_project_flight_price_analysis_spark.sources.flights_csv import (
-        read_flights_csv,
-    )
-    from airflow_project_flight_price_analysis_spark.streaming.ingest import (
-        make_ingest_sink,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "b.csv").write_text(
-        "\n".join([CSV_HEADER, GOOD_ROW, SECOND_ROW]) + "\n")
-    batch = read_flights_csv(spark, str(landing / "b.csv"))
-    bronze, ledger = str(tmp_path / "bronze"), str(tmp_path / "ledger")
-    sink = make_ingest_sink(bronze, ledger)
-    sink(batch, 0)
-    assert spark.read.parquet(bronze).count() == 2
-    # simulate the partial ledger write: drop ONE of epoch 0's ledger
-    # rows (as if the commit lost a task's file), keep the other
-    import glob
-    import os
-
-    rows = (spark.read.parquet(ledger).filter("epoch_id = 0")
-            .drop("epoch_id").limit(1).collect())
-    for f in glob.glob(os.path.join(ledger, "epoch_id=0", "*")):
-        os.unlink(f)
-    (spark.createDataFrame(rows).write.mode("overwrite")
-     .parquet(os.path.join(ledger, "epoch_id=0")))
-    # replay epoch 0: both rows must survive in bronze
-    sink(batch, 0)
-    assert spark.read.parquet(bronze).filter("epoch_id = 0").count() == 2
-    assert spark.read.parquet(ledger).filter("epoch_id = 0").count() == 2
 
 
 # --- streaming KMV sketch maintenance (streaming/sketches.py, x124) ----------

@@ -36,35 +36,6 @@ def test_asof_join_includes_same_timestamp_click(spark, tmp_path):
     assert got[6]["last_click_ts"] is not None
 
 
-def test_asof_join_null_in_matched_row_stays_null(spark):
-    """ADVICE r5 repro: right rows (ts=1,val=100),(ts=5,val=NULL), left
-    ts=10 — the matched row IS ts=5, so asof_val must be NULL, not the
-    older row's 100. The whole right row rides as one struct now, so
-    every asof_* column comes from the same matched row."""
-    from airflow_project_flight_price_analysis_spark.operators.asof import (
-        asof_join,
-    )
-
-    left = spark.createDataFrame([(1, 10)], "k int, ts int")
-    right = spark.createDataFrame(
-        [(1, 1, 100, "a"), (1, 5, None, None)],
-        "k int, ts int, val int, tag string",
-    )
-    row = asof_join(left, right, ["k"], "ts", "ts", ["val", "tag"]).collect()[0]
-    assert row.asof_val is None and row.asof_tag is None
-
-    # tolerance keys on the matched row's own timestamp: horizon 3 voids
-    # the ts=5 match for left ts=10 (gap 5 > 3) even though ts=1 exists
-    row_tol = asof_join(
-        left, right, ["k"], "ts", "ts", ["val", "tag"], tolerance_seconds=3
-    ).collect()[0]
-    assert row_tol.asof_val is None and row_tol.asof_tag is None
-    row_tol9 = asof_join(
-        left, right, ["k"], "ts", "ts", ["val", "tag"], tolerance_seconds=9
-    ).collect()[0]
-    assert row_tol9.asof_val is None and row_tol9.asof_tag is None  # matched row's own NULLs
-
-
 def test_banded_left_join_null_payload_not_duplicated(spark):
     """ADVICE r5 repro: one left row with a NULL payload and one matching
     right row must yield exactly ONE output row (the null-unsafe

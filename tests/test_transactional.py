@@ -1,4 +1,4 @@
-"""Concurrency semantics of the snapshot-swap dimension upsert
+"""Concurrency semantics of the bucketed copy-on-write MERGE table
 (operators/transactional.py — r2 VERDICT missing #1).
 
 The dangerous interleaving is: writer B reads state N, writer A commits
@@ -10,186 +10,16 @@ protocol must instead force B into a conflict + rebase.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from airflow_project_flight_price_analysis_spark.operators.transactional import (
+    BucketedMergeTable,
     CommitConflict,
-    SnapshotTable,
 )
-
-
-def _dim(spark, rows):
-    return spark.createDataFrame(rows, "airline_id int, airline_name string")
-
-
-def test_insert_if_new_basic(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "dim"))
-    v1 = t.upsert(spark, _dim(spark, [(1, "AirA"), (2, "AirB")]), "airline_id")
-    assert v1 == 1
-    # existing key 2 must NOT be updated (insert-if-new), key 3 appended
-    v2 = t.upsert(spark, _dim(spark, [(2, "Renamed"), (3, "AirC")]), "airline_id")
-    assert v2 == 2
-    state = {r.airline_id: r.airline_name for r in t.read(spark).collect()}
-    assert state == {1: "AirA", 2: "AirB", 3: "AirC"}
-
-
-def test_in_batch_duplicate_keys_deduped_deterministically(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "dim"))
-    t.upsert(spark, _dim(spark, [(1, "Zeta"), (1, "Alpha"), (1, "Mid")]),
-             "airline_id")
-    rows = t.read(spark).collect()
-    assert len(rows) == 1
-    assert rows[0].airline_name == "Alpha"  # min-struct, order-free
-
-
-def test_interleaved_upserts_do_not_duplicate_keys(spark, tmp_path):
-    """Writer B reads the base, writer A commits in between, writer B must
-    conflict, rebase onto A's state, and retry — no duplicated keys, no
-    lost updates, and insert-if-new still honors A's earlier write."""
-    t = SnapshotTable(str(tmp_path / "dim"))
-    t.upsert(spark, _dim(spark, [(1, "AirA")]), "airline_id")
-
-    def concurrent_writer_a():
-        # interleaves exactly between B's read and B's commit; key 2 and
-        # the shared key 3 are committed by A first
-        t.upsert(spark, _dim(spark, [(2, "AirB-from-A"), (3, "Shared-from-A")]),
-                 "airline_id")
-
-    v = t.upsert(
-        spark,
-        _dim(spark, [(3, "Shared-from-B"), (4, "AirD")]),
-        "airline_id",
-        _test_between_read_and_commit=concurrent_writer_a,
-    )
-    assert v == 3  # base was 1, A took 2, B rebased onto 2 and committed 3
-
-    state = t.read(spark)
-    assert state.count() == state.select("airline_id").distinct().count()
-    by_key = {r.airline_id: r.airline_name for r in state.collect()}
-    # A won key 3 (committed first); B's rebase must not clobber it
-    assert by_key == {1: "AirA", 2: "AirB-from-A", 3: "Shared-from-A", 4: "AirD"}
-
-
-def test_reader_never_sees_uncommitted_snapshot(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "dim"))
-    t.upsert(spark, _dim(spark, [(1, "AirA")]), "airline_id")
-    # a crashed writer: snapshot data written, marker never created
-    orphan = _dim(spark, [(99, "Ghost")])
-    orphan.write.parquet(str(tmp_path / "dim" / "data" / "deadbeef"))
-    assert t.latest_version() == 1
-    assert [r.airline_id for r in t.read(spark).collect()] == [1]
-
-
-def test_commit_conflict_exhausts_retries(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "dim"))
-    t.upsert(spark, _dim(spark, [(1, "AirA")]), "airline_id")
-
-    class AlwaysConflict(SnapshotTable):
-        def _try_commit(self, df, version):
-            raise CommitConflict("forced")
-
-    t2 = AlwaysConflict(str(tmp_path / "dim"))
-    with pytest.raises(CommitConflict, match="gave up"):
-        t2.upsert(spark, _dim(spark, [(5, "AirE")]), "airline_id",
-                  max_retries=2)
-
-
-def test_scd2_apply_composes_with_snapshot_commit(spark, tmp_path):
-    """The protocol is apply-agnostic: plugging scd2_upsert in gives a
-    transactional SCD2 dimension."""
-    from airflow_project_flight_price_analysis_spark.operators.scd import (
-        OPEN_END,
-        scd2_upsert,
-    )
-
-    t = SnapshotTable(str(tmp_path / "scd"))
-    init = spark.createDataFrame(
-        [(1, "AirA", "2024-01-01", OPEN_END)],
-        "airline_id int, airline_name string, valid_from string, valid_to string",
-    )
-    t.upsert(spark, init, "airline_id", apply=lambda cur, upd: upd)
-
-    updates = spark.createDataFrame(
-        [(1, "AirA-renamed")], "airline_id int, airline_name string")
-    t.upsert(
-        spark, updates, "airline_id",
-        apply=lambda cur, upd: scd2_upsert(
-            cur, upd, "airline_id", ["airline_name"], "2024-06-01"),
-    )
-    live = t.read(spark).filter(F.col("valid_to") == OPEN_END).collect()
-    assert len(live) == 1 and live[0].airline_name == "AirA-renamed"
-    closed = t.read(spark).filter(F.col("valid_to") == "2024-06-01").collect()
-    assert len(closed) == 1 and closed[0].airline_name == "AirA"
-
-
-def test_streaming_dim_upsert_epoch_replay_is_idempotent(spark, tmp_path):
-    """X7 × D5: a replayed foreachBatch epoch (at-least-once delivery)
-    must not duplicate dimension keys — insert-if-new + snapshot commit
-    makes the replay an empty diff."""
-    from airflow_project_flight_price_analysis_spark.streaming.dim_upsert import (
-        make_dim_upsert_sink,
-    )
-
-    root = str(tmp_path / "dim")
-    sink = make_dim_upsert_sink(root, "airline_id")
-    batch1 = _dim(spark, [(1, "AirA"), (2, "AirB")])
-    sink(batch1, 0)
-    sink(batch1, 0)  # crash-replay of the same epoch
-    sink(_dim(spark, [(2, "Renamed"), (3, "AirC")]), 1)
-
-    t = SnapshotTable(root)
-    state = {r.airline_id: r.airline_name for r in t.read(spark).collect()}
-    assert state == {1: "AirA", 2: "AirB", 3: "AirC"}
-    # the replay still committed (empty diff) — version advanced per call
-    assert t.latest_version() == 3
-
-
-def test_streaming_dim_upsert_end_to_end(spark, tmp_path):
-    """Real readStream → foreachBatch → SnapshotTable wiring."""
-    from airflow_project_flight_price_analysis_spark.streaming.dim_upsert import (
-        start_dim_stream,
-    )
-
-    src_dir = str(tmp_path / "landing")
-    _dim(spark, [(1, "AirA"), (2, "AirB"), (2, "AirB")]).write.parquet(src_dir)
-    source = spark.readStream.schema(
-        "airline_id int, airline_name string").parquet(src_dir)
-    q = start_dim_stream(source, str(tmp_path / "dim"), "airline_id",
-                         str(tmp_path / "ckpt"))
-    assert q.awaitTermination(120)  # False = timed out
-
-    state = SnapshotTable(str(tmp_path / "dim")).read(spark)
-    assert state.count() == 2
-    assert state.select("airline_id").distinct().count() == 2
-
-
-def test_upsert_null_key_inserts_once(spark, tmp_path):
-    """A NULL-key row must behave like any other key: inserted once,
-    then recognized as existing by the null-safe check — not re-inserted
-    on every subsequent upsert (the r5 ADVICE anti-join bug class)."""
-    from airflow_project_flight_price_analysis_spark.operators.transactional import (
-        SnapshotTable,
-    )
-
-    t = SnapshotTable(str(tmp_path / "tbl"))
-    upd = spark.createDataFrame([(None, "x"), (1, "a")], "k int, v string")
-    t.upsert(spark, upd, key="k")
-    t.upsert(spark, upd, key="k")
-    rows = t.read(spark).collect()
-    assert len(rows) == 2
-    got = sorted(
-        [(r.k, r.v) for r in rows], key=lambda p: (p[0] is None, p)
-    )
-    assert got == [(1, "a"), (None, "x")]
 
 
 # --- BucketedMergeTable: bucket-granular copy-on-write MERGE (r7) ----------
 
 def _bm(tmp_path, n_buckets=8):
-    from airflow_project_flight_price_analysis_spark.operators.transactional import (
-        BucketedMergeTable,
-    )
-
     return BucketedMergeTable(str(tmp_path / "bm"), "k", n_buckets=n_buckets)
 
 
@@ -266,6 +96,69 @@ def test_merge_time_travel_and_empty_delete(spark, tmp_path):
     assert _rows(t, spark) == []                      # emptied
     old = t.read(spark, version=1)
     assert sorted((r.k, r.v) for r in old.collect()) == [(1, "a"), (2, "b")]
+
+
+def test_in_batch_duplicate_keys_deduped_deterministically(spark, tmp_path):
+    t = _bm(tmp_path)
+    t.merge(spark, spark.createDataFrame(
+        [(1, "Zeta"), (1, "Alpha"), (1, "Mid")], "k long, v string"))
+    assert _rows(t, spark) == [(1, "Alpha")]  # min-struct, order-free
+
+
+def test_interleaved_upserts_do_not_duplicate_keys(spark, tmp_path):
+    """Writer B reads the base, writer A commits in between touching a key
+    B also merges; B must conflict, rebase onto A's state and retry — the
+    shared key lands once, with B's later value, and A's other write
+    survives."""
+    t = _bm(tmp_path)
+    t.merge(spark, spark.createDataFrame([(1, "a")], "k long, v string"))
+
+    def concurrent_writer_a():
+        _bm(tmp_path).merge(spark, spark.createDataFrame(
+            [(2, "b-from-A"), (3, "shared-from-A")], "k long, v string"))
+
+    v = t.merge(
+        spark,
+        spark.createDataFrame([(3, "shared-from-B"), (4, "d")],
+                              "k long, v string"),
+        _test_between_read_and_commit=concurrent_writer_a,
+    )
+    assert v == 3  # base was 1, A took 2, B rebased onto 2 and committed 3
+    assert _rows(t, spark) == [
+        (1, "a"), (2, "b-from-A"), (3, "shared-from-B"), (4, "d")]
+
+
+def test_reader_never_sees_uncommitted_snapshot(spark, tmp_path):
+    """A crashed writer leaves snapshot data and a manifest but never
+    links its commit marker: readers keep seeing the last commit."""
+    import json
+    import os
+
+    t = _bm(tmp_path, n_buckets=4)
+    t.merge(spark, spark.createDataFrame([(1, "a")], "k long, v string"))
+    ghost = os.path.join("data", "deadbeef", "__bucket=0")
+    spark.createDataFrame([(99, "ghost")], "k long, v string").write.parquet(
+        os.path.join(t.root, ghost))
+    with open(os.path.join(t.root, "manifests", "deadbeef.json"), "w",
+              encoding="utf-8") as f:
+        json.dump({"0": ghost}, f)
+    assert t.latest_version() == 1
+    assert _rows(t, spark) == [(1, "a")]
+
+
+def test_commit_conflict_exhausts_retries(spark, tmp_path):
+    t = _bm(tmp_path)
+    t.merge(spark, spark.createDataFrame([(1, "a")], "k long, v string"))
+
+    class AlwaysConflict(BucketedMergeTable):
+        def _try_commit(self, manifest, version):
+            raise CommitConflict("forced")
+
+    t2 = AlwaysConflict(t.root)
+    with pytest.raises(CommitConflict, match="gave up"):
+        t2.merge(spark, spark.createDataFrame([(5, "e")], "k long, v string"),
+                 max_retries=2)
+    assert t.latest_version() == 1
 
 
 def test_merge_null_key_is_null_safe(spark, tmp_path):

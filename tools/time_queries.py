@@ -1,6 +1,7 @@
 """Standalone A/B timing for named queries: median of N noop-sink runs
-(same methodology as bench.py — sf0.001 warm-up, clearCache between
-iters, builder timed separately).
+through bench.py's own per-query measurement (sf0.001 warm-up,
+clearCache between iters, builder timed separately, one GC and settle
+per query).
 
 Usage: python tools/time_queries.py <iters> <name> [<name> ...]
 """
@@ -11,12 +12,12 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from airflow_project_flight_price_analysis_spark.plans import all_queries  # noqa: E402
 from airflow_project_flight_price_analysis_spark.session import get_spark  # noqa: E402
+from bench import measure  # noqa: E402
 
 
 def main() -> None:
@@ -31,17 +32,7 @@ def main() -> None:
             "noop").save()
     out = {}
     for name in names:
-        samples, bsamples = [], []
-        for _ in range(iters):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            bsamples.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            samples.append(time.perf_counter() - t0)
-            spark._jvm.System.gc()
-            time.sleep(0.3)
+        samples, bsamples = measure(spark, queries[name], sf_dir, iters)
         out[name] = {
             "run_median": round(statistics.median(samples), 3),
             "runs": [round(s, 3) for s in samples],
