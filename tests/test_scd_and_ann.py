@@ -80,6 +80,20 @@ def test_band_geometry_is_validated(spark):
                               num_hashes=16, num_bands=8)
 
 
+def test_exact_dedup_is_not_separator_injectable(spark):
+    """('x|y','z') and ('x','y|z') concatenate identically under plain
+    concat_ws — the length-prefixed encoding must keep them distinct, so
+    an exact dedup on the row hash keeps both rows."""
+    from airflow_project_flight_price_analysis_spark.functions.cleaning import (
+        row_hash_expr,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "x|y", "z"), (2, "x", "y|z")], "id long, a string, b string")
+    hashed = df.withColumn("row_hash", row_hash_expr(["a", "b"]))
+    assert hashed.dropDuplicates(["row_hash"]).count() == 2
+
+
 def test_stratified_sample_keeps_null_stratum(spark):
     from airflow_project_flight_price_analysis_spark.operators.sampling import (
         stratified_threshold_sample,
