@@ -1,17 +1,14 @@
 """Table-maintenance job — the scheduled housekeeping pass a long-lived
-lake needs (the orchestrator schedules it off-peak, like the reference
-schedules its pipeline DAG daily — ``dags/flight_pipeline_dag.py:21-26``).
+lake needs. The pipeline DAG (``orchestration/flight_pipeline_dag.py``)
+runs ``compact`` on bronze once a week, after that day's pipeline run,
+so no append can land between the compaction's listing and its swap.
 
-Three maintenance families, each a first-class operator elsewhere in the
+Two maintenance families, each a first-class operator elsewhere in the
 engine, wired here into one spark-submit entry point:
 
 - ``compact``     small-file compaction of a parquet directory
                   (operators/compaction.py — size-targeted rewrite to a
                   NEW directory; the caller swaps atomically)
-- ``ledger``      streaming near-dup signature-ledger epoch folding
-                  (streaming/neardup.py::compact_sig_ledger — collapse
-                  epochs <= K into one base partition; screens of all
-                  future epochs are provably unchanged)
 - ``vacuum``      orphan-snapshot removal for BucketedMergeTable roots
                   (operators/transactional.py — losing optimistic
                   writers leak uuid dirs; never run under a live writer)
@@ -19,8 +16,6 @@ engine, wired here into one spark-submit entry point:
 Usage:
     python -m airflow_project_flight_price_analysis_spark.jobs.maintenance \
         compact --path /wh/bronze --out /wh/bronze_c [--target-mb 128]
-    python -m ... maintenance ledger --path /wh/sig_ledger \
-        --out /wh/sig_ledger_c --upto-epoch 41
     python -m ... maintenance vacuum --root /wh/merge_table
     # (key/n_buckets are adopted from the root's table_properties.json;
     #  only a legacy pre-properties root needs BOTH --key and
@@ -46,22 +41,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--path", required=True)
     c.add_argument("--out", required=True)
     c.add_argument("--target-mb", type=int, default=128)
-    c.add_argument("--no-shuffle", action="store_true",
-                   help="coalesce instead of repartition (uneven files)")
-
-    led = sub.add_parser("ledger", help="near-dup sig-ledger epoch folding")
-    led.add_argument("--path", required=True)
-    led.add_argument("--out", required=True)
-    led.add_argument("--checkpoint", required=True,
-                     help="the stream's checkpoint dir — the fold bound "
-                          "is DERIVED from (or validated against) its "
-                          "last committed epoch; never trust a manual "
-                          "number")
-    led.add_argument("--upto-epoch", type=int, default=None,
-                     help="fold epochs <= this (default: the "
-                          "checkpoint's last committed epoch; values "
-                          "above it are rejected)")
-    led.add_argument("--target-mb", type=int, default=128)
 
     v = sub.add_parser("vacuum", help="merge-table orphan removal")
     v.add_argument("--root", required=True)
@@ -105,32 +84,12 @@ def main(argv: list[str] | None = None) -> int:
         removed = t.vacuum()
         report.update(root=args.root, removed=len(removed))
     else:
+        from ..operators.compaction import compact_parquet
+
         spark = get_spark(app_name=f"fpa-maintenance-{args.cmd}")
-        target = args.target_mb * 1024 * 1024
-        if args.cmd == "compact":
-            from ..operators.compaction import compact_parquet
-
-            n = compact_parquet(spark, args.path, args.out,
-                                target_file_bytes=target,
-                                shuffle=not args.no_shuffle)
-            report.update(path=args.path, out=args.out, files=n)
-        else:
-            from ..streaming.coherence import last_committed_epoch
-            from ..streaming.neardup import compact_sig_ledger
-
-            upto = args.upto_epoch
-            if upto is None:
-                upto = last_committed_epoch(args.checkpoint)
-                if upto is None:
-                    print("error: checkpoint has no committed epochs — "
-                          "nothing to fold", file=sys.stderr)
-                    return 2
-            n = compact_sig_ledger(spark, args.path, args.out,
-                                   upto_epoch=upto,
-                                   target_file_bytes=target,
-                                   checkpoint_dir=args.checkpoint)
-            report.update(path=args.path, out=args.out,
-                          upto_epoch=upto, base_files=n)
+        n = compact_parquet(spark, args.path, args.out,
+                            target_file_bytes=args.target_mb * 1024 * 1024)
+        report.update(path=args.path, out=args.out, files=n)
 
     json.dump(report, sys.stdout)
     print()

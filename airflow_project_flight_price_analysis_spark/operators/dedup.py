@@ -9,7 +9,9 @@ normalized-content fingerprint inside ``jobs/corpus_pipeline.py``.
 Scale posture:
 - MinHash/LSH: banding turns O(n²) pair generation into an equi-join on
   (band, bucket-signature) — the shuffle key is the band hash, so skew is
-  bounded by band-bucket size, not corpus size.
+  bounded by band-bucket size, not corpus size. The same banding screens
+  new documents against stored corpus signatures
+  (``screen_against_ledger``) without re-sketching the corpus.
 - SimHash: 64-bit signature per doc from token-hash bit votes; candidate
   pairs via banded equi-join on signature quarters (Hamming ≤ k guarantees
   one exact quarter match for k ≤ 3 — pigeonhole).
@@ -171,32 +173,68 @@ def minhash_neardup_pairs(df: DataFrame, text_col: str, id_col: str,
         .transform(track_persist)
     banded = _banded(sigs, num_bands)
     a, b = banded.alias("a"), banded.alias("b")
-    est = (
-        F.aggregate(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0), lambda acc, v: acc + v,
-        ) / F.lit(num_hashes)
-    )
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.bucket") == F.col("b.bucket"))
                & (F.col("a.id") < F.col("b.id")))
         .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"),
                 F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"))
-        .withColumn("est_jaccard", est)
+        .withColumn("est_jaccard", _est_jaccard(num_hashes))
         .filter(F.col("est_jaccard") >= threshold)
         .select("a", "b", F.round("est_jaccard", 6).alias("est_jaccard"))
         .distinct()
     )
 
 
-def minhash_dedup(df: DataFrame, text_col: str, id_col: str, **kw) -> DataFrame:
-    """Near-dedup: drop the higher-id member of every near-dup pair
-    (greedy keep-first; a full transitive closure needs iterative
-    connected components — documented scale trade-off)."""
-    pairs = minhash_neardup_pairs(df, text_col, id_col, **kw)
-    drop_ids = pairs.select(F.col("b").alias(id_col)).distinct()
-    return df.join(drop_ids, id_col, "left_anti")
+def _est_jaccard(num_hashes: int) -> Column:
+    """Estimated Jaccard of the ``sig_a``/``sig_b`` columns: the
+    fraction of matching minhashes."""
+    return (
+        F.aggregate(
+            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
+            F.lit(0), lambda acc, v: acc + v,
+        ) / F.lit(num_hashes)
+    )
+
+
+def screen_against_ledger(new_sigs: DataFrame, ledger_sigs: DataFrame,
+                          *, threshold: float = 0.7,
+                          num_hashes: int = 32,
+                          num_bands: int = 8) -> DataFrame:
+    """(id, matched_id, est_jaccard) for every new document whose
+    estimated Jaccard against SOME ledger document clears the
+    threshold — the incremental question "which NEW documents are
+    near-duplicates of the corpus", answered without re-sketching the
+    corpus: only ``new_sigs`` need computing, ``ledger_sigs`` are the
+    stored corpus signatures. One row per flagged new id (best match:
+    max estimate, min matched_id as the deterministic tie-break).
+
+    Band-bucket equi-join (per-bucket joins; the |new| × |ledger| pair
+    space never materializes), then est-Jaccard verify."""
+    require_band_geometry(num_hashes, num_bands)
+    p = _banded(new_sigs, num_bands).alias("p")
+    x = _banded(ledger_sigs.select("id", "sig"), num_bands).alias("x")
+    cands = (
+        p.join(x, (F.col("p.band") == F.col("x.band"))
+               & (F.col("p.bucket") == F.col("x.bucket")))
+        .select(F.col("p.id").alias("id"), F.col("x.id").alias("cand_id"),
+                F.col("p.sig").alias("sig_a"), F.col("x.sig").alias("sig_b"))
+        .distinct()
+        .withColumn("est_jaccard", _est_jaccard(num_hashes))
+        .filter(F.col("est_jaccard") >= threshold)
+    )
+    best = F.struct(
+        F.col("est_jaccard"), (-F.col("cand_id")).alias("neg_id")
+    )
+    return (
+        cands.groupBy("id")
+        .agg(F.max(best).alias("b"))
+        .select(
+            "id",
+            (-F.col("b.neg_id")).cast("bigint").alias("matched_id"),
+            F.round("b.est_jaccard", 6).alias("est_jaccard"),
+        )
+    )
 
 
 # --------------------------------------------------------------------------

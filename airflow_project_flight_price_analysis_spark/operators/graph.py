@@ -1,6 +1,7 @@
 """Distributed connected components — transitive closure for near-dup
-groups (completes operators/dedup.minhash_dedup, whose greedy pair-drop
-is documented as an approximation of the true duplicate clusters).
+groups: the pairs ``operators/dedup.py::minhash_neardup_pairs`` finds
+become exact duplicate clusters (``dedup_transitive``), not a greedy
+pair-drop that only approximates them.
 
 Algorithm: HYBRID (introsort-style). Phase 1 runs a few rounds of
 min-label propagation — the cheapest possible round (one edge⋈labels
@@ -216,13 +217,14 @@ def neardup_clusters(df: DataFrame, pairs: DataFrame, id_col: str,
                      propagate_rounds: int = 4) -> DataFrame:
     """Assign every row its duplicate-cluster id: the min id of its
     connected component in the near-dup pair graph; singletons (no pair)
-    are their own cluster. Exact transitive semantics — the closure the
-    greedy ``minhash_dedup`` approximates. ``propagate_rounds`` forwards
-    to :func:`connected_components` — callers whose graphs are known to
-    have moderate diameter (e.g. x96's adjective-variant chains, ~8-10)
-    can buy convergence inside the cheap propagation phase instead of
-    paying the star-contraction setup; exactness is unaffected either
-    way (phase 2 remains the fallback)."""
+    are their own cluster. Exact transitive semantics — the closure a
+    greedy drop-one-of-each-pair rule only approximates.
+    ``propagate_rounds`` forwards to :func:`connected_components` —
+    callers whose graphs are known to have moderate diameter (e.g. x96's
+    adjective-variant chains, ~8-10) can buy convergence inside the
+    cheap propagation phase instead of paying the star-contraction
+    setup; exactness is unaffected either way (phase 2 remains the
+    fallback)."""
     comp = connected_components(pairs, src, dst,
                                 propagate_rounds=propagate_rounds)
     return (

@@ -31,6 +31,7 @@ from ..functions.cleaning import (
     row_hash_expr,
     surrogate_key_expr,
 )
+from ..session import hadoop_fs
 
 BRONZE_COLS = [
     "airline", "source_code", "source_name", "destination_code",
@@ -82,9 +83,8 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     """Ask the path's file system whether ``path`` exists. A check up
     front, not a caught read failure: the session's Observation listener
     re-analyzes a failed read and logs its stack trace as an ERROR."""
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsparkSession.sessionState().newHadoopConf()
-    return jpath.getFileSystem(conf).exists(jpath)
+    fs, jpath = hadoop_fs(spark, path)
+    return fs.exists(jpath)
 
 
 def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame | None:
@@ -110,8 +110,9 @@ def ingest_increment(
     window between the bronze append and the ledger append means the
     next run re-appends those rows (their hashes never made the ledger).
     Such replays leave content-identical rows, removable with a
-    full-row distinct; exactly-once needs an epoch-keyed overwrite sink,
-    as ``streaming/neardup.py`` writes its ledger.
+    full-row distinct; exactly-once needs the bronze rows and their
+    ledger hashes committed as one unit, as the versioned watermark of
+    ``streaming/sketches.py::fold_stream`` commits a fold.
 
     Returns the number of newly ingested rows.
     """

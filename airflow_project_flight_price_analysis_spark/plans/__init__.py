@@ -64,10 +64,10 @@ _BUDGET_OVERFLOW_OK: tuple[str, ...] = ()
 _CERT_FAMILIES: tuple[tuple[str, ...], ...] = (
     # containment operator: auto crossover path + forced prefix path
     ("x67_containment_pairs", "x67b_containment_prefix"),
-    # parquet/catalog sink round-trip harness (S7/S8/S9 + MERGE + fold
-    # all write, re-read, and compare through the same scratch kit)
+    # parquet/catalog sink round-trip harness (S7/S8/S9 + MERGE all
+    # write, re-read, and compare through the same scratch kit)
     ("q70_sink_roundtrip", "q74_catalog_roundtrip",
-     "q86_merge_roundtrip", "x109_ledger_compaction_fold",
+     "q86_merge_roundtrip",
      # q87 (r13): snapshot_diff rides the same BucketedMergeTable
      # scratch harness as q86, one MERGE-DELETE version further
      "q87_snapshot_diff"),

@@ -1,6 +1,6 @@
 """Shared scratch-directory resolution for filesystem-roundtrip faces.
 
-The sink/merge/ledger roundtrip queries (q70, q86, x109) need a real
+The sink/merge roundtrip queries (q70, q86) need a real
 on-disk path that (a) survives outside any test tmpdir so the driver
 gate and bench can run them, (b) is keyed by sf so gate and bench runs
 never collide, and (c) is gitignored. One resolver instead of three

@@ -2388,17 +2388,16 @@ QUERIES.update({"x101_zorder_profile": x101_zorder_profile})
 ORACLE.update({"x101_zorder_profile": _z_oracle_sql()})
 
 
-# --- incremental near-dup certification (streaming/neardup.py twin) ---------
+# --- incremental near-dup certification (dedup.screen_against_ledger) ------
 
 def x102_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental (epoch-vs-corpus) MinHash screening with in-engine
-    accuracy certification — the batch twin of
-    ``streaming/neardup.py``, driver-value-checked like x08.
+    """Incremental (batch-vs-corpus) MinHash screening with in-engine
+    accuracy certification of ``operators/dedup.py::screen_against_ledger``,
+    driver-value-checked like x08.
 
     The documents table plays two epochs: even doc_ids are the
     already-ingested corpus (the signature ledger), odd doc_ids the
-    arriving batch. ``screen_against_ledger`` — the exact code the
-    streaming sink runs per micro-batch — flags batch docs whose
+    arriving batch. ``screen_against_ledger`` flags batch docs whose
     banded-LSH + est-Jaccard match clears 0.5. Certification against
     the exact cross-epoch truth: UNBLOCKED 3-gram Jaccard ≥ 0.5,
     independently computable by DuckDB. Unblocked matters — the screen
@@ -2422,11 +2421,10 @@ def x102_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both sides consume one shared persisted grams table; the corpus is
     sketched here only because the certification needs its signatures —
-    the streaming path reads them from the ledger (never re-sketched).
+    an ingest path would read them from its stored ledger.
     """
     from ..cache import track_persist
-    from ..operators.dedup import minhash_signatures, ngram_jaccard_pairs
-    from ..streaming.neardup import screen_against_ledger
+    from ..operators.dedup import minhash_signatures, screen_against_ledger
 
     docs = load_table(spark, sf_dir, "documents")
     # constant block = unblocked truth (the certification harness is
@@ -2957,129 +2955,6 @@ ORACLE.update({
         FROM per
         GROUP BY n_in
         ORDER BY src_n_samples
-    """,
-})
-
-
-def x109_ledger_compaction_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver face of ``compact_sig_ledger`` (r7 verdict item 6): fold
-    the streaming near-dup signature ledger's history and certify —
-    with the REAL operator on REAL parquet — that a future epoch's
-    screen is bit-identical against the original and the compacted
-    ledger (the operator's one correctness obligation: the screen reads
-    ``epoch_id < current``, so collapsing history onto the max folded
-    epoch must preserve every future epoch's visible signature set).
-
-    The documents table plays three epochs (doc_id % 3): epochs 0–1 are
-    the ingested corpus whose signatures land in a ledger written
-    exactly as the sink writes it (partitioned by epoch_id), epoch 2 is
-    the future batch screened against BOTH ledgers. x102-style capped
-    certification (banding counts aren't oracle-computable; the
-    equivalence and fold-shape claims are pinned as oracle-TRUE booleans
-    next to two REAL value anchors):
-
-    - ``n_corpus_docs`` / ``n_batch_docs`` — real value checks (the
-      epoch split itself);
-    - ``fold_equivalent`` — TRUE iff the two screens' flag sets
-      (id, matched_id) are identical (symmetric difference empty);
-    - ``base_epoch_folded`` — TRUE iff the compacted ledger holds the
-      SAME number of signatures with all folded history stamped onto
-      exactly the fold bound (epoch 1);
-    - ``screen_nonvacuous`` — TRUE iff the screen flagged at least one
-      batch doc (the corpus's planted cross-epoch near-dup twins make
-      an empty flag set a bug, not a quiet pass).
-
-    Scale shape: the fold reads each epoch partition once and writes
-    one size-targeted base partition; the screens are the x102 banded
-    bucket joins. Scratch parquet lives under the repo's gitignored
-    ``.sink_roundtrip``, wiped per run (rerun-safe, like q70/q86).
-    """
-    import os
-    import shutil
-
-    from ..cache import track_persist
-    from ..operators.dedup import minhash_signatures
-    from ..streaming.neardup import (
-        compact_sig_ledger,
-        read_sig_ledger,
-        screen_against_ledger,
-    )
-    from ._scratch import scratch_dir
-
-    docs = load_table(spark, sf_dir, "documents")
-    # ONE sketch pass shared by the ledger write, the batch side of
-    # both screens, and the count aggregates — unpersisted, every
-    # consumer re-shingles and re-hashes the whole corpus (the
-    # dominant cost: measured ~1.5 s/pass at sf0.1, 4+ passes)
-    sigs = minhash_signatures(docs, "text", "doc_id").withColumn(
-        "epoch_id", (F.col("id") % 3).cast("bigint")
-    ).transform(track_persist)
-    root = scratch_dir("ledger_fold", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    ledger_p = os.path.join(root, "ledger")
-    compact_p = os.path.join(root, "ledger_compacted")
-    # cluster by epoch before the partitioned write (the q86/q87 r14
-    # small-files fix): one ledger file per epoch, not one per
-    # (task x epoch)
-    sigs.filter(F.col("epoch_id") < 2).repartition(2, "epoch_id") \
-        .write.partitionBy("epoch_id").parquet(ledger_p)
-    compact_sig_ledger(spark, ledger_p, compact_p, upto_epoch=1)
-
-    batch = sigs.filter(F.col("epoch_id") == 2).select("id", "sig")
-    led_a = read_sig_ledger(spark, ledger_p)
-    led_b = read_sig_ledger(spark, compact_p)
-    # both flag sets feed the symmetric difference TWICE (exceptAll in
-    # each direction) plus the nonvacuous count — persist, or each
-    # consumer re-runs the full LSH bucket join
-    fa = screen_against_ledger(batch, led_a, threshold=0.5) \
-        .select("id", "matched_id").transform(track_persist)
-    fb = screen_against_ledger(batch, led_b, threshold=0.5) \
-        .select("id", "matched_id").transform(track_persist)
-
-    n_diff = fa.exceptAll(fb).unionAll(fb.exceptAll(fa)) \
-        .agg(F.count("*").alias("__nd"))
-    n_fb = fb.agg(F.count("*").alias("__nf"))
-    led_stats = led_b.agg(
-        F.count("*").alias("__n_sigs_b"),
-        F.min("epoch_id").alias("__min_e"),
-        F.countDistinct("epoch_id").alias("__n_e"),
-    )
-    led_a_n = led_a.agg(F.count("*").alias("__n_sigs_a"))
-    counts = docs.agg(
-        F.sum((F.col("doc_id") % 3 < 2).cast("bigint"))
-        .alias("n_corpus_docs"),
-        F.sum((F.col("doc_id") % 3 == 2).cast("bigint"))
-        .alias("n_batch_docs"),
-    )
-    return (
-        counts.crossJoin(F.broadcast(n_diff))
-        .crossJoin(F.broadcast(n_fb))
-        .crossJoin(F.broadcast(led_stats))
-        .crossJoin(F.broadcast(led_a_n))
-        .select(
-            "n_corpus_docs",
-            "n_batch_docs",
-            (F.col("__nd") == 0).alias("fold_equivalent"),
-            ((F.col("__n_sigs_b") == F.col("__n_sigs_a"))
-             & (F.col("__min_e") == 1) & (F.col("__n_e") == 1))
-            .alias("base_epoch_folded"),
-            (F.col("__nf") >= 1).alias("screen_nonvacuous"),
-        )
-    )
-
-
-QUERIES.update({"x109_ledger_compaction_fold": x109_ledger_compaction_fold})
-
-ORACLE.update({
-    "x109_ledger_compaction_fold": """
-        SELECT CAST(SUM(CASE WHEN doc_id % 3 < 2 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_corpus_docs,
-               CAST(SUM(CASE WHEN doc_id % 3 = 2 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_batch_docs,
-               TRUE AS fold_equivalent,
-               TRUE AS base_epoch_folded,
-               TRUE AS screen_nonvacuous
-        FROM documents
     """,
 })
 

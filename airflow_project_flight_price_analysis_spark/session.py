@@ -52,6 +52,15 @@ def get_spark(
     return spark
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop ``FileSystem``, ``Path``) for ``path`` under the session's
+    Hadoop conf — one resolution rule for plain paths and URIs alike
+    (``file://``, ``s3a://``, ``hdfs://``)."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jpath.getFileSystem(conf), jpath
+
+
 def scale_out(df, *key_cols: str):
     """Widen an under-partitioned DataFrame to the cluster's parallelism
     before CPU-heavy per-row work (regex, hashing, pandas UDFs).

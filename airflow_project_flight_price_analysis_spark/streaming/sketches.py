@@ -28,7 +28,7 @@ were logged but whose commit never landed. KMV's union-merge absorbs a
 replay for free (idempotent), but count-min's ADDITIVE merge does not —
 an in-memory-only fold would double-count the replayed batch. The
 durable mode (``state_path``) applies the engine's exactly-once law
-(SURVEY §2.7, the streaming/neardup.py ledger discipline): the running
+(SURVEY §2.7): the running
 sketch is persisted as a versioned parquet table ``v=<batch_id>``
 whose version IS the folded-batch high-watermark, and the fold
 

@@ -120,15 +120,13 @@ HEADLINE = [
     "x103_wav_decode_stats",
     "x104_cdc_span_dedup",
     # round-8: the r7 library operators' new driver faces carry perf
-    # accountability from day one — the two filesystem-roundtrip faces
-    # (q86 MERGE, x109 ledger fold: real parquet writes + the x102
-    # banded screens) and the three sampling faces (map-side hash
-    # filters + one clustered sort for the shuffle)
+    # accountability from day one — the filesystem-roundtrip face
+    # (q86 MERGE: real parquet writes) and the three sampling faces
+    # (map-side hash filters + one clustered sort for the shuffle)
     "x106_epoch_shuffle_shards",
     "x107_temperature_mixture",
     "x108_stratified_threshold",
     "q86_merge_roundtrip",
-    "x109_ledger_compaction_fold",
     # round-9: the new faces carry perf accountability from day one —
     # the exact global packer (two-phase prefix scan + segment explode)
     # and the applyInPandasWithState running totals (per-micro-batch
@@ -265,7 +263,7 @@ def measure(spark, build, sf_dir: str,
     and runs it into the noop sink. The builder is timed SEPARATELY:
     most builders are pure plan construction (~0.5 s of Catalyst/py4j),
     but the iterative/roundtrip operators (x96's ER closure, x21's
-    cluster propagation, q86/x109's real parquet writes, x111's
+    cluster propagation, q86's real parquet writes, x111's
     availableNow stream) execute genuine engine work eagerly during
     build — folding it into the run timing would break every prior
     round's comparability, hiding it entirely would misdirect perf

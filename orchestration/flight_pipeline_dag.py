@@ -6,6 +6,13 @@ Mirrors the reference DAG structure (``dags/flight_pipeline_dag.py``):
 - readiness sensors before work                          (:30-46)
 - linear deps sensors >> ingest >> transform >> validate (:68)
 
+One linear DAG, one run at a time (``max_active_runs=1``): the weekly
+bronze compaction and its swap run downstream of the pipeline, behind a
+weekly gate. As a separately scheduled DAG it could list bronze while a
+pipeline run appended to it, and the swap would move those rows into
+``bronze_flights.old`` — their hashes already in the ledger, so no
+later run re-ingests them and the fact silently omits them.
+
 Differences by design:
 - Task bodies are ``spark-submit`` invocations of
   ``airflow_project_flight_price_analysis_spark.jobs.flight_pipeline``
@@ -29,6 +36,7 @@ from datetime import datetime, timedelta
 try:
     from airflow import DAG
     from airflow.operators.bash import BashOperator
+    from airflow.operators.python import ShortCircuitOperator
     from airflow.sensors.python import PythonSensor
 
     HAVE_AIRFLOW = True
@@ -45,6 +53,9 @@ PY_FILES = os.environ.get(
     "FPA_PY_FILES", os.path.join(os.path.dirname(__file__), "fpa_package.zip")
 )
 LAUNCHER = os.path.join(os.path.dirname(__file__), "launch_flight_pipeline.py")
+MAINT_LAUNCHER = os.path.join(
+    os.path.dirname(__file__), "launch_maintenance.py"
+)
 
 PIPELINE_CMD = (
     f"{SPARK_SUBMIT} --deploy-mode cluster "
@@ -54,10 +65,66 @@ PIPELINE_CMD = (
 )
 
 
+def _maint_cmd(args: str) -> str:
+    return (
+        f"{SPARK_SUBMIT} --deploy-mode cluster "
+        f"--py-files {PY_FILES} {MAINT_LAUNCHER} {args}"
+    )
+
+
 def _warehouse_ready() -> bool:
     """Readiness probe (reference: SqlSensor SELECT 1, poke 10s/timeout
     600s, flight_pipeline_dag.py:30-46). Here: storage reachable."""
     return os.path.isdir(os.path.dirname(WAREHOUSE)) or WAREHOUSE.startswith("s3://")
+
+
+def _compaction_due(data_interval_end, **_) -> bool:
+    """Weekly gate: compact after the run that ends on a Sunday (the
+    slot the @weekly preset fires at). Other days skip compaction and
+    the swap."""
+    return data_interval_end.weekday() == 6
+
+
+def _swap(src: str) -> str:
+    # Rerun-safe at EVERY crash point, not just after complete
+    # success (r7 ADVICE + r8 review):
+    # - outer guard on the staged .compact: a retry after the
+    #   swap already completed (or where compaction never
+    #   produced output) is a no-op instead of deleting the
+    #   rollback and mv-ing the LIVE table away with nothing to
+    #   replace it;
+    # - the rollback rotation (drop last week's .old, move the
+    #   live table to .old) is additionally guarded on the live
+    #   table existing: a retry after a crash BETWEEN the two
+    #   mv steps (X already at X.old, X.compact still staged)
+    #   skips straight to publishing X.compact and PRESERVES
+    #   the rollback — the unguarded form re-ran `rm -rf
+    #   {src}.old` first, destroying the only pre-compaction
+    #   copy and then failing forever at `mv {src}`.
+    # Plain `mv X X.old` against an existing .old would NEST
+    # and fail by week 3, hence the rm inside the inner guard.
+    # Object stores flip a manifest/pointer instead of renames.
+    # The no-.compact branch distinguishes 'already swapped'
+    # (live table present — a benign retry) from 'nothing ever
+    # staged' (NEITHER present — no state a completed swap can
+    # leave, so a compaction that silently produced no output
+    # fails HERE instead of being masked by a green no-op; r8
+    # ADVICE).
+    return (
+        f"if [ -d {src}.compact ]; then "
+        f"if [ -d {src} ]; then "
+        f"rm -rf {src}.old && mv {src} {src}.old; "
+        f"fi && "
+        f"mv {src}.compact {src}; "
+        f"elif [ -d {src} ]; then "
+        f"echo 'swap: {src} already live, no staged .compact "
+        f"(retry no-op)'; "
+        f"else "
+        f"echo 'swap: neither {src}.compact nor {src} exists "
+        f"— upstream compaction produced no output' >&2; "
+        f"exit 1; "
+        f"fi"
+    )
 
 
 if HAVE_AIRFLOW:
@@ -71,6 +138,7 @@ if HAVE_AIRFLOW:
         schedule="@daily",                 # :25
         catchup=False,                     # :26
         start_date=datetime(2026, 1, 1),
+        max_active_runs=1,
         default_args=default_args,
     ) as dag:
         wait_for_storage = PythonSensor(
@@ -87,37 +155,13 @@ if HAVE_AIRFLOW:
             bash_command=PIPELINE_CMD,
         )
 
-        wait_for_storage >> run_pipeline   # :68 (linear deps)
+        weekly_gate = ShortCircuitOperator(
+            task_id="weekly_compaction_gate",
+            python_callable=_compaction_due,
+        )
 
-
-# --- maintenance DAG (r7): off-peak housekeeping ---------------------------
-# Weekly table maintenance the pipeline DAG shouldn't block on: parquet
-# small-file compaction of bronze, near-dup signature-ledger epoch
-# folding, and merge-table orphan vacuum — one spark-submit of
-# jobs/maintenance.py per family. Compaction/folding write NEW
-# directories; the final task swaps them in (mv is atomic on the same
-# filesystem; object stores use a manifest/pointer flip instead).
-
-MAINT_LAUNCHER = os.path.join(
-    os.path.dirname(__file__), "launch_maintenance.py"
-)
-
-
-def _maint_cmd(args: str) -> str:
-    return (
-        f"{SPARK_SUBMIT} --deploy-mode cluster "
-        f"--py-files {PY_FILES} {MAINT_LAUNCHER} {args}"
-    )
-
-
-if HAVE_AIRFLOW:
-    with DAG(
-        dag_id="flight_price_maintenance_spark",
-        schedule="@weekly",
-        catchup=False,
-        start_date=datetime(2026, 1, 1),
-        default_args=default_args,
-    ) as maintenance_dag:
+        # small-file compaction writes a NEW directory; the swap then
+        # publishes it (mv is atomic on the same filesystem)
         compact_bronze = BashOperator(
             task_id="compact_bronze",
             bash_command=_maint_cmd(
@@ -125,66 +169,12 @@ if HAVE_AIRFLOW:
                 f"--out {WAREHOUSE}/bronze_flights.compact --target-mb 128"
             ),
         )
-        fold_sig_ledger = BashOperator(
-            task_id="fold_sig_ledger",
-            # the fold bound is DERIVED inside the job from the stream's
-            # checkpoint (last committed epoch) and values beyond it are
-            # rejected — never a hand-maintained Variable (r7 review:
-            # the old var-templated form defaulted to 0, a weekly no-op
-            # rewrite, and accepted unsafe values)
-            bash_command=_maint_cmd(
-                f"ledger --path {WAREHOUSE}/sig_ledger "
-                f"--out {WAREHOUSE}/sig_ledger.compact "
-                f"--checkpoint {WAREHOUSE}/sig_ledger_checkpoint"
-            ),
-        )
-
-        def _swap(src: str) -> str:
-            # Rerun-safe at EVERY crash point, not just after complete
-            # success (r7 ADVICE + r8 review):
-            # - outer guard on the staged .compact: a retry after the
-            #   swap already completed (or where compaction never
-            #   produced output) is a no-op instead of deleting the
-            #   rollback and mv-ing the LIVE table away with nothing to
-            #   replace it;
-            # - the rollback rotation (drop last week's .old, move the
-            #   live table to .old) is additionally guarded on the live
-            #   table existing: a retry after a crash BETWEEN the two
-            #   mv steps (X already at X.old, X.compact still staged)
-            #   skips straight to publishing X.compact and PRESERVES
-            #   the rollback — the unguarded form re-ran `rm -rf
-            #   {src}.old` first, destroying the only pre-compaction
-            #   copy and then failing forever at `mv {src}`.
-            # Plain `mv X X.old` against an existing .old would NEST
-            # and fail by week 3, hence the rm inside the inner guard.
-            # Object stores flip a manifest/pointer instead of renames.
-            # The no-.compact branch distinguishes 'already swapped'
-            # (live table present — a benign retry) from 'nothing ever
-            # staged' (NEITHER present — no state a completed swap can
-            # leave, so a compaction that silently produced no output
-            # fails HERE instead of being masked by a green no-op; r8
-            # ADVICE).
-            return (
-                f"if [ -d {src}.compact ]; then "
-                f"if [ -d {src} ]; then "
-                f"rm -rf {src}.old && mv {src} {src}.old; "
-                f"fi && "
-                f"mv {src}.compact {src}; "
-                f"elif [ -d {src} ]; then "
-                f"echo 'swap: {src} already live, no staged .compact "
-                f"(retry no-op)'; "
-                f"else "
-                f"echo 'swap: neither {src}.compact nor {src} exists "
-                f"— upstream compaction produced no output' >&2; "
-                f"exit 1; "
-                f"fi"
-            )
 
         swap_compacted = BashOperator(
             task_id="swap_compacted",
-            bash_command=(
-                _swap(f"{WAREHOUSE}/bronze_flights") + " && "
-                + _swap(f"{WAREHOUSE}/sig_ledger")
-            ),
+            bash_command=_swap(f"{WAREHOUSE}/bronze_flights"),
         )
-        [compact_bronze, fold_sig_ledger] >> swap_compacted
+
+        # :68 (linear deps), with the weekly maintenance tail
+        (wait_for_storage >> run_pipeline >> weekly_gate
+         >> compact_bronze >> swap_compacted)

@@ -28,19 +28,10 @@ PKG = "airflow_project_flight_price_analysis_spark"
 
 #: Kept although no entry point reaches them: a module path, or
 #: ``path::name``, mapped to the reason.
-_NEARDUP = ("the near-dup stream producer, the only writer of the signature "
-            "ledger that jobs/maintenance.py compacts and face x109 folds; "
-            "not yet wired into a DAG")
 EXEMPT = {
     f"{PKG}/sources/jdbc.py":
         "the external-database boundary (SURVEY S3); only a JDBC server "
         "can drive it",
-    **{f"{PKG}/streaming/neardup.py::{name}": _NEARDUP
-       for name in ("make_neardup_sink", "start_neardup_stream",
-                    "screen_within_batch", "check_ledger_coherence")},
-    f"{PKG}/streaming/coherence.py::check_epoch_coherence": _NEARDUP,
-    f"{PKG}/operators/dedup.py::minhash_dedup":
-        "the batch reference the near-dup producer's test compares against",
 }
 
 

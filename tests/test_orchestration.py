@@ -6,7 +6,11 @@ primary resource must be a script path)."""
 
 from __future__ import annotations
 
+import importlib
 import os
+import sys
+import types
+from datetime import datetime
 
 from orchestration import corpus_curation_dag, flight_pipeline_dag
 
@@ -37,6 +41,99 @@ def test_launcher_primary_resources_exist_and_import():
         assert "def main" not in src and "import main" in src
 
 
+def _airflow_stub():
+    """Just enough of the ``airflow`` package for a DAG module's
+    ``if HAVE_AIRFLOW:`` body to run: DAGs and tasks record their
+    arguments and ``>>`` edges."""
+    dags = []
+
+    class DAG:
+        active = None
+
+        def __init__(self, dag_id, **kw):
+            self.dag_id, self.kw, self.tasks = dag_id, kw, []
+            dags.append(self)
+
+        def __enter__(self):
+            DAG.active = self
+            return self
+
+        def __exit__(self, *exc):
+            DAG.active = None
+
+    class _Task:
+        def __init__(self, task_id, **kw):
+            self.task_id, self.kw, self.downstream = task_id, kw, []
+            DAG.active.tasks.append(self)
+
+        def __rshift__(self, other):
+            self.downstream.append(other)
+            return other
+
+        def __rrshift__(self, upstream):  # [a, b] >> task
+            for t in upstream:
+                t.downstream.append(self)
+            return self
+
+    ops = {name: type(name, (_Task,), {}) for name in
+           ("BashOperator", "ShortCircuitOperator", "PythonSensor")}
+    mods = {name: types.ModuleType(name) for name in (
+        "airflow", "airflow.operators", "airflow.operators.bash",
+        "airflow.operators.python", "airflow.sensors",
+        "airflow.sensors.python")}
+    mods["airflow"].DAG = DAG
+    mods["airflow.operators.bash"].BashOperator = ops["BashOperator"]
+    mods["airflow.operators.python"].ShortCircuitOperator = \
+        ops["ShortCircuitOperator"]
+    mods["airflow.sensors.python"].PythonSensor = ops["PythonSensor"]
+    return mods, dags
+
+
+def test_pipeline_dag_compacts_after_the_pipeline(monkeypatch):
+    """With Airflow present the module builds ONE linear DAG, one run at
+    a time: sensor → pipeline → weekly gate → compact → swap. A second
+    DAG compacting bronze on its own schedule could list bronze while a
+    pipeline run appends to it, and the swap would then drop those rows
+    into bronze_flights.old."""
+    mods, dags = _airflow_stub()
+    for name, mod in mods.items():
+        monkeypatch.setitem(sys.modules, name, mod)
+    try:
+        dag_mod = importlib.reload(flight_pipeline_dag)
+        assert dag_mod.HAVE_AIRFLOW
+        assert [d.dag_id for d in dags] == ["flight_price_pipeline_spark"]
+        (dag,) = dags
+        assert dag.kw["max_active_runs"] == 1
+
+        downstream = {id(d) for t in dag.tasks for d in t.downstream}
+        chain = [t for t in dag.tasks if id(t) not in downstream]
+        assert len(chain) == 1
+        while chain[-1].downstream:
+            (nxt,) = chain[-1].downstream
+            chain.append(nxt)
+        assert [(type(t).__name__, t.task_id) for t in chain] == [
+            ("PythonSensor", "wait_for_warehouse"),
+            ("BashOperator", "run_flight_pipeline"),
+            ("ShortCircuitOperator", "weekly_compaction_gate"),
+            ("BashOperator", "compact_bronze"),
+            ("BashOperator", "swap_compacted"),
+        ]
+        assert len(chain) == len(dag.tasks)
+
+        gate = chain[2].kw["python_callable"]
+        assert gate(data_interval_end=datetime(2026, 1, 4))      # Sunday
+        assert not gate(data_interval_end=datetime(2026, 1, 3))  # Saturday
+        cmds = [t.kw["bash_command"] for t in dag.tasks
+                if "bash_command" in t.kw]
+        assert not any("ledger" in c for c in cmds)
+        bronze = f"{dag_mod.WAREHOUSE}/bronze_flights"
+        assert f"--path {bronze} " in chain[3].kw["bash_command"]
+        assert chain[4].kw["bash_command"] == dag_mod._swap(bronze)
+    finally:
+        monkeypatch.undo()
+        importlib.reload(flight_pipeline_dag)
+
+
 def test_job_mains_are_importable():
     from airflow_project_flight_price_analysis_spark.jobs.corpus_pipeline import main as m1
     from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import main as m2
@@ -46,7 +143,7 @@ def test_job_mains_are_importable():
 
 
 def test_maintenance_job_cli(spark, tmp_path, capsys):
-    """The maintenance entry point runs all three families end-to-end
+    """The maintenance entry point runs both families end-to-end
     and emits the one-line JSON report (flight_pipeline convention)."""
     import json
 

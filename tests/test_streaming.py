@@ -11,6 +11,7 @@ from airflow_project_flight_price_analysis_spark.sources import load_table
 from airflow_project_flight_price_analysis_spark.streaming import windows as SW
 from airflow_project_flight_price_analysis_spark.streaming.coherence import (
     drop_last_commit,
+    last_committed_epoch,
 )
 
 
@@ -198,7 +199,7 @@ def test_stream_interval_join_boundaries(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-# streaming near-dup ingest (streaming/neardup.py)
+# incremental near-dup screen (operators/dedup.py::screen_against_ledger)
 # --------------------------------------------------------------------------
 
 def _doc(i, text):
@@ -215,177 +216,12 @@ _T3 = ("a third unrelated passage describing mountain weather patterns "
        "and the formation of orographic clouds above high ridges")
 
 
-def test_neardup_stream_flags_corpus_and_batch_dups(spark, tmp_path):
-    from airflow_project_flight_price_analysis_spark.streaming.neardup import (
-        read_sig_ledger,
-        start_neardup_stream,
-    )
-
-    e1 = str(tmp_path / "in1")
-    clean_p, flagged_p, ledger_p = (str(tmp_path / d)
-                                    for d in ("clean", "flagged", "ledger"))
-    # epoch 1: two distinct docs
-    spark.createDataFrame([_doc(1, _T1), _doc(2, _T2)], _DOC_SCHEMA) \
-        .write.parquet(e1)
-    stream = spark.readStream.schema(_DOC_SCHEMA).parquet(e1)
-    q = start_neardup_stream(stream, clean_p, flagged_p, ledger_p,
-                             str(tmp_path / "ck1"), threshold=0.5)
-    assert q.awaitTermination(120)  # False = timed out
-    assert sorted(r.doc_id for r in
-                  spark.read.parquet(clean_p).collect()) == [1, 2]
-    led = read_sig_ledger(spark, ledger_p)
-    assert sorted(r.id for r in led.collect()) == [1, 2]
-
-    # epoch 2 (same checkpoint, new file): a near-dup of doc 1 (one word
-    # changed), a fresh doc, and an in-batch identical pair (5, 6)
-    t1_near = _T1.replace("lazy", "sleepy")
-    spark.createDataFrame(
-        [_doc(3, t1_near), _doc(4, _T3), _doc(5, _T2 + " extra"),
-         _doc(6, _T2 + " extra")],
-        _DOC_SCHEMA,
-    ).write.mode("append").parquet(e1)
-    stream = spark.readStream.schema(_DOC_SCHEMA).parquet(e1)
-    q = start_neardup_stream(stream, clean_p, flagged_p, ledger_p,
-                             str(tmp_path / "ck1"), threshold=0.5)
-    assert q.awaitTermination(120)  # False = timed out
-
-    clean = {r.doc_id for r in spark.read.parquet(clean_p).collect()}
-    flagged = {r.doc_id: (r.matched_id, r.reason)
-               for r in spark.read.parquet(flagged_p).collect()}
-    # doc 3 ≈ corpus doc 1; doc 6 ≈ in-batch doc 5 (lowest id survives).
-    # doc 5 ≈ corpus doc 2? no — "_T2 + ' extra'" shares most shingles
-    # with _T2, so 5 may flag against the corpus instead; accept either
-    # reason but the SURVIVOR SET is what matters.
-    assert 1 in clean and 2 in clean and 4 in clean
-    assert 3 in flagged and flagged[3][0] == 1
-    assert 6 in flagged
-    assert flagged[3][1] == "corpus_neardup"
-    # ledger grew by exactly the epoch-2 clean docs
-    led_ids = sorted(r.id for r in
-                     read_sig_ledger(spark, ledger_p).collect())
-    assert led_ids == sorted(clean)
-
-
-def test_neardup_sink_epoch_replay_is_exactly_once(spark, tmp_path):
-    from airflow_project_flight_price_analysis_spark.streaming.neardup import (
-        make_neardup_sink,
-        read_sig_ledger,
-    )
-
-    clean_p, flagged_p, ledger_p = (str(tmp_path / d)
-                                    for d in ("clean", "flagged", "ledger"))
-    sink = make_neardup_sink(clean_p, flagged_p, ledger_p, threshold=0.5)
-    b1 = spark.createDataFrame([_doc(1, _T1), _doc(2, _T2)], _DOC_SCHEMA)
-    sink(b1, 0)
-    b2 = spark.createDataFrame(
-        [_doc(3, _T1.replace("dog", "cat")), _doc(4, _T3)], _DOC_SCHEMA)
-    sink(b2, 1)
-    before_clean = sorted(r.doc_id for r in
-                          spark.read.parquet(clean_p).collect())
-    before_led = sorted(r.id for r in
-                        read_sig_ledger(spark, ledger_p).collect())
-    # replay epoch 1 (at-least-once delivery): identical outcome, no dupes
-    sink(b2, 1)
-    assert sorted(r.doc_id for r in
-                  spark.read.parquet(clean_p).collect()) == before_clean
-    assert sorted(r.id for r in
-                  read_sig_ledger(spark, ledger_p).collect()) == before_led
-    # and the replay's split was computed against the PRE-epoch ledger:
-    # doc 3 is still flagged exactly once
-    flagged = [r.doc_id for r in spark.read.parquet(flagged_p).collect()]
-    assert flagged == [3]
-
-
-def test_neardup_sink_rejects_checkpoint_reset_over_live_ledger(
-        spark, tmp_path):
-    """ADVICE r7 (medium): a wiped/relocated checkpoint restarts epoch
-    ids at 0 while the ledger persists — the sink must raise instead of
-    silently screening against an empty ledger and clobbering prior
-    epoch partitions. Replaying the CURRENT max epoch stays legal."""
-    import pytest
-
-    from airflow_project_flight_price_analysis_spark.streaming.neardup import (
-        make_neardup_sink,
-    )
-
-    clean_p, flagged_p, ledger_p = (str(tmp_path / d)
-                                    for d in ("clean", "flagged", "ledger"))
-    sink = make_neardup_sink(clean_p, flagged_p, ledger_p, threshold=0.5)
-    sink(spark.createDataFrame([_doc(1, _T1)], _DOC_SCHEMA), 0)
-    sink(spark.createDataFrame([_doc(2, _T2)], _DOC_SCHEMA), 1)
-    # replay of the max epoch is fine (at-least-once delivery)
-    sink(spark.createDataFrame([_doc(2, _T2)], _DOC_SCHEMA), 1)
-    # ...but a restart at epoch 0 means checkpoint/ledger incoherence
-    with pytest.raises(RuntimeError, match="checkpoint"):
-        sink(spark.createDataFrame([_doc(3, _T3)], _DOC_SCHEMA), 0)
-
-
-def test_neardup_sink_rejects_ledger_geometry_drift(spark, tmp_path):
-    """ADVICE r7 (low): a ledger written with a different num_hashes
-    would zip_with-pad with NULLs and silently drop every cross-epoch
-    match — the sink must fail on signature-length mismatch."""
-    import pytest
-
-    from airflow_project_flight_price_analysis_spark.streaming.neardup import (
-        make_neardup_sink,
-    )
-
-    clean_p, flagged_p, ledger_p = (str(tmp_path / d)
-                                    for d in ("clean", "flagged", "ledger"))
-    sink16 = make_neardup_sink(clean_p, flagged_p, ledger_p,
-                               threshold=0.5, num_hashes=16, num_bands=4)
-    sink16(spark.createDataFrame([_doc(1, _T1)], _DOC_SCHEMA), 0)
-    sink32 = make_neardup_sink(clean_p, flagged_p, ledger_p,
-                               threshold=0.5, num_hashes=32, num_bands=8)
-    with pytest.raises(RuntimeError, match="num_hashes"):
-        sink32(spark.createDataFrame([_doc(2, _T2)], _DOC_SCHEMA), 1)
-
-
-def test_neardup_incremental_matches_batch_on_chain_free_corpus(spark,
-                                                                tmp_path):
-    """On a corpus with no near-dup CHAINS (every dup links straight to
-    a surviving doc), sequential epoch ingestion must keep exactly the
-    docs batch minhash_dedup keeps on the union — arrival order = id
-    order makes both greedy keep-first rules coincide. (On chains the
-    two legitimately differ: the incremental ledger never contains
-    dropped docs, so a dup-of-a-dropped-doc survives — documented in
-    the module docstring.)"""
-    from airflow_project_flight_price_analysis_spark.operators.dedup import (
-        minhash_dedup,
-    )
-    from airflow_project_flight_price_analysis_spark.streaming.neardup import (
-        make_neardup_sink,
-    )
-
-    docs = [
-        _doc(1, _T1), _doc(2, _T2),
-        _doc(3, _T3), _doc(4, _T1.replace("quick", "rapid")),
-        _doc(5, _T2.replace("database", "storage")),
-    ]
-    union = spark.createDataFrame(docs, _DOC_SCHEMA)
-    kept_batch = sorted(
-        r.doc_id for r in
-        minhash_dedup(union, "text", "doc_id", threshold=0.5).collect()
-    )
-
-    clean_p, flagged_p, ledger_p = (str(tmp_path / d)
-                                    for d in ("c2", "f2", "l2"))
-    sink = make_neardup_sink(clean_p, flagged_p, ledger_p, threshold=0.5)
-    sink(spark.createDataFrame(docs[:2], _DOC_SCHEMA), 0)
-    sink(spark.createDataFrame(docs[2:], _DOC_SCHEMA), 1)
-    kept_inc = sorted(r.doc_id for r in
-                      spark.read.parquet(clean_p).collect())
-    assert kept_inc == kept_batch
-
-
 def test_neardup_screens_have_fixed_points(spark):
     """Two algebraic anchors of the screens: against an EMPTY ledger
     nothing flags; against a ledger equal to the batch every doc flags
     itself at estimated Jaccard exactly 1.0."""
     from airflow_project_flight_price_analysis_spark.operators.dedup import (
         minhash_signatures,
-    )
-    from airflow_project_flight_price_analysis_spark.streaming.neardup import (
         screen_against_ledger,
     )
 
@@ -415,94 +251,6 @@ def test_events_stream_reads_directory_layout(spark, tmp_path):
          .trigger(availableNow=True).start())
     assert q.awaitTermination(120)  # False = timed out
     assert spark.table("evdir").count() == 50
-
-
-def test_sig_ledger_compaction_preserves_screen_results(spark, tmp_path):
-    """r6 verdict item 7: folding all epochs <= K into one base
-    partition must leave every future epoch's screen IDENTICAL — the
-    screen reads epoch_id < current, and the base lands on the max
-    compacted epoch."""
-    from airflow_project_flight_price_analysis_spark.streaming.neardup import (
-        compact_sig_ledger,
-        make_neardup_sink,
-        read_sig_ledger,
-    )
-
-    clean_p, flagged_p, ledger_p = (str(tmp_path / d)
-                                    for d in ("clean", "flagged", "ledger"))
-    sink = make_neardup_sink(clean_p, flagged_p, ledger_p, threshold=0.5)
-    sink(spark.createDataFrame([_doc(1, _T1)], _DOC_SCHEMA), 0)
-    sink(spark.createDataFrame([_doc(2, _T2)], _DOC_SCHEMA), 1)
-    sink(spark.createDataFrame([_doc(3, _T3)], _DOC_SCHEMA), 2)
-
-    compacted_p = str(tmp_path / "ledger_compacted")
-    compact_sig_ledger(spark, ledger_p, compacted_p, upto_epoch=2)
-    led = read_sig_ledger(spark, compacted_p)
-    # one base partition, same signature set
-    assert {r.epoch_id for r in led.collect()} == {2}
-    assert sorted(r.id for r in led.collect()) == [1, 2, 3]
-
-    # epoch 3 against ORIGINAL vs COMPACTED ledger: identical split
-    batch = spark.createDataFrame(
-        [_doc(4, _T1.replace("quick", "swift")), _doc(5, "wholly new text "
-              "with nothing shared at all among previous passages here")],
-        _DOC_SCHEMA,
-    )
-    out_a = (str(tmp_path / "ca"), str(tmp_path / "fa"),
-             str(tmp_path / "la"))
-    out_b = (str(tmp_path / "cb"), str(tmp_path / "fb"),
-             str(tmp_path / "lb"))
-    import shutil
-    shutil.copytree(ledger_p, out_a[2])
-    shutil.copytree(compacted_p, out_b[2])
-    make_neardup_sink(out_a[0], out_a[1], out_a[2], threshold=0.5)(batch, 3)
-    make_neardup_sink(out_b[0], out_b[1], out_b[2], threshold=0.5)(batch, 3)
-    for sub in (0, 1):  # clean + flagged identical
-        a = sorted(r.doc_id for r in spark.read.parquet(out_a[sub])
-                   .filter("epoch_id = 3").collect())
-        b = sorted(r.doc_id for r in spark.read.parquet(out_b[sub])
-                   .filter("epoch_id = 3").collect())
-        assert a == b and a  # non-vacuous
-
-
-def test_ledger_compaction_validates_against_checkpoint(spark, tmp_path):
-    """r7 review: the fold bound must be enforceable against the
-    stream's checkpoint — folding a replayable epoch would change its
-    visible ledger on replay."""
-    import os
-
-    import pytest
-
-    from airflow_project_flight_price_analysis_spark.streaming.coherence import (
-        last_committed_epoch,
-    )
-    from airflow_project_flight_price_analysis_spark.streaming.neardup import (
-        compact_sig_ledger,
-        make_neardup_sink,
-    )
-
-    clean_p, flagged_p, ledger_p = (str(tmp_path / d)
-                                    for d in ("clean", "flagged", "ledger"))
-    sink = make_neardup_sink(clean_p, flagged_p, ledger_p, threshold=0.5)
-    sink(spark.createDataFrame([_doc(1, _T1)], _DOC_SCHEMA), 0)
-    sink(spark.createDataFrame([_doc(2, _T2)], _DOC_SCHEMA), 1)
-    # fabricate a checkpoint whose last committed epoch is 0
-    ck = tmp_path / "ck" / "commits"
-    ck.mkdir(parents=True)
-    (ck / "0").write_text("{}")
-    assert last_committed_epoch(str(tmp_path / "ck")) == 0
-    assert last_committed_epoch(str(tmp_path / "nope")) is None
-    with pytest.raises(ValueError, match="replayable"):
-        compact_sig_ledger(spark, ledger_p, str(tmp_path / "out"),
-                           upto_epoch=1, checkpoint_dir=str(tmp_path / "ck"))
-    # within the committed bound: succeeds, and the base is sized from
-    # the base epochs only (tiny → exactly 1 file)
-    n = compact_sig_ledger(spark, ledger_p, str(tmp_path / "out"),
-                           upto_epoch=0,
-                           checkpoint_dir=str(tmp_path / "ck"))
-    assert n == 1
-    led = spark.read.parquet(str(tmp_path / "out"))
-    assert {r.epoch_id for r in led.select("epoch_id").collect()} == {0, 1}
 
 
 # --- streaming KMV sketch maintenance (streaming/sketches.py, x124) ----------
@@ -654,10 +402,12 @@ def test_stream_cms_sketch_replay_without_new_data(spark, tmp_path):
         return (spark.readStream.schema("key long")
                 .option("maxFilesPerTrigger", 1).parquet(staged))
 
+    assert last_committed_epoch(ckpt) is None  # no checkpoint yet
     c1, folded1, _ = stream_cms_sketch(
         _stream(), "key", 3, 32, state_path=state, checkpoint_dir=ckpt)
     assert folded1 == 2
-    drop_last_commit(ckpt)
+    assert drop_last_commit(ckpt) == 1
+    assert last_committed_epoch(ckpt) == 0  # batch 0's commit is left
     c2, folded2, skipped2 = stream_cms_sketch(
         _stream(), "key", 3, 32, state_path=state, checkpoint_dir=ckpt)
     assert (folded2, skipped2) == (0, 1)
