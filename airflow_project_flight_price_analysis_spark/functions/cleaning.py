@@ -19,11 +19,12 @@ NULL_SENTINEL = "␀"  # ␀ — distinguishes NULL from empty string in hashes
 #: v2 encoded NULL as the literal sentinel character, so a real value
 #: equal to the sentinel hashed identically to NULL and the dedup
 #: consumers would silently merge the two rows). Every version bump
-#: CHANGES EVERY HASH VALUE — a ledger/exact-dedup artifact persisted
-#: by an older build stops matching, and the next incremental run
-#: re-ingests the whole history as "new" exactly once. Deployments
-#: upgrading over existing state must either rebuild the ledger once or
-#: stamp ledger rows with this constant (a ``hash_version`` column) and
+#: CHANGES EVERY HASH VALUE — bronze's ``row_hash`` column (the flight
+#: pipeline's dedup ledger) or an exact-dedup artifact persisted by an
+#: older build stops matching, and the next incremental run re-ingests
+#: the whole history as "new" exactly once. Deployments upgrading over
+#: existing state must either rebuild bronze's hashes once or stamp
+#: bronze rows with this constant (a ``hash_version`` column) and
 #: re-hash the old cohort; ``operators/star.py::dedup_against_ledger``
 #: consumes these hashes.
 ROW_HASH_VERSION = 3

@@ -43,17 +43,15 @@ def _clean_metrics(bronze):
 
 def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
     bronze_path = f"{warehouse}/bronze_flights"
-    ledger_path = f"{warehouse}/processed_hashes"
     dims = {"dim_airlines": 0, "dim_airports": 0, "dim_date": 0}
     clean = {"rows_in": 0, "rows_dropped_invalid": 0}
     staged_rows = fact_rows = 0
 
     # --- ingest (ingestion.py:18-129); its count job also counts the CSV ---
     raw, source_obs = _counted(read_flights_csv(spark, csv_path), "source_rows")
-    n_new = star.ingest_increment(spark, raw, bronze_path, ledger_path)
-    # an empty first load writes neither table: a no-op run, all counts 0.
-    # A ledger without bronze means bronze was lost: its read below raises.
-    if star.path_exists(spark, bronze_path) or star.path_exists(spark, ledger_path):
+    n_new = star.ingest_increment(spark, raw, bronze_path)
+    # an empty first load writes no bronze: a no-op run, all counts 0
+    if star.path_exists(spark, bronze_path):
         # --- transform (transformation.py:45-138) ---
         # clean_obs counts the bronze scan feeding the build (deduped_rows)
         # and its invalid rows (A7); each dim is counted as it is written

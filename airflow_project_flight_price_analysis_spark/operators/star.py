@@ -5,8 +5,11 @@ Re-expresses the reference's three pipeline stages
 DataFrame plans. Contrasts with the reference:
 
 - Hash-ledger dedup is a ``left_anti`` join, not a per-chunk SQL IN-list
-  round-trip (``ingestion.py:76-83``). At 100 TB the ledger is partitioned
-  by hash prefix → co-partitioned sort-merge anti-join (SURVEY §7.4.3).
+  round-trip (``ingestion.py:76-83``). Bronze keeps ``row_hash`` and is
+  its own ledger: the reference keeps a separate hash table only because
+  its staging table drops the hash (``ingestion.py:93``). At 100 TB,
+  partitioning bronze by hash prefix makes the anti-join a co-partitioned
+  sort-merge (SURVEY §7.4.3).
 - FK resolution is three broadcast hash joins, not driver-side dict maps
   (``transformation.py:43,123-125``) — no collect, no driver memory ceiling.
 - Surrogate keys are ``xxhash64`` of the natural key, not SERIAL
@@ -65,7 +68,7 @@ def dedup_against_ledger(incoming: DataFrame, ledger: DataFrame | None) -> DataF
 
     A ledger that EXISTS but lacks ``row_hash`` is schema drift, not
     first-run — silently skipping the anti-join would re-ingest the
-    entire source (the exact failure read_ledger's fail-loud rule
+    entire source (the exact failure ingest_increment's fail-loud read
     exists to prevent). ``None`` (genuinely absent path) means first
     run."""
     hashed = with_row_hash(incoming)
@@ -87,46 +90,32 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(jpath)
 
 
-def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame | None:
-    """Read the hash ledger; only a genuinely absent path means 'first
-    run' (→ None). Any other failure — corrupt parquet, permissions —
-    must surface: swallowing it would silently re-ingest the entire
-    source as if the ledger were empty."""
-    return spark.read.parquet(ledger_path) if path_exists(spark, ledger_path) else None
+def ingest_increment(spark: SparkSession, incoming: DataFrame, bronze_path: str) -> int:
+    """Incremental load (§3.1 Spark shape): anti-join ``incoming`` against
+    the ``row_hash`` column of bronze, then append the new rows, hash
+    included, in one write. Bronze is its own ledger: a row and its hash
+    land in the same file, so there is no second table to keep in step.
 
+    Only a genuinely absent bronze path means "first run". Any other read
+    failure (corrupt parquet, permissions) surfaces: swallowing it would
+    silently re-ingest the entire source as if bronze were empty.
 
-def ingest_increment(
-    spark: SparkSession,
-    incoming: DataFrame,
-    bronze_path: str,
-    ledger_path: str,
-) -> int:
-    """Incremental load (§3.1 Spark shape): anti-join the ledger, append
-    new rows to bronze, THEN append their hashes to the ledger — same
-    ordering as the reference (``ingestion.py:118-119,127``) so a crash
-    between the two writes re-reads rather than loses data.
-
-    Delivery contract: **at-least-once into bronze**. A crash in the
-    window between the bronze append and the ledger append means the
-    next run re-appends those rows (their hashes never made the ledger).
-    Such replays leave content-identical rows, removable with a
-    full-row distinct; exactly-once needs the bronze rows and their
-    ledger hashes committed as one unit, as the versioned watermark of
-    ``streaming/sketches.py::fold_stream`` commits a fold.
+    Delivery contract: a run that dies before the append commits leaves
+    its rows out of bronze, hashes included, so the next run ingests
+    them; a run after bronze files are lost re-ingests exactly the rows
+    they held.
 
     Returns the number of newly ingested rows.
     """
-    ledger = read_ledger(spark, ledger_path)
-
-    fresh = dedup_against_ledger(incoming, ledger)
+    bronze = spark.read.parquet(bronze_path) if path_exists(spark, bronze_path) else None
+    fresh = dedup_against_ledger(incoming, bronze)
     fresh = fresh.withColumn("load_timestamp", F.current_timestamp())
-    # two writes, one lineage — cache to avoid recomputing the anti-join
+    # the count and the write share one lineage: cache the anti-join
     fresh.persist()
     try:
         n_new = fresh.count()
         if n_new:
-            fresh.drop("row_hash").write.mode("append").parquet(bronze_path)
-            fresh.select("row_hash", "load_timestamp").write.mode("append").parquet(ledger_path)
+            fresh.write.mode("append").parquet(bronze_path)
     finally:
         fresh.unpersist()
     return n_new

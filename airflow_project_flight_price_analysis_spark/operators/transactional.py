@@ -61,46 +61,27 @@ class BucketedMergeTable:
     #: bump when the layout/manifest encoding changes incompatibly
     FORMAT_VERSION = 1
 
-    def __init__(self, root: str, key: str | None = None,
-                 n_buckets: int | None = None) -> None:
+    def __init__(self, root: str, key: str, n_buckets: int) -> None:
         self.root = root
         # Bucket routing is a pure function of (key, n_buckets) — a
         # second handle opened with different parameters would read only
         # SOME of the buckets a merge's keys live in and silently leave
         # stale duplicates in the rest (r7 ADVICE). Pin the parameters
         # in a table-properties file on first open and fail loudly on
-        # any mismatch thereafter. Omitting key/n_buckets ADOPTS the
-        # pinned values (the reader/maintenance path — no caller-side
-        # parameter bookkeeping to get wrong).
-        # Validation runs BEFORE the skeleton makedirs (r8 review): a
-        # parameterless open of a mistyped root must raise WITHOUT
-        # fabricating an empty table there — a later parameterful open
-        # of the fabricated path would pin fresh properties and hide
-        # the typo, splitting the table across two roots (the r7
-        # vacuum-CLI hazard, now closed at the constructor).
-        self.key, self.n_buckets = self._pin_properties(
-            key, None if n_buckets is None else int(n_buckets))
+        # any mismatch thereafter.
+        self.key, self.n_buckets = key, int(n_buckets)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
         os.makedirs(os.path.join(root, "commits"), exist_ok=True)
+        self._pin_properties()
 
-    def _pin_properties(self, key: str | None,
-                        n_buckets: int | None) -> tuple[str, int]:
+    def _pin_properties(self) -> None:
         import json
 
         props_path = os.path.join(self.root, "table_properties.json")
         if not os.path.exists(props_path):
-            if key is None or n_buckets is None:
-                raise ValueError(
-                    f"BucketedMergeTable at {self.root} has no pinned "
-                    "table_properties.json yet — the first open must "
-                    "supply key and n_buckets"
-                )
-            mine = {"key": key, "n_buckets": n_buckets,
+            mine = {"key": self.key, "n_buckets": self.n_buckets,
                     "format_version": self.FORMAT_VERSION}
-            # genuine first open WITH parameters: now (and only now) is
-            # materializing the root legitimate
-            os.makedirs(self.root, exist_ok=True)
             # atomic claim via the same tmp+link protocol as commits: two
             # concurrent first opens race to link; the loser falls through
             # to validation against whatever the winner pinned
@@ -123,15 +104,12 @@ class BucketedMergeTable:
                 f"{pinned.get('format_version')}; this code reads "
                 f"{self.FORMAT_VERSION}"
             )
-        if (key is not None and key != pinned["key"]) or (
-                n_buckets is not None and n_buckets != pinned["n_buckets"]):
+        if (pinned["key"], pinned["n_buckets"]) != (self.key, self.n_buckets):
             raise ValueError(
                 f"BucketedMergeTable at {self.root} was created with "
-                f"{pinned}; opening it as key={key!r} n_buckets="
-                f"{n_buckets!r} would mis-route buckets — omit the "
-                "parameters to adopt the pinned values"
+                f"{pinned}; opening it as key={self.key!r} n_buckets="
+                f"{self.n_buckets!r} would mis-route buckets"
             )
-        return pinned["key"], int(pinned["n_buckets"])
 
     # -- bookkeeping -------------------------------------------------------
 
@@ -199,50 +177,6 @@ class BucketedMergeTable:
                 f"version {version} already committed") from None
         finally:
             os.unlink(tmp)
-
-    def vacuum(self) -> list[str]:
-        """Remove snapshot data dirs and manifests no committed version
-        references (losing writers and abandoned retries leak uuid dirs —
-        the price of optimistic commits; Iceberg calls this orphan-file
-        removal). Returns the removed paths.
-
-        Safe against in-flight writers ONLY for dirs older than any live
-        attempt — a real deployment gates on age (e.g. modified > 1h
-        ago); here the caller is the single maintenance process, same
-        contract as compact_parquet (never vacuum under a running
-        writer)."""
-        import json
-        import shutil
-
-        live_manifests: set[str] = set()
-        live_dirs: set[str] = set()
-        commits_dir = os.path.join(self.root, "commits")
-        for c in os.listdir(commits_dir):
-            if not c.startswith("v"):
-                continue
-            with open(os.path.join(commits_dir, c), encoding="utf-8") as f:
-                mid = f.read().strip()
-            live_manifests.add(f"{mid}.json")
-            mpath = os.path.join(self.root, "manifests", f"{mid}.json")
-            with open(mpath, encoding="utf-8") as f:
-                for rel in json.load(f).values():
-                    # rel = data/<uuid>/__bucket=<b>; retention unit is
-                    # the snapshot dir
-                    live_dirs.add(rel.split(os.sep)[1])
-        removed = []
-        data_dir = os.path.join(self.root, "data")
-        for d in os.listdir(data_dir):
-            if d not in live_dirs:
-                path = os.path.join(data_dir, d)
-                shutil.rmtree(path)
-                removed.append(path)
-        man_dir = os.path.join(self.root, "manifests")
-        for m in os.listdir(man_dir):
-            if m not in live_manifests:
-                path = os.path.join(man_dir, m)
-                os.unlink(path)
-                removed.append(path)
-        return removed
 
     # -- MERGE -------------------------------------------------------------
 

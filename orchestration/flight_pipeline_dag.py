@@ -9,19 +9,25 @@ Mirrors the reference DAG structure (``dags/flight_pipeline_dag.py``):
 One linear DAG, one run at a time (``max_active_runs=1``): the weekly
 bronze compaction and its swap run downstream of the pipeline, behind a
 weekly gate. As a separately scheduled DAG it could list bronze while a
-pipeline run appended to it, and the swap would move those rows into
-``bronze_flights.old`` — their hashes already in the ledger, so no
-later run re-ingests them and the fact silently omits them.
+pipeline run appended to it, and the swap would move those rows, and
+the hashes stored with them, into ``bronze_flights.old``. The next run
+would re-ingest them, but until then bronze would lack rows the star
+just built from them, and an append committing during the swap would
+fail or land in the rollback copy.
 
 Differences by design:
 - Task bodies are ``spark-submit`` invocations of
   ``airflow_project_flight_price_analysis_spark.jobs.flight_pipeline``
   (cluster-side execution), not in-worker pandas.
 - The MySQL/Postgres sensors become a storage-availability check (the
-  engine's warehouse is object storage/parquet, not a DB), kept as a
-  lightweight Python sensor for shape parity.
-- No offset Variable: Structured Streaming checkpoints (or the batch
-  hash-ledger) own incremental state (SURVEY.md §2.7).
+  engine's warehouse is parquet, not a DB), kept as a lightweight Python
+  sensor for shape parity.
+- No offset Variable: bronze's ``row_hash`` column owns incremental
+  state (SURVEY.md §2.7).
+
+The warehouse (``FPA_WAREHOUSE``) must be a mounted file-system path:
+the weekly swap publishes the compacted table with ``mv``, which an
+object-store URI does not support.
 
 Import-gated: Airflow is not installed in the build container; this
 module is importable only where Airflow is (it no-ops otherwise so the
@@ -75,7 +81,7 @@ def _maint_cmd(args: str) -> str:
 def _warehouse_ready() -> bool:
     """Readiness probe (reference: SqlSensor SELECT 1, poke 10s/timeout
     600s, flight_pipeline_dag.py:30-46). Here: storage reachable."""
-    return os.path.isdir(os.path.dirname(WAREHOUSE)) or WAREHOUSE.startswith("s3://")
+    return os.path.isdir(os.path.dirname(WAREHOUSE))
 
 
 def _compaction_due(data_interval_end, **_) -> bool:
@@ -103,7 +109,6 @@ def _swap(src: str) -> str:
     #   copy and then failing forever at `mv {src}`.
     # Plain `mv X X.old` against an existing .old would NEST
     # and fail by week 3, hence the rm inside the inner guard.
-    # Object stores flip a manifest/pointer instead of renames.
     # The no-.compact branch distinguishes 'already swapped'
     # (live table present — a benign retry) from 'nothing ever
     # staged' (NEITHER present — no state a completed swap can

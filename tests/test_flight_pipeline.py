@@ -1,6 +1,6 @@
-"""End-to-end flight pipeline: CSV → bronze (hash-dedup ledger) → silver →
-star schema → reconciliation. Mirrors the reference DAG's
-ingest→transform→validate flow (dags/flight_pipeline_dag.py:49-68)."""
+"""End-to-end flight pipeline: CSV → bronze (its row_hash column is the
+dedup ledger) → silver → star schema → reconciliation. Mirrors the
+reference DAG's ingest→transform→validate flow (dags/flight_pipeline_dag.py:49-68)."""
 
 from __future__ import annotations
 
@@ -52,9 +52,8 @@ def csv_file(tmp_path):
 
 def _run_pipeline(spark, csv_file, tmp_path):
     bronze_path = str(tmp_path / "bronze")
-    ledger_path = str(tmp_path / "ledger")
     raw = read_flights_csv(spark, csv_file)
-    n_new = star.ingest_increment(spark, raw, bronze_path, ledger_path)
+    n_new = star.ingest_increment(spark, raw, bronze_path)
     bronze = spark.read.parquet(bronze_path)
     silver = star.clean_flights(bronze)
     schema = star.build_star_schema(silver)
@@ -71,9 +70,7 @@ def test_ingest_dedups_exact_duplicates(spark, csv_file, tmp_path):
 def test_reingest_is_idempotent(spark, csv_file, tmp_path):
     _run_pipeline(spark, csv_file, tmp_path)
     raw = read_flights_csv(spark, csv_file)
-    n_second = star.ingest_increment(
-        spark, raw, str(tmp_path / "bronze"), str(tmp_path / "ledger")
-    )
+    n_second = star.ingest_increment(spark, raw, str(tmp_path / "bronze"))
     assert n_second == 0  # re-run adds nothing (effective exactly-once)
     assert spark.read.parquet(str(tmp_path / "bronze")).count() == 4
 
@@ -88,9 +85,7 @@ def test_appended_rows_are_incremental(spark, csv_file, tmp_path):
     with open(csv_file, "a") as f:
         f.write(extra + "\n")
     raw = read_flights_csv(spark, csv_file)
-    n = star.ingest_increment(
-        spark, raw, str(tmp_path / "bronze"), str(tmp_path / "ledger")
-    )
+    n = star.ingest_increment(spark, raw, str(tmp_path / "bronze"))
     assert n == 1
     assert spark.read.parquet(str(tmp_path / "bronze")).count() == 5
 
@@ -182,6 +177,8 @@ def test_run_pipeline_report_and_rerun(spark, csv_file, tmp_path):
     wh = str(tmp_path / "wh")
     assert run_pipeline(spark, csv_file, wh) == want
     assert run_pipeline(spark, csv_file, wh) == {**want, "ingested_new_rows": 0}
+    assert sorted(p.name for p in (tmp_path / "wh").iterdir()) == [
+        "bronze_flights", "dim_airlines", "dim_airports", "dim_date", "fact_flights"]
 
 
 def test_run_pipeline_runs_three_count_actions(spark, csv_file, tmp_path):
@@ -272,23 +269,77 @@ def test_observations_report_a_stage_that_empties(spark, tmp_path, row, dims):
     }
 
 
-def test_lost_bronze_fails_loudly(spark, csv_file, tmp_path):
-    """A warehouse whose ledger survives but whose bronze is gone is not an
-    empty load: every source row is in the ledger, so nothing is re-ingested,
-    and the run must fail instead of reporting an all-zero pass."""
+@pytest.mark.parametrize("whole_table", [False, True], ids=["one_part_file", "whole_table"])
+def test_lost_bronze_heals_on_rerun(spark, csv_file, tmp_path, whole_table):
+    """Bronze is its own hash ledger, so losing bronze files loses their
+    hashes with them: a rerun re-ingests exactly the lost rows and reports
+    what the first run reported, with no row ingested twice."""
+    import glob
+    import os
     import shutil
-
-    from pyspark.errors import AnalysisException
 
     from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import (
         run_pipeline,
     )
 
     wh = tmp_path / "wh"
-    run_pipeline(spark, csv_file, str(wh))
-    shutil.rmtree(wh / "bronze_flights")
-    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
-        run_pipeline(spark, csv_file, str(wh))
+    first = run_pipeline(spark, csv_file, str(wh))
+    bronze = str(wh / "bronze_flights")
+    if whole_table:
+        shutil.rmtree(bronze)
+        assert run_pipeline(spark, csv_file, str(wh)) == first
+        return
+
+    rows = {p: spark.read.parquet(p).count()
+            for p in glob.glob(os.path.join(bronze, "part-*.parquet"))}
+    part, lost = max(rows.items(), key=lambda kv: kv[1])
+    assert 0 < lost < first["staged_rows"], rows
+    os.remove(part)
+    healed = run_pipeline(spark, csv_file, str(wh))
+    assert healed["ingested_new_rows"] == lost
+    for k in ("staged_rows", "fact_rows", "dims"):
+        assert healed[k] == first[k], k
+    hashes = spark.read.parquet(bronze).groupBy("row_hash").count()
+    assert hashes.count() == first["staged_rows"]
+    assert hashes.where("count > 1").count() == 0
+
+
+def test_ingest_surfaces_corrupt_bronze(spark, csv_file, tmp_path):
+    """Only a missing bronze path means 'first run'; a corrupt bronze file
+    must raise, not silently re-ingest everything as if bronze were empty."""
+    import glob
+    import os
+
+    bronze = str(tmp_path / "bronze")
+    raw = read_flights_csv(spark, csv_file)
+    assert star.ingest_increment(spark, raw, bronze) == 4
+    part = sorted(glob.glob(os.path.join(bronze, "part-*.parquet")))[0]
+    with open(part, "w") as f:
+        f.write("this is not parquet")
+    with pytest.raises(Exception):
+        star.ingest_increment(spark, raw, bronze)
+
+
+def test_ingest_reads_only_bronze_hashes(spark, csv_file, tmp_path):
+    """The anti-join prunes the bronze scan to its ``row_hash`` column."""
+    bronze = str(tmp_path / "bronze")
+    raw = read_flights_csv(spark, csv_file)
+    star.ingest_increment(spark, raw, bronze)
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    as_java = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    def plans():
+        return {e.executionId(): e.physicalPlanDescription()
+                for e in as_java(store.executionsList())}
+
+    mark = max(plans(), default=-1)
+    assert star.ingest_increment(spark, raw, bronze) == 0
+    # the formatted plan details each operator in its own block
+    scans = [block for i, plan in plans().items() if i > mark
+             for block in plan.split("\n\n") if ") Scan parquet" in block.split("\n")[0]]
+    assert scans
+    assert all("ReadSchema: struct<row_hash:string>" in b for b in scans), scans
 
 
 def test_jdbc_wrappers_contract(spark):

@@ -72,21 +72,6 @@ def test_dedup_within_watermark(spark, tmp_path):
     assert got.select("event_id").distinct().count() == 100
 
 
-def test_read_ledger_surfaces_corruption(spark, tmp_path):
-    """Only a missing path means 'first run'; a corrupt ledger must raise,
-    not silently re-ingest everything as if the ledger were empty."""
-    import pytest
-
-    from airflow_project_flight_price_analysis_spark.operators.star import read_ledger
-
-    assert read_ledger(spark, str(tmp_path / "absent")) is None
-    bad = tmp_path / "bad_ledger"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_text("this is not parquet")
-    with pytest.raises(Exception):
-        read_ledger(spark, str(bad)).collect()
-
-
 def test_stateful_running_totals_match_batch(spark, tmp_path):
     from airflow_project_flight_price_analysis_spark.streaming.stateful import (
         user_running_totals,

@@ -154,7 +154,7 @@ def test_commit_conflict_exhausts_retries(spark, tmp_path):
         def _try_commit(self, manifest, version):
             raise CommitConflict("forced")
 
-    t2 = AlwaysConflict(t.root)
+    t2 = AlwaysConflict(t.root, t.key, t.n_buckets)
     with pytest.raises(CommitConflict, match="gave up"):
         t2.merge(spark, spark.createDataFrame([(5, "e")], "k long, v string"),
                  max_retries=2)
@@ -170,37 +170,10 @@ def test_merge_null_key_is_null_safe(spark, tmp_path):
     assert got == {(None, "A"), (1, "b")}
 
 
-def test_vacuum_removes_only_orphans(spark, tmp_path):
-    """Every historical version stays readable after vacuum (manifests
-    still referenced by commits are live); only truly orphaned snapshot
-    dirs/manifests — from losing or abandoned writers — are removed."""
-    import os
-    import shutil
-    import uuid as _uuid
-
-    t = _bm(tmp_path, n_buckets=4)
-    t.merge(spark, spark.createDataFrame([(1, "a")], "k long, v string"))
-    t.merge(spark, spark.createDataFrame([(2, "b")], "k long, v string"))
-    # fake a losing writer's leftovers: an orphan snapshot dir + manifest
-    orphan_dir = os.path.join(t.root, "data", _uuid.uuid4().hex)
-    os.makedirs(os.path.join(orphan_dir, "__bucket=0"))
-    orphan_man = os.path.join(t.root, "manifests",
-                              f"{_uuid.uuid4().hex}.json")
-    with open(orphan_man, "w", encoding="utf-8") as f:
-        f.write("{}")
-    removed = t.vacuum()
-    assert sorted(removed) == sorted([orphan_dir, orphan_man])
-    # both versions still fully readable
-    assert {r.k for r in t.read(spark, version=1).collect()} == {1}
-    assert {r.k for r in t.read(spark, version=2).collect()} == {1, 2}
-    shutil.rmtree(t.root)
-
-
-def test_table_properties_pin_and_adopt(spark, tmp_path):
+def test_table_properties_pin_and_reject_mismatch(spark, tmp_path):
     """r7 ADVICE: (key, n_buckets) define bucket routing, so they are
     pinned in table_properties.json on first open; a mismatched reopen
-    fails loudly instead of silently mis-routing, and a parameterless
-    reopen adopts the pinned values."""
+    fails loudly instead of silently mis-routing."""
     import pytest
 
     from airflow_project_flight_price_analysis_spark.operators.transactional import (
@@ -217,32 +190,11 @@ def test_table_properties_pin_and_adopt(spark, tmp_path):
     # mismatched key → same failure
     with pytest.raises(ValueError, match="mis-route"):
         BucketedMergeTable(root, "other", n_buckets=4)
-    # parameterless open adopts the pinned properties
-    t2 = BucketedMergeTable(root)
-    assert (t2.key, t2.n_buckets) == ("k", 4)
-    assert {r.k for r in t2.read(spark).collect()} == {1}
-    # first open of a fresh root must supply the parameters
-    with pytest.raises(ValueError, match="first open"):
-        BucketedMergeTable(str(tmp_path / "fresh"))
-
-
-def test_parameterless_open_of_missing_root_fabricates_nothing(tmp_path):
-    """r8 review: validation must run BEFORE the skeleton makedirs — a
-    parameterless open of a mistyped root raises without planting an
-    empty table there (a later parameterful open of the fabricated path
-    would pin fresh properties and hide the typo)."""
-    import os
-
-    import pytest
-
-    from airflow_project_flight_price_analysis_spark.operators.transactional import (
-        BucketedMergeTable,
-    )
-
-    bad = str(tmp_path / "merge_tabel")  # the typo
-    with pytest.raises(ValueError, match="first open"):
-        BucketedMergeTable(bad)
-    assert not os.path.exists(bad)
+    # a layout this code does not read
+    props = tmp_path / "bm" / "table_properties.json"
+    props.write_text(props.read_text().replace('"format_version": 1', '"format_version": 2'))
+    with pytest.raises(ValueError, match="format_version 2"):
+        BucketedMergeTable(root, "k", n_buckets=4)
 
 
 # --- snapshot_diff (q87) ------------------------------------------------------
