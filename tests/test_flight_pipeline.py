@@ -60,6 +60,19 @@ def _run_pipeline(spark, csv_file, tmp_path):
     return n_new, raw, bronze, silver, schema
 
 
+def _executions_of(spark, fn, *args):
+    """``fn(*args)`` and the SQL executions it ran, from the status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    as_java = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    def executions():
+        return {e.executionId(): e for e in as_java(store.executionsList())}
+
+    mark = max(executions(), default=-1)
+    out = fn(*args)
+    return out, [e for i, e in executions().items() if i > mark]
+
+
 def test_ingest_dedups_exact_duplicates(spark, csv_file, tmp_path):
     n_new, raw, bronze, *_ = _run_pipeline(spark, csv_file, tmp_path)
     assert raw.count() == 5
@@ -188,15 +201,8 @@ def test_run_pipeline_runs_three_count_actions(spark, csv_file, tmp_path):
         run_pipeline,
     )
 
-    store = spark._jsparkSession.sharedState().statusStore()
-    as_java = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters.asJava
-
-    def executions():
-        return {e.executionId(): e.description() for e in as_java(store.executionsList())}
-
-    mark = max(executions(), default=-1)
-    run_pipeline(spark, csv_file, str(tmp_path / "wh"))
-    counts = [d for i, d in executions().items() if i > mark and d.startswith("count")]
+    _, executions = _executions_of(spark, run_pipeline, spark, csv_file, str(tmp_path / "wh"))
+    counts = [e.description() for e in executions if e.description().startswith("count")]
     assert len(counts) == 3, counts
 
 
@@ -326,18 +332,11 @@ def test_ingest_reads_only_bronze_hashes(spark, csv_file, tmp_path):
     raw = read_flights_csv(spark, csv_file)
     star.ingest_increment(spark, raw, bronze)
 
-    store = spark._jsparkSession.sharedState().statusStore()
-    as_java = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters.asJava
-
-    def plans():
-        return {e.executionId(): e.physicalPlanDescription()
-                for e in as_java(store.executionsList())}
-
-    mark = max(plans(), default=-1)
-    assert star.ingest_increment(spark, raw, bronze) == 0
+    n_new, executions = _executions_of(spark, star.ingest_increment, spark, raw, bronze)
+    assert n_new == 0
     # the formatted plan details each operator in its own block
-    scans = [block for i, plan in plans().items() if i > mark
-             for block in plan.split("\n\n") if ") Scan parquet" in block.split("\n")[0]]
+    scans = [block for e in executions for block in e.physicalPlanDescription().split("\n\n")
+             if ") Scan parquet" in block.split("\n")[0]]
     assert scans
     assert all("ReadSchema: struct<row_hash:string>" in b for b in scans), scans
 
