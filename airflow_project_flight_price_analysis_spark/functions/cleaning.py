@@ -74,7 +74,7 @@ def surrogate_key_expr(*natural_key_cols: str) -> Column:
                         for c in natural_key_cols])
 
 
-def clean_text_expr(col: Column | str, title: bool = True) -> Column:
+def clean_text_expr(col: Column | str) -> Column:
     """String standardization: trim + title-case
     (``dags/tasks/transformation.py:56-59``: ``.str.strip().str.title()``).
 
@@ -84,8 +84,7 @@ def clean_text_expr(col: Column | str, title: bool = True) -> Column:
     initcap.
     """
     c = F.col(col) if isinstance(col, str) else col
-    c = F.trim(c)
-    return F.initcap(c) if title else F.lower(c)
+    return F.initcap(F.trim(c))
 
 
 def parse_stopovers_expr(col: Column | str) -> Column:

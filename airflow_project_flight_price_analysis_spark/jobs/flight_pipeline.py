@@ -70,8 +70,10 @@ def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
         # the first dim write completes clean_obs. If its shuffle stage came
         # out empty (no valid row, or no airline), AQE replaced the write's
         # plan with an empty relation and the metrics observed inside that
-        # stage were dropped: the observation holds an empty row, not zeros
-        clean = clean_obs.get if clean_obs._jo.getRow().length() else _clean_metrics(bronze)
+        # stage were dropped: the observation holds an empty row, which
+        # Observation.get cannot convert. An empty dim_airlines is the only
+        # run that can leave it so; observe the clean pass once more there
+        clean = clean_obs.get if dims["dim_airlines"] else _clean_metrics(bronze)
 
         # --- validate (validation.py:17-49, post-dedup semantics) ---
         # independent read-backs: staged_rows re-counts bronze AFTER the build

@@ -19,9 +19,8 @@ def banded_range_join(
     *,
     lower_seconds: float,
     upper_seconds: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """Time-range join without a range explosion: pairs every left row
+    """Time-range inner join without a range explosion: pairs every left row
     with the right rows of the same key whose timestamp lies in
     ``[left_ts + lower, left_ts + upper]`` (inclusive bounds; use a
     negative ``lower_seconds`` for look-back). The q35 banding rewrite,
@@ -38,8 +37,6 @@ def banded_range_join(
     """
     if upper_seconds < lower_seconds:
         raise ValueError("upper_seconds must be >= lower_seconds")
-    if how not in ("inner", "left"):
-        raise ValueError(f"unsupported how={how!r}")
     # key_cols may (and usually do) exist on both sides — right keys are
     # renamed to reserved __rk_* names below. Any OTHER shared name
     # (including right_ts == left_ts) would make the delta expression and
@@ -85,25 +82,6 @@ def banded_range_join(
     )
     for i, k in enumerate(key_cols):
         cond = cond & (l_exp[k] == r_keyed[f"__rk_{i}"])
-    matched = l_exp.join(r_keyed, cond, "inner").drop(
+    return l_exp.join(r_keyed, cond, "inner").drop(
         "__bucket", *[f"__rk_{i}" for i in range(len(key_cols))]
     )
-    if how == "inner":
-        return matched
-    # left join = matched pairs + null-extended never-matched left rows.
-    # The anti join must be NULL-SAFE: with plain column-name equality a
-    # matched left row holding any NULL never equals its own copy and is
-    # re-emitted as a spurious null-extended row. Matched keys ride under
-    # fresh __m_* aliases (no attribute-ID overlap with `left`, so no
-    # ambiguous-self-join resolution) and the condition is eqNullSafe per
-    # column; anti join preserves duplicate-left multiplicity, and
-    # duplicate rows are value-identical so they share one match status.
-    m_keys = matched.select(
-        *[F.col(c).alias(f"__m_{i}") for i, c in enumerate(left.columns)]
-    ).distinct()
-    anti_cond = None
-    for i, c in enumerate(left.columns):
-        e = left[c].eqNullSafe(F.col(f"__m_{i}"))
-        anti_cond = e if anti_cond is None else anti_cond & e
-    unmatched = left.join(m_keys, anti_cond, "left_anti")
-    return matched.unionByName(unmatched, allowMissingColumns=True)

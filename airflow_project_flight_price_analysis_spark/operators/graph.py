@@ -3,24 +3,25 @@ groups: the pairs ``operators/dedup.py::minhash_neardup_pairs`` finds
 become exact duplicate clusters (``dedup_transitive``), not a greedy
 pair-drop that only approximates them.
 
-Algorithm: HYBRID (introsort-style). Phase 1 runs a few rounds of
-min-label propagation — the cheapest possible round (one edge⋈labels
-shuffle), which converges outright on the shallow clusters near-dup
-graphs actually produce. If the budget expires unconverged (a deep
-component — e.g. a gradually-mutating boilerplate chain makes the pair
-graph a PATH), phase 2 contracts the graph by the phase-1 labels
-(every label is reachable from its node, so supernode edges preserve
-connectivity and the component minimum labels itself) and finishes
-with alternating large-star / small-star edge contraction (Kiveris et
-al., "Connected Components in MapReduce and Beyond", SoCC 2014), whose
-round count is O(log²n) REGARDLESS of diameter (measured: 7 rounds on
-two 30-node paths glued end-to-end, 11 on a 1000-node path, vs 33+ for
-propagation even with a pointer-jumping shortcut — a freshly-merged
-region re-propagates the new minimum one edge per round). Final
-component = star-component of the phase-1 label. The hybrid keeps the
-common case at propagation cost while the adversarial case is
-round-bounded — pinned by tests against a union-find reference on
-glued paths, stars, cycles, and real near-dup graphs.
+Algorithm: HYBRID (introsort-style). Phase 1 runs up to
+``PROPAGATION_BUDGET`` rounds of min-label propagation — the cheapest
+possible round (one edge⋈labels shuffle), which converges outright on
+the shallow clusters near-dup graphs actually produce. If the budget
+expires unconverged (a deep component — e.g. a gradually-mutating
+boilerplate chain makes the pair graph a PATH), phase 2 contracts the
+graph by the phase-1 labels (every label is reachable from its node,
+so supernode edges preserve connectivity and the component minimum
+labels itself) and finishes with alternating large-star / small-star
+edge contraction (Kiveris et al., "Connected Components in MapReduce
+and Beyond", SoCC 2014), whose round count is O(log²n) REGARDLESS of
+diameter (measured: 7 rounds on two 30-node paths glued end-to-end, 11
+on a 1000-node path, vs 33+ for propagation even with a
+pointer-jumping shortcut — a freshly-merged region re-propagates the
+new minimum one edge per round). Final component = star-component of
+the phase-1 label. The hybrid keeps the common case at propagation
+cost while the adversarial case is round-bounded — pinned by tests
+against a union-find reference on glued paths, stars, cycles, and real
+near-dup graphs.
 
 Scale notes:
 - All rounds are pure joins/aggregations; per-node neighborhood minima
@@ -42,6 +43,17 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: min-label propagation rounds before the star phase takes over.
+#: Propagation breaks at ``changed == 0``, so a larger budget costs
+#: nothing on graphs that converge sooner: curate_corpus, x21 and x44
+#: converge in 2-3 rounds, x96's part-variant chains (diameter ~8-10)
+#: in 5 (sf0.01 and sf0.1). Under a 4-round budget x96 fell through to
+#: the star phase, whose contraction setup and signature rounds cost
+#: more than the remaining propagation (A/B warm at sf0.1: 3.85 s at 4
+#: rounds, 2.89 s at 12, full closure). Exactness does not depend on
+#: the phase.
+PROPAGATION_BUDGET = 12
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -135,19 +147,18 @@ def _star_components(e: DataFrame, max_iter: int) -> DataFrame:
     )
 
 
-def connected_components(edges: DataFrame, src: str = "a", dst: str = "b",
-                         max_iter: int = 25,
-                         propagate_rounds: int = 4) -> DataFrame:
-    """(node, component) for every node in ``edges``; component = min node
-    id reachable. Phase 1: up to ``propagate_rounds`` of min-label
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+    """(node, component) for every node in ``edges`` (columns ``a``,
+    ``b``); component = min node id reachable. Phase 1: up to
+    ``PROPAGATION_BUDGET`` rounds of min-label
     propagation (cheap; converges for shallow clusters). Phase 2 (only
     if unconverged): star contraction on the label-contracted graph.
     Raises if the star phase exhausts ``max_iter`` rounds (it needs
     O(log²n) — a graph that exhausts 25 is astronomically large, not
     merely long)."""
     sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
+        .union(edges.select(F.col("b").alias("u"), F.col("a").alias("v")))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -155,7 +166,7 @@ def connected_components(edges: DataFrame, src: str = "a", dst: str = "b",
         .withColumn("label", F.col("node"))
     try:
         converged = False
-        for _ in range(propagate_rounds):
+        for _ in range(PROPAGATION_BUDGET):
             nb = (
                 sym.join(labels.select(F.col("node").alias("v"), "label"), "v")
                 .groupBy("u").agg(F.min("label").alias("nb_label"))
@@ -212,21 +223,14 @@ def connected_components(edges: DataFrame, src: str = "a", dst: str = "b",
         sym.unpersist()
 
 
-def neardup_clusters(df: DataFrame, pairs: DataFrame, id_col: str,
-                     src: str = "a", dst: str = "b",
-                     propagate_rounds: int = 4) -> DataFrame:
+def neardup_clusters(df: DataFrame, pairs: DataFrame,
+                     id_col: str) -> DataFrame:
     """Assign every row its duplicate-cluster id: the min id of its
-    connected component in the near-dup pair graph; singletons (no pair)
-    are their own cluster. Exact transitive semantics — the closure a
-    greedy drop-one-of-each-pair rule only approximates.
-    ``propagate_rounds`` forwards to :func:`connected_components` —
-    callers whose graphs are known to have moderate diameter (e.g. x96's
-    adjective-variant chains, ~8-10) can buy convergence inside the
-    cheap propagation phase instead of paying the star-contraction
-    setup; exactness is unaffected either way (phase 2 remains the
-    fallback)."""
-    comp = connected_components(pairs, src, dst,
-                                propagate_rounds=propagate_rounds)
+    connected component in the near-dup pair graph (columns ``a``,
+    ``b``); singletons (no pair) are their own cluster. Exact transitive
+    semantics — the closure a greedy drop-one-of-each-pair rule only
+    approximates."""
+    comp = connected_components(pairs)
     return (
         df.join(comp.withColumnRenamed("node", id_col), id_col, "left")
         .withColumn("cluster_id", F.coalesce("component", F.col(id_col)))

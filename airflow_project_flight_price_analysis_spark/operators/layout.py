@@ -28,23 +28,22 @@ Design notes:
   curve). ``quantize_ts`` derives such a coordinate from a timestamp
   against a FIXED epoch base — a constant, not a data-dependent min,
   so the layout is stable across incremental writes.
-- ``zorder_write`` = assign z → ``repartitionByRange`` on z (one
+- A z-ordered write = assign z → ``repartitionByRange`` on z (one
   range exchange, sampled bounds, same cost as any clustered write) →
-  ``sortWithinPartitions`` on z → write. The z column itself is
-  persisted so the footer carries its min/max too.
+  ``sortWithinPartitions`` on z → write, with the z column persisted
+  so the footer carries its min/max too. x101 certifies the curve
+  values against DuckDB.
 - The payoff is measurable without a cluster: ``tests/test_layout.py``
-  reads each output file's per-dimension min/max (the exact stats a
-  scan planner prunes on) and asserts a 2-D box query intersects
-  strictly fewer z-ordered files than time-sorted files of the same
-  count.
+  writes that layout, reads each output file's per-dimension min/max
+  (the exact stats a scan planner prunes on) and asserts a 2-D box
+  query intersects strictly fewer z-ordered files than time-sorted
+  files of the same count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-__all__ = ["interleave_bits", "quantize_ts", "zorder_write"]
 
 
 def interleave_bits(dims: list[Column], bits: int = 16) -> Column:
@@ -88,26 +87,5 @@ def quantize_ts(ts: Column, base_epoch: int, shift: int) -> Column:
     return F.shiftright(
         F.unix_timestamp(ts).cast("long") - F.lit(base_epoch).cast("long"),
         shift,
-    )
-
-
-def zorder_write(
-    df: DataFrame,
-    dims: list[Column],
-    path: str,
-    n_files: int,
-    bits: int = 16,
-    z_col: str = "__z",
-) -> None:
-    """Cluster ``df`` along the z-curve of ``dims`` and write exactly
-    ``n_files`` parquet files, each covering a compact z-range (hence a
-    compact box in dimension space). One range exchange total; the
-    per-file sort is the write-side sort any clustered layout pays."""
-    (
-        df.withColumn(z_col, interleave_bits(dims, bits=bits))
-        .repartitionByRange(n_files, z_col)
-        .sortWithinPartitions(z_col)
-        .write.mode("overwrite")
-        .parquet(path)
     )
 

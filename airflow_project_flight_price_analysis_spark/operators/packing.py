@@ -7,11 +7,11 @@ Two packing disciplines, picked by what the training loader needs:
   in: one window cumulative sum, documents never split, packs may
   overrun ``seq_len`` by up to one document. Right when the loader
   re-chunks anyway and packing only needs locality per source.
-  Scale posture: a single ``partitionBy(source)`` window sorts each
-  source on ONE reducer, which serializes for giant sources;
-  ``shards > 1`` salts the window key with a deterministic doc-hash
-  shard — each (source, shard) packs independently and in parallel, at
-  the cost of at most one underfilled pack per shard.
+  Scale posture: a single ``partitionBy(source)`` window would sort
+  each source on ONE reducer, which serializes for giant sources; the
+  caller's deterministic ``shard_col`` salts the window key — each
+  (source, shard) packs independently and in parallel, at the cost of
+  at most one underfilled pack per shard.
 
 - :func:`pack_concat_chunks` (r8) — EXACT corpus-global GPT-style
   packing: documents ordered by content hash, the concatenated token
@@ -35,8 +35,7 @@ Two packing disciplines, picked by what the training loader needs:
   token counts, budget, seed) — band count and cluster layout cannot
   change a single output value. All integer arithmetic over
   md5-derived hashes: an oracle can replay the exact assignment
-  (window cumsum + generate_series), unlike the xxhash64 default
-  sharding of :func:`pack_sequences`.
+  (window cumsum + generate_series).
 """
 
 from __future__ import annotations
@@ -49,26 +48,17 @@ from .sampling import content_hash64
 
 
 def pack_sequences(df: DataFrame, id_col: str, source_col: str,
-                   n_tokens_col: str, seq_len: int = 2048,
-                   shards: int = 1,
-                   shard_col: Column | None = None) -> DataFrame:
+                   n_tokens_col: str, shard_col: Column,
+                   seq_len: int = 2048) -> DataFrame:
     """Assign every document a (shard, pack_id) within its source.
 
     Output: input columns + ``shard`` + ``pack_id``. Deterministic:
-    ordering inside a shard is by ``id_col``; shard = xxhash64(id) mod
-    ``shards`` (stable under reprocessing, independent of row order).
-    Pass ``shard_col`` to override the shard assignment with any
-    deterministic expression (e.g. ``pmod(doc_id, shards)`` when a
-    cross-engine oracle must reproduce the sharding — DuckDB has no
-    xxhash64)."""
-    if shard_col is not None:
-        shard = shard_col.cast("int")
-    else:
-        shard = (
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(shards)).cast("int")
-            if shards > 1 else F.lit(0)
-        )
-    out = df.withColumn("shard", shard)
+    ordering inside a shard is by ``id_col``; the shard is
+    ``shard_col`` cast to int — any deterministic expression of the row
+    (e.g. ``pmod(doc_id, 4)``, which a cross-engine oracle can
+    reproduce), so the assignment is stable under reprocessing and
+    independent of row order."""
+    out = df.withColumn("shard", shard_col.cast("int"))
     w = (
         W.partitionBy(source_col, "shard").orderBy(id_col)
         .rowsBetween(W.unboundedPreceding, W.currentRow)

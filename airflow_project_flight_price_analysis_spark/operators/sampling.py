@@ -78,18 +78,18 @@ def stratified_threshold_sample(
 
 
 def md5_band_width(n_shards: int) -> int:
-    """ceil(2^60 / n) — the exact band width ``epoch_shuffle``'s md5
-    path shards with (``content_hash64`` spans [0, 2^60): 15 hex
-    chars). Exported so an oracle replaying the shard assignment uses
-    THE SAME expression instead of a copy that can desync."""
+    """ceil(2^60 / n) — the exact band width ``epoch_shuffle`` shards
+    with (``content_hash64`` spans [0, 2^60): 15 hex chars). Exported
+    so an oracle replaying the shard assignment uses THE SAME
+    expression instead of a copy that can desync."""
     return 2 ** 60 // int(n_shards) + (2 ** 60 % int(n_shards) > 0)
 
 
 def md5_epoch_hash(key: Column, seed: int) -> Column:
-    """The md5 variant's per-epoch ordering hash — ``content_hash64`` of
-    ``key:seed``. THE expression ``epoch_shuffle(hash_fn="md5")`` orders
-    and shards by, extracted so the multi-epoch face (x113) provably
-    computes the same permutation instead of a copy that can desync."""
+    """The per-epoch ordering hash — ``content_hash64`` of ``key:seed``.
+    THE expression ``epoch_shuffle`` orders and shards by, extracted so
+    the multi-epoch face (x113) provably computes the same permutation
+    instead of a copy that can desync."""
     return content_hash64(
         F.concat_ws(":", key.cast("string"), F.lit(str(int(seed))))
     )
@@ -98,54 +98,31 @@ def md5_epoch_hash(key: Column, seed: int) -> Column:
 def md5_shard_expr(hash_col_name: str, n_shards: int) -> Column:
     """Shard id of a NAMED md5 epoch-hash column: exact long ``DIV``
     over ``md5_band_width`` bands (content_hash64 is non-negative and
-    the width fits a long, so floor division is exact — none of the
-    decimal guards ``_shard_of`` needs for the signed-64-bit xxhash64
-    space apply). Shared by ``epoch_shuffle`` and its driver faces."""
+    the width fits a long, so floor division is exact — no decimal
+    arithmetic or rounding guard is needed). Shared by
+    ``epoch_shuffle`` and its registered faces."""
     return F.expr(
         f"{hash_col_name} DIV {md5_band_width(n_shards)}L"
     ).cast("int")
 
 
-def _shard_of(hash_col: Column, n_shards: int) -> Column:
-    """Fixed-width band of the signed-64-bit hash space:
-    ``(h + 2^63) // ceil(2^64 / n)`` — floor semantics, range pinned to
-    ``[0, n-1]`` for every possible long including the endpoints.
-
-    2^63 and the band width exceed a JVM long — carried as decimal
-    literals (py4j ``lit()`` rejects ints past 2^63-1). FLOOR division
-    must be exact BEFORE the cast: decimal/decimal yields decimal(38,6)
-    rounded HALF_UP, so a bare quotient sends hashes within ~5e-7 of a
-    band boundary one shard high and h=2^63-1 to shard == n_shards
-    (r7 ADVICE). Subtracting the remainder first makes the quotient an
-    exact integer — no rounding can occur."""
-    width = 2 ** 64 // int(n_shards) + (2 ** 64 % int(n_shards) > 0)
-    half = F.lit(str(2 ** 63)).cast("decimal(38,0)")
-    width_lit = F.lit(str(width)).cast("decimal(38,0)")
-    num = hash_col.cast("decimal(38,0)") + half
-    return ((num - F.pmod(num, width_lit)) / width_lit).cast("int")
-
-
 def epoch_shuffle(df: DataFrame, key_col: str, seed: int,
-                  n_shards: int | None = None,
-                  hash_fn: str = "xxhash64") -> DataFrame:
-    """Deterministic global training-order shuffle (r7): order rows by
-    ``xxhash64(key, seed)`` — a different ``seed`` per training epoch
-    gives an independent-looking permutation that is REPRODUCIBLE
-    across runs, cluster sizes, and partitionings (``rand(seed)`` is
-    none of those: its row assignment depends on partition layout).
+                  n_shards: int) -> DataFrame:
+    """Deterministic sharded training-order shuffle (r7): order rows by
+    ``md5_epoch_hash(key, seed)`` — a different ``seed`` per training
+    epoch gives an independent-looking permutation that is REPRODUCIBLE
+    across runs, cluster sizes, partitionings and engines (``rand(seed)``
+    is none of those: its row assignment depends on partition layout;
+    any engine with md5 can replay the exact permutation and shard ids,
+    which is what the DuckDB oracle gate certifies).
 
-    Scale shape: one range-partitioned sort — Spark samples the hash
-    distribution to build balanced range bounds, so the output is both
-    globally ordered and evenly sharded; no single-partition funnel.
-
-    With ``n_shards`` the output instead carries an ``epoch_shard``
-    column — the shard id as a FIXED-WIDTH band of the hash space
-    (``(h + 2^63) // (2^64 / n)``), balanced by xxhash64 uniformity —
-    and is clustered+sorted by (shard, hash, key). The shard a row
-    lands in is then a pure function of (key, seed, n_shards): write
-    with ``.partitionBy("epoch_shard")`` for a bit-reproducible
-    shard→file mapping. (r7 review: the first version used
-    ``repartitionByRange`` for the shards, whose range bounds come
+    The output carries an ``epoch_shard`` column — the shard id as a
+    FIXED-WIDTH band of the hash space (``md5_shard_expr``), balanced
+    by md5 uniformity — and is clustered+sorted by (shard, hash, key).
+    The shard a row lands in is then a pure function of (key, seed,
+    n_shards): write with ``.partitionBy("epoch_shard")`` for a
+    bit-reproducible shard→file mapping. (r7 review: the first version
+    used ``repartitionByRange`` for the shards, whose range bounds come
     from SAMPLING with an RDD-id-derived seed — per-run and
     per-input-layout dependent, contradicting the reproducibility
     contract. The in-memory partition split remains an execution
@@ -155,44 +132,22 @@ def epoch_shuffle(df: DataFrame, key_col: str, seed: int,
     broken by the key itself (so two DISTINCT keys colliding to one
     hash still order deterministically), but rows SHARING a key have no
     defined relative order — dedup first. The hash column is dropped —
-    callers get the input schema back (plus ``epoch_shard`` in the
-    sharded form) in shuffled order.
-
-    ``hash_fn``: ``"xxhash64"`` (default — the JVM-intrinsic scale
-    path) or ``"md5"`` (``content_hash64`` of ``key:seed`` — the
-    engine-REPLAYABLE variant: any engine with md5 can reproduce the
-    exact permutation and shard ids, which is what the driver's DuckDB
-    gate certifies; the x66 precedent — same plan shape, the hash
-    choice trades intrinsic speed for replayability). Both share every
-    other code path: ordering, tie-break, band sharding, column
-    hygiene.
+    callers get the input schema plus ``epoch_shard`` back in shuffled
+    order.
     """
-    reserved = ("__eh", "epoch_shard") if n_shards is not None else ("__eh",)
-    clash = [c for c in df.columns if c in reserved]
+    clash = [c for c in df.columns if c in ("__eh", "epoch_shard")]
     if clash:
         raise ValueError(
             f"input columns {clash} collide with epoch_shuffle's "
             "internals — rename them first (bloom.py reserved-name rule)"
         )
-    if hash_fn == "xxhash64":
-        h = F.xxhash64(F.col(key_col).cast("string"), F.lit(int(seed)))
-    elif hash_fn == "md5":
-        h = md5_epoch_hash(F.col(key_col), seed)
-    else:
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
-    out = df.withColumn("__eh", h)
-    if n_shards is not None:
-        if hash_fn == "md5":
-            shard = md5_shard_expr("__eh", n_shards)
-        else:
-            shard = _shard_of(F.col("__eh"), n_shards)
-        out = out.withColumn("epoch_shard", shard)
-        return (
-            out.repartition(int(n_shards), "epoch_shard")
-            .sortWithinPartitions("epoch_shard", "__eh", key_col)
-            .drop("__eh")
-        )
-    return out.orderBy("__eh", key_col).drop("__eh")
+    return (
+        df.withColumn("__eh", md5_epoch_hash(F.col(key_col), seed))
+        .withColumn("epoch_shard", md5_shard_expr("__eh", n_shards))
+        .repartition(int(n_shards), "epoch_shard")
+        .sortWithinPartitions("epoch_shard", "__eh", key_col)
+        .drop("__eh")
+    )
 
 
 def temperature_mixture_sample(

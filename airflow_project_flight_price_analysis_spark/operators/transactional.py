@@ -51,9 +51,8 @@ class CommitConflict(Exception):
 class BucketedMergeTable:
     """MERGE INTO with bucket-level copy-on-write and optimistic commits.
 
-    ``when_matched``: 'update' (source row replaces base row — Delta's
-    UPDATE SET *), or 'delete' (matched base rows removed). Unmatched
-    source rows insert (for 'update'); inserts don't apply to 'delete'.
+    A matched source row replaces its base row (Delta's UPDATE SET *)
+    and an unmatched one inserts; ``merge``'s ``op_col`` routes deletes.
     Keys are NULL-SAFE throughout (eqNullSafe — the r5/r6 anti-join bug
     class).
     """
@@ -181,7 +180,7 @@ class BucketedMergeTable:
     # -- MERGE -------------------------------------------------------------
 
     def merge(self, spark: SparkSession, source: DataFrame, *,
-              when_matched: str = "update", op_col: str | None = None,
+              op_col: str | None = None,
               max_retries: int = 5,
               _test_between_read_and_commit: Callable[[], None] | None = None,
               ) -> int:
@@ -198,13 +197,7 @@ class BucketedMergeTable:
         upsert rows. One commit then carries a mixed
         update+insert+delete batch — a CDC feed applies in a single
         version instead of one commit per operation class. The column
-        is consumed by the merge and never stored. Only meaningful
-        with ``when_matched='update'`` (the 'delete' mode already
-        deletes every match)."""
-        if when_matched not in ("update", "delete"):
-            raise ValueError(f"when_matched={when_matched!r}")
-        if op_col is not None and when_matched != "update":
-            raise ValueError("op_col requires when_matched='update'")
+        is consumed by the merge and never stored."""
         key, bexpr = self.key, self._bucket_expr()
         # deterministic in-batch dedup: one source row per key (op_col,
         # when present, rides inside the min-struct so a key appearing
@@ -245,36 +238,28 @@ class BucketedMergeTable:
                     )
                 else:
                     survivors = None
-                if when_matched == "update":
-                    # delete-op rows participate in the anti-join above
-                    # (their matched base rows are gone) but never
-                    # re-insert
-                    ups = (src if op_col is None
-                           else src.filter(
-                               F.col(op_col) != F.lit("delete"))
-                           .drop(op_col))
-                    merged = (ups if survivors is None
-                              else survivors.unionByName(ups))
-                else:  # delete: matched rows go; source never inserts
-                    merged = survivors
+                # delete-op rows participate in the anti-join above
+                # (their matched base rows are gone) but never re-insert
+                ups = (src if op_col is None
+                       else src.filter(F.col(op_col) != F.lit("delete"))
+                       .drop(op_col))
+                merged = (ups if survivors is None
+                          else survivors.unionByName(ups))
                 if _test_between_read_and_commit is not None:
                     hook, _test_between_read_and_commit = (
                         _test_between_read_and_commit, None)
                     hook()
-                if merged is not None:
-                    # cluster by bucket before the partitioned write:
-                    # without it every upstream task emits its own tiny
-                    # file per bucket it touches (measured 1500+ files
-                    # across the q86/q87 version histories at sf0.1 —
-                    # r13 verdict item 7); clustered, each bucket lands
-                    # as one file, which is also the co-located layout
-                    # the manifest's bucket granularity promises
-                    (merged.repartition(self.n_buckets, "__bucket")
-                     .write.mode("errorifexists")
-                     .partitionBy("__bucket").parquet(out_dir))
-                written = (
-                    set(os.listdir(out_dir)) if merged is not None else set()
-                )
+                # cluster by bucket before the partitioned write:
+                # without it every upstream task emits its own tiny
+                # file per bucket it touches (measured 1500+ files
+                # across the q86/q87 version histories at sf0.1 —
+                # r13 verdict item 7); clustered, each bucket lands
+                # as one file, which is also the co-located layout
+                # the manifest's bucket granularity promises
+                (merged.repartition(self.n_buckets, "__bucket")
+                 .write.mode("errorifexists")
+                 .partitionBy("__bucket").parquet(out_dir))
+                written = set(os.listdir(out_dir))
                 for b in changed:
                     part = f"__bucket={b}"
                     if part in written:
@@ -295,8 +280,7 @@ class BucketedMergeTable:
 
 
 def snapshot_diff(spark: SparkSession, table: "BucketedMergeTable",
-                  v_old: int, v_new: int, *,
-                  include_unchanged: bool = False) -> DataFrame:
+                  v_old: int, v_new: int) -> DataFrame:
     """CDC between two committed versions of a :class:`BucketedMergeTable`
     — the "what changed between yesterday's snapshot and today's"
     question every incremental training-data pipeline asks before
@@ -304,8 +288,8 @@ def snapshot_diff(spark: SparkSession, table: "BucketedMergeTable",
     table key; per key, ``diff_status`` is ``added`` (key only in
     ``v_new``), ``removed`` (only in ``v_old``), ``changed`` (both
     present, any non-key column differs — struct comparison, so NULLs
-    compare null-safely), or ``unchanged`` (excluded unless
-    ``include_unchanged``). Non-key columns come back twice, prefixed
+    compare null-safely); unchanged keys are excluded. Non-key columns
+    come back twice, prefixed
     ``old_`` / ``new_`` (NULL on the absent side).
 
     Scale shape: both sides read only their manifests' parquet; the
@@ -339,7 +323,7 @@ def snapshot_diff(spark: SparkSession, table: "BucketedMergeTable",
     j = o.join(n, F.col("__dk_old").eqNullSafe(F.col("__dk_new")), "full_outer")
     old_struct = F.struct(*[F.col(f"old_{c}") for c in vals])
     new_struct = F.struct(*[F.col(f"new_{c}") for c in vals])
-    out = (
+    return (
         j.withColumn(
             "diff_status",
             F.when(F.col("__dk_old").isNull(), F.lit("added"))
@@ -351,7 +335,5 @@ def snapshot_diff(spark: SparkSession, table: "BucketedMergeTable",
         .drop("__dk_old", "__dk_new")
         .select(key, "diff_status",
                 *[f"old_{c}" for c in vals], *[f"new_{c}" for c in vals])
+        .filter(F.col("diff_status") != "unchanged")
     )
-    if not include_unchanged:
-        out = out.filter(F.col("diff_status") != "unchanged")
-    return out

@@ -3618,7 +3618,7 @@ ORACLE["x104_cdc_span_dedup"] = r"""
 #: md5-band width for the x106 shard check — THE operator's own width
 #: function, so the oracle can never desync from the sharding it
 #: certifies (band arithmetic stays in exact long range: the md5
-#: variant spans [0, 2^60), content_hash64 = 15 hex chars).
+#: hash spans [0, 2^60), content_hash64 = 15 hex chars).
 _X106_SHARDS = 8
 _X106_WIDTH = md5_band_width(_X106_SHARDS)
 
@@ -3626,11 +3626,8 @@ _X106_WIDTH = md5_band_width(_X106_SHARDS)
 def x106_epoch_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver face of ``epoch_shuffle`` (r7 verdict missing #1): the
     deterministic training-order shuffle's SHARD MAPPING, certified
-    value-exact against DuckDB. Uses the operator's engine-replayable
-    ``hash_fn="md5"`` variant (the x66 precedent: same plan shape as the
-    xxhash64 scale path — ordering, tie-break, band sharding — with the
-    hash swapped for one any engine can replay; xxhash64 itself is not
-    computable in the oracle). ``epoch_shard`` is the operator's
+    value-exact against DuckDB (the operator orders and shards by an md5
+    hash, which the oracle replays). ``epoch_shard`` is the operator's
     persistent contract (the ``partitionBy`` write key), a pure function
     of (key, seed, n_shards); per-shard count/min/max/sum pin the full
     assignment without hashing row order (the driver compare sorts rows
@@ -3643,8 +3640,7 @@ def x106_epoch_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import epoch_shuffle
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    out = epoch_shuffle(docs, "doc_id", seed=7, n_shards=_X106_SHARDS,
-                        hash_fn="md5")
+    out = epoch_shuffle(docs, "doc_id", seed=7, n_shards=_X106_SHARDS)
     return (
         out.groupBy("epoch_shard")
         .agg(

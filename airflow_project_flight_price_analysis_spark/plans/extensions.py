@@ -1673,8 +1673,8 @@ def x31_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB the window is the scale risk: a single ``partitionBy
     (source)`` window serializes per source. The sharded variant lives
-    in ``operators/packing.py::pack_sequences`` (doc-hash salt → one
-    independent packing per (source, shard), same plan shape as the
+    in ``operators/packing.py::pack_sequences`` (deterministic shard
+    salt → one independent packing per (source, shard), same plan shape as the
     salted aggregation in q40); here sources are few and the per-source
     sort is the honest, oracle-mirrorable cost."""
     docs = scale_out(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -1728,10 +1728,8 @@ def x34_sequence_packing_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     window key with a deterministic shard so each (source, shard) packs
     independently and in parallel — the same salting shape as the skewed
     aggregation in q40, at the cost of ≤ one underfilled pack per shard.
-    The shard here is ``pmod(doc_id, 4)`` rather than the default
-    xxhash64 shard so DuckDB can reproduce it exactly (same window, same
-    cut points); the plan shape — one window per (source, shard) — is
-    identical either way."""
+    The shard is ``pmod(doc_id, 4)``, so DuckDB reproduces it exactly
+    (same window, same cut points)."""
     docs = scale_out(load_table(spark, sf_dir, "documents"), "doc_id")
     toks = docs.select(
         "doc_id", "source", token_count_expr(F.lower(F.col("text"))).alias("n_tokens")
@@ -1739,8 +1737,8 @@ def x34_sequence_packing_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.packing import pack_sequences  # noqa: PLC0415
 
     packed = pack_sequences(
-        toks, "doc_id", "source", "n_tokens", seq_len=2048, shards=4,
-        shard_col=F.pmod(F.col("doc_id"), F.lit(4)),
+        toks, "doc_id", "source", "n_tokens",
+        shard_col=F.pmod(F.col("doc_id"), F.lit(4)), seq_len=2048,
     )
     return (
         packed.groupBy("source", "shard", "pack_id")

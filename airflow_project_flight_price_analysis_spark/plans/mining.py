@@ -861,15 +861,7 @@ def x96_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a", "b")
     )
     edges = star.unionAll(rep_edges)
-    # r14: the variant chains here have diameter ~8-10, so the default
-    # 4-round propagation budget always expired unconverged and the
-    # star-contraction phase ran every build (its contraction setup +
-    # signature rounds cost more than the remaining propagation: A/B
-    # warm at sf0.1 — rounds=4 3.85 s, rounds=12 2.89 s full closure).
-    # Propagation breaks at changed == 0, so the larger budget costs
-    # nothing on shallow graphs and exactness is phase-independent.
-    clustered = neardup_clusters(parts, edges, "p_partkey",
-                                 propagate_rounds=12)
+    clustered = neardup_clusters(parts, edges, "p_partkey")
     return (
         clustered.groupBy(F.col("cluster_id").alias("entity_id"))
         .agg(

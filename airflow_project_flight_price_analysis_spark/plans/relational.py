@@ -1228,10 +1228,9 @@ def q48_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: this is the manual fallback for skew that AQE's
     skew-join splitting can't reach (e.g. a skewed key feeding a
     follow-on aggregation); replication factor 8 multiplies the orders
-    scan, not the lineitem scan — at 100 TB pass a pre-computed
-    heavy-hitter key set as ``hot_keys`` so replication cost scales
-    with the hot set, not the build table (implemented and
-    property-tested in ``operators/skew.py::salted_equi_join``).
+    scan, not the lineitem scan (the operator,
+    ``operators/skew.py::salted_equi_join``, is property-tested against
+    the plain join).
     Revenue sums round to exact 0.01-multiples (repo float policy:
     round sums, not avgs).
     """
@@ -3142,7 +3141,7 @@ ORACLE.update({
 
 
 def q79_event_echo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-certified face of the GENERAL banded range-join operator
+    """Oracle-certified face of the GENERAL banded range inner join
     (operators/asof.py:banded_range_join — q35 keeps its fused
     single-source special case; the library operator was
     property-tested but had no oracle row until this query): per user,
@@ -3717,8 +3716,9 @@ def q87_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (suppkey % 10 == 3: +1000.00), provably-disjoint shadow inserts
     (suppkey % 10 == 7 at max+1 offset — the q86 keyspace discipline),
     and deletes (suppkey % 10 == 5) travel in a single source batch
-    routed by an ``__op`` column (``BucketedMergeTable.merge(op_col=)``
-    — the whenMatchedDelete-next-to-whenMatchedUpdate form). Return
+    routed by an ``__op`` column (``BucketedMergeTable.merge(op_col=)``,
+    the merge's one delete path — Delta's whenMatchedDelete next to
+    whenMatchedUpdate). Return
     ``snapshot_diff(v1, v2)``: every shadow key `added`, every %5 key
     `removed`, every %3 key `changed` with both balances, everything
     else excluded. The DuckDB oracle derives the exact diff from the

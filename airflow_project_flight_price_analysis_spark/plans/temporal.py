@@ -112,8 +112,8 @@ def q35_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle key is (user_id, bucket): pair-space bounded by per-bucket
     population, never O(n²) — the same blocking idea as LSH banding.
 
-    The general form (arbitrary band, either explode side, left joins)
-    is ``operators/asof.py::banded_range_join``, property-tested against
+    The general form (arbitrary band and key columns) is
+    ``operators/asof.py::banded_range_join``, property-tested against
     the brute-force inequality join; this registered query keeps its
     fused single-source form.
     """

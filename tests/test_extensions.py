@@ -228,8 +228,9 @@ def test_pack_sequences_sharded(spark):
         "doc_id", "source", token_count_expr("text").alias("n_tokens")
     ).filter(F.col("n_tokens") > 0)
     n = docs.count()
+    shard = F.pmod(F.col("doc_id"), F.lit(4))
     packed = pack_sequences(docs, "doc_id", "source", "n_tokens",
-                            seq_len=512, shards=4)
+                            shard_col=shard, seq_len=512)
     assert packed.count() == n
     assert packed.select("doc_id").distinct().count() == n
 
@@ -254,7 +255,8 @@ def test_pack_sequences_sharded(spark):
     )
     assert unfilled == 0
     # determinism
-    p2 = pack_sequences(docs, "doc_id", "source", "n_tokens", seq_len=512, shards=4)
+    p2 = pack_sequences(docs, "doc_id", "source", "n_tokens",
+                        shard_col=shard, seq_len=512)
     assert packed.exceptAll(p2).count() == 0
 
 

@@ -106,20 +106,16 @@ def test_connected_components_matches_union_find(spark):
     assert comp == expected
 
 
-def test_neardup_clusters_propagate_rounds_equivalent(spark):
-    """r14: `propagate_rounds` is a pure performance knob — a graph too
-    deep for the small budget (falls through to star contraction) and
-    the same graph under a budget large enough to converge in
-    propagation must produce identical clusters."""
+def test_neardup_clusters_deeper_than_propagation_budget(spark):
+    """A path deeper than ``PROPAGATION_BUDGET`` falls through to star
+    contraction and still yields the exact clusters: one cluster per
+    component, labelled by its min id, with singletons their own."""
     docs = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(1, 13)], ["doc_id", "text"])
-    # a 9-deep path (exceeds the 4-round default) + a pair + singletons
+        [(i, f"d{i}") for i in range(1, 21)], ["doc_id", "text"])
+    # a 15-deep path (exceeds the 12-round budget) + a pair + singletons
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 10)] + [(11, 12)], ["a", "b"])
-    small = {(r.doc_id, r.cluster_id)
-             for r in neardup_clusters(docs, pairs, "doc_id").collect()}
-    large = {(r.doc_id, r.cluster_id)
-             for r in neardup_clusters(
-                 docs, pairs, "doc_id", propagate_rounds=16).collect()}
-    assert small == large
-    assert {(i, 1) for i in range(1, 11)} <= small
+        [(i, i + 1) for i in range(1, 16)] + [(17, 18)], ["a", "b"])
+    got = {(r.doc_id, r.cluster_id)
+           for r in neardup_clusters(docs, pairs, "doc_id").collect()}
+    assert got == ({(i, 1) for i in range(1, 17)} | {(17, 17), (18, 17)}
+                   | {(i, i) for i in range(19, 21)})

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from airflow_project_flight_price_analysis_spark.operators.layout import (
     interleave_bits,
     quantize_ts,
-    zorder_write,
 )
 from tests.conftest import SF_SMALL
 
@@ -19,6 +18,21 @@ SF_MED = "/root/testdata/sf0.01"
 
 BASE = 1704067200  # 2024-01-01 UTC — events span Jan 2024
 T_SHIFT = 18       # ~3-day cells → ~10 cells over the month (4 bits)
+
+
+def zorder_write(df, dims, path: str, n_files: int, bits: int = 16,
+                 z_col: str = "__z") -> None:
+    """Cluster ``df`` along the z-curve of ``dims`` and write exactly
+    ``n_files`` parquet files, each covering a compact z-range (hence a
+    compact box in dimension space). One range exchange total; the
+    per-file sort is the write-side sort any clustered layout pays."""
+    (
+        df.withColumn(z_col, interleave_bits(dims, bits=bits))
+        .repartitionByRange(n_files, z_col)
+        .sortWithinPartitions(z_col)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
 
 
 def file_minmax(spark, path: str, cols: list[str]) -> list[dict]:

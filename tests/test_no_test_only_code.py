@@ -48,7 +48,7 @@ def _module_name(path: Path) -> str:
 
 class _Module:
     """One source file: its top-level bindings, the names its imports
-    bind (at any depth), its import-time code and its ``__all__``."""
+    bind (at any depth) and its import-time code."""
 
     def __init__(self, path: Path):
         self.path = path
@@ -63,8 +63,6 @@ class _Module:
                 self.defs.setdefault(n, []).append(node)
             if not isinstance(node, _DEFS + _IMPORTS):
                 self.top.append(node)
-        self.public = [c.value for node in self.defs.get("__all__", [])
-                       for c in ast.walk(node) if isinstance(c, ast.Constant)]
         self.imports: dict[str, tuple[str, str | None]] = {}
         for node in ast.walk(self.tree):
             if isinstance(node, ast.Import):
@@ -174,11 +172,10 @@ def unreached_definitions() -> list[str]:
         m = mods[key[0]]
         stack.extend(_refs(mods, m, m.defs[key[1]]))
         if m.name not in loaded:
-            # a used module's import-time code runs, and the names it
-            # declares public in __all__ count as used
+            # a used module's import-time code runs; an ``__all__``
+            # entry is a string, not a use
             loaded.add(m.name)
             stack.extend(_refs(mods, m, m.top))
-            stack.extend(ref for n in m.public for ref in _lookup(mods, m, n))
 
     return sorted(
         f"{m.rel}::{name}"

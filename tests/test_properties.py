@@ -311,10 +311,9 @@ def test_threshold_sample_deterministic_and_nested(spark, rows):
     ),
 )
 def test_salted_join_identical_to_plain_join(spark, probe_rows, build_rows):
-    """operators/skew.py must be result-identical to the unsalted join
-    on arbitrary (skewed) data — inner and left, with and without a
-    hot-key set. The tiny key domain makes every generated dataset
-    heavily skewed by construction."""
+    """operators/skew.py must be result-identical to the unsalted inner
+    join on arbitrary (skewed) data. The tiny key domain makes every
+    generated dataset heavily skewed by construction."""
     import collections
 
     from airflow_project_flight_price_analysis_spark.operators.skew import (
@@ -322,28 +321,22 @@ def test_salted_join_identical_to_plain_join(spark, probe_rows, build_rows):
     )
 
     # NULL keys ride along: the contract is parity with the PLAIN join
-    # (where NULL matches nothing), so the salt/hot-flag machinery must
-    # not accidentally give NULL keys different routing (ADVICE r5 class)
+    # (where NULL matches nothing), so the salt machinery must not
+    # accidentally give NULL keys different routing (ADVICE r5 class)
     probe = spark.createDataFrame(probe_rows, "pk int, pv int")
     build = spark.createDataFrame(build_rows, "bk int, bv int")
-    hot = spark.createDataFrame([(k,) for k in {0, 1}], ["k"])
 
-    for how in ("inner", "left"):
-        plain = collections.Counter(
-            (r.pk, r.pv, r.bk, r.bv)
-            for r in probe.join(
-                build, probe.pk == build.bk, how
-            ).collect()
-        )
-        for hk in (None, hot):
-            salted = collections.Counter(
-                (r.pk, r.pv, r.bk, r.bv)
-                for r in salted_equi_join(
-                    probe, build, "pk", "bk", buckets=4, how=how,
-                    hot_keys=hk,
-                ).collect()
-            )
-            assert salted == plain, (how, hk is not None)
+    plain = collections.Counter(
+        (r.pk, r.pv, r.bk, r.bv)
+        for r in probe.join(build, probe.pk == build.bk, "inner").collect()
+    )
+    salted = collections.Counter(
+        (r.pk, r.pv, r.bk, r.bv)
+        for r in salted_equi_join(
+            probe, build, "pk", "bk", buckets=4
+        ).collect()
+    )
+    assert salted == plain
 
 
 @settings(max_examples=8, deadline=None)
@@ -374,10 +367,8 @@ def test_banded_range_join_matches_bruteforce(
 ):
     """operators/asof.py banded_range_join must equal the brute-force
     inequality join (inclusive bounds) on arbitrary generated events,
-    for arbitrary look-back/look-ahead bands — inner and left. Left rows
-    carry a nullable payload: a MATCHED left row holding a NULL must not
-    be re-emitted as a spurious null-extended row (the r5 ADVICE
-    null-unsafe anti-join bug)."""
+    for arbitrary look-back/look-ahead bands. Left rows carry a nullable
+    payload, which must ride through the join untouched."""
     import collections
 
     from airflow_project_flight_price_analysis_spark.operators.asof import (
@@ -393,7 +384,7 @@ def test_banded_range_join_matches_bruteforce(
     )
     out = banded_range_join(
         left, right, ["k"], "lts", "rts",
-        lower_seconds=lower, upper_seconds=upper, how="inner",
+        lower_seconds=lower, upper_seconds=upper,
     )
     got = collections.Counter((r.lid, r.rid) for r in out.collect())
     expected = collections.Counter(
@@ -403,18 +394,6 @@ def test_banded_range_join_matches_bruteforce(
         if lk == rk and lower <= rt - lt <= upper
     )
     assert got == expected
-    out_left = banded_range_join(
-        left, right, ["k"], "lts", "rts",
-        lower_seconds=lower, upper_seconds=upper, how="left",
-    )
-    got_left = collections.Counter(
-        (r.lid, r.rid) for r in out_left.collect()
-    )
-    matched_lids = {lid for lid, _ in expected}
-    expected_left = expected + collections.Counter(
-        (lid, None) for _, _, _, lid in lrows if lid not in matched_lids
-    )
-    assert got_left == expected_left
 
 
 @settings(max_examples=6, deadline=None)
@@ -497,8 +476,9 @@ def test_bmp_roundtrip_property(doc_id):
 
 
 def test_bucketed_merge_matches_dict_replay(spark, tmp_path):
-    """Randomized sequences of update/delete merges must equal the
-    obvious dict semantics — the serializable-MERGE oracle."""
+    """Randomized sequences of update/delete merges (deletes routed by
+    ``op_col``) must equal the obvious dict semantics — the
+    serializable-MERGE oracle."""
     import random
 
     from airflow_project_flight_price_analysis_spark.operators.transactional import (
@@ -512,11 +492,12 @@ def test_bucketed_merge_matches_dict_replay(spark, tmp_path):
         for step in range(4):
             keys = rng.sample(range(12), rng.randint(1, 5))
             op = rng.choice(["update", "delete"])
-            rows = [(k, f"s{seed}v{step}k{k}") for k in keys]
-            t.merge(spark, spark.createDataFrame(rows, "k long, v string"),
-                    when_matched=op)
+            rows = [(k, f"s{seed}v{step}k{k}", op) for k in keys]
+            t.merge(spark,
+                    spark.createDataFrame(rows, "k long, v string, op string"),
+                    op_col="op")
             if op == "update":
-                model.update(dict(rows))
+                model.update({k: v for k, v, _ in rows})
             else:
                 for k in keys:
                     model.pop(k, None)

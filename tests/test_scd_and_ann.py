@@ -159,40 +159,46 @@ def test_ledger_schema_drift_fails_loud(spark):
 # --- r7: epoch shuffle + temperature mixture (operators/sampling.py) -------
 
 def test_epoch_shuffle_reproducible_and_partition_invariant(spark):
-    from airflow_project_flight_price_analysis_spark.operators.sampling import (
-        epoch_shuffle,
-    )
-
-    df = spark.range(0, 500).withColumnRenamed("id", "k")
-    o1 = [r.k for r in epoch_shuffle(df, "k", seed=7).collect()]
-    o2 = [r.k for r in epoch_shuffle(df.repartition(13), "k",
-                                     seed=7).collect()]
-    assert o1 == o2                      # layout-independent
-    assert sorted(o1) == list(range(500))  # a permutation
-    o3 = [r.k for r in epoch_shuffle(df, "k", seed=8).collect()]
-    assert o3 != o1                      # epochs differ
-    # sharded form: epoch_shard is a pure function of (key, seed, n) —
-    # identical across runs AND input partitionings — shards are
-    # reasonably balanced, and shard-major + in-shard order recovers
-    # the global hash order
+    """epoch_shard is a pure function of (key, seed, n) — identical
+    across runs AND input partitionings — shards are reasonably
+    balanced, and the shard-major training order is a permutation that
+    changes with the seed and walks the epoch hash in order (shards are
+    contiguous hash bands)."""
     from pyspark.sql import functions as F
 
-    sharded = epoch_shuffle(df, "k", seed=7, n_shards=4)
-    assign1 = {r.k: r.epoch_shard for r in sharded.collect()}
-    assign2 = {r.k: r.epoch_shard
-               for r in epoch_shuffle(df.repartition(17), "k", seed=7,
-                                      n_shards=4).collect()}
+    from airflow_project_flight_price_analysis_spark.operators.sampling import (
+        epoch_shuffle,
+        md5_epoch_hash,
+    )
+
+    def training_order(df, seed):
+        """(shard of each key, shard-major concatenation of the shards'
+        in-partition orders) — what a loader reading the
+        ``partitionBy("epoch_shard")`` files in shard order sees."""
+        rows = epoch_shuffle(df, "k", seed=seed, n_shards=4).collect()
+        per_shard: dict[int, list[int]] = {}
+        for r in rows:
+            per_shard.setdefault(r.epoch_shard, []).append(r.k)
+        order = [k for s in sorted(per_shard) for k in per_shard[s]]
+        return {r.k: r.epoch_shard for r in rows}, order, per_shard
+
+    df = spark.range(0, 500).withColumnRenamed("id", "k")
+    assign1, o1, per_shard = training_order(df, 7)
+    assign2, o2, _ = training_order(df.repartition(17), 7)
     assert assign1 == assign2            # deterministic shard mapping
-    sizes = [r.n for r in sharded.groupBy("epoch_shard")
-             .agg(F.count("*").alias("n")).collect()]
+    assert o1 == o2                      # layout-independent order
+    assert sorted(o1) == list(range(500))  # a permutation
+    _, o3, _ = training_order(df, 8)
+    assert o3 != o1                      # epochs differ
+    sizes = [len(ks) for ks in per_shard.values()]
     assert len(sizes) == 4 and min(sizes) > 50
-    # shards are CONTIGUOUS hash bands: walking the global shuffle
-    # order must visit shard 0's rows first, then shard 1's, ... — the
-    # shard sequence along o1 is non-decreasing, so shard-major
-    # concatenation recovers the global training order
-    seq = [assign1[k] for k in o1]
+    # shards are CONTIGUOUS hash bands: the shard-major order visits
+    # the epoch hash in non-decreasing order, so every hash in shard s
+    # lies below every hash in shard s+1
+    h = {r.k: r.h for r in
+         df.select("k", md5_epoch_hash(F.col("k"), 7).alias("h")).collect()}
+    seq = [h[k] for k in o1]
     assert seq == sorted(seq)
-    assert sorted(assign1) == sorted(o1)  # every row sharded
 
 
 def test_md5_shard_helpers_match_epoch_shuffle_assignment(spark):
@@ -213,8 +219,8 @@ def test_md5_shard_helpers_match_epoch_shuffle_assignment(spark):
     for seed in (7, 8):
         via_op = {
             r.k: r.epoch_shard
-            for r in epoch_shuffle(df, "k", seed=seed, n_shards=8,
-                                   hash_fn="md5").collect()
+            for r in epoch_shuffle(df, "k", seed=seed,
+                                   n_shards=8).collect()
         }
         via_expr = {
             r.k: r.s
@@ -257,34 +263,6 @@ def test_temperature_mixture_flattens_small_sources(spark):
     keys30 = {r.k for r in t3.collect()}
     keys15 = {r.k for r in t3_small.collect()}
     assert keys15 <= keys30 and keys15
-
-
-def test_epoch_shard_floor_semantics_at_band_boundaries(spark):
-    """r7 ADVICE: the decimal quotient used to round HALF_UP before the
-    int cast, sending hashes within ~5e-7 of a band boundary one shard
-    high and h = 2^63-1 to shard == n_shards. The exact-floor form pins
-    [0, n-1] at every endpoint and boundary-adjacent value."""
-    from pyspark.sql import functions as F
-
-    from airflow_project_flight_price_analysis_spark.operators.sampling import (
-        _shard_of,
-    )
-
-    n = 16
-    width = 2 ** 64 // n  # exact: 2^64 divisible by 16
-    lo, hi = -(2 ** 63), 2 ** 63 - 1
-    probes = [lo, hi, -1, 0, 1]
-    expected = {}
-    for b in range(1, n):  # band edges and their neighbours
-        edge = lo + b * width
-        probes += [edge - 1, edge, edge + 1]
-    for h in probes:
-        expected[h] = (h + 2 ** 63) // width
-    df = spark.createDataFrame([(h,) for h in probes], "h long")
-    got = {r.h: r.s for r in
-           df.select("h", _shard_of(F.col("h"), n).alias("s")).collect()}
-    assert got == expected
-    assert all(0 <= s < n for s in got.values())
 
 
 # --- r11: group-cohesive holdout split (operators/sampling.py) --------------

@@ -38,8 +38,8 @@ def test_asof_join_includes_same_timestamp_click(spark, tmp_path):
 
 def test_banded_left_join_null_payload_not_duplicated(spark):
     """ADVICE r5 repro: one left row with a NULL payload and one matching
-    right row must yield exactly ONE output row (the null-unsafe
-    left_anti rebuild used to re-emit it null-extended)."""
+    right row must yield exactly ONE output row, payload and match
+    intact."""
     from airflow_project_flight_price_analysis_spark.operators.asof import (
         banded_range_join,
     )
@@ -48,9 +48,9 @@ def test_banded_left_join_null_payload_not_duplicated(spark):
     right = spark.createDataFrame([(1, 100, 7)], "k int, rts int, rid int")
     out = banded_range_join(
         left, right, ["k"], "lts", "rts",
-        lower_seconds=-10, upper_seconds=10, how="left",
+        lower_seconds=-10, upper_seconds=10,
     ).collect()
-    assert len(out) == 1 and out[0].rid == 7
+    assert len(out) == 1 and out[0].rid == 7 and out[0].pay is None
 
 
 def test_banded_range_join_rejects_colliding_names(spark):

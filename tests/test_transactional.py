@@ -43,8 +43,8 @@ def test_merge_delete_semantics(spark, tmp_path):
     t.merge(spark, spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "k long, v string"))
     t.merge(spark, spark.createDataFrame(
-        [(2, "ignored"), (9, "no-op")], "k long, v string"),
-        when_matched="delete")
+        [(2, "ignored", "delete"), (9, "no-op", "delete")],
+        "k long, v string, op string"), op_col="op")
     assert _rows(t, spark) == [(1, "a"), (3, "c")]
 
 
@@ -90,9 +90,10 @@ def test_merge_time_travel_and_empty_delete(spark, tmp_path):
     t = _bm(tmp_path, n_buckets=4)
     t.merge(spark, spark.createDataFrame([(1, "a"), (2, "b")],
                                          "k long, v string"))
-    t.merge(spark, spark.createDataFrame([(1, "x"), (2, "x")],
-                                         "k long, v string"),
-            when_matched="delete")
+    t.merge(spark, spark.createDataFrame([(1, "x", "delete"),
+                                          (2, "x", "delete")],
+                                         "k long, v string, op string"),
+            op_col="op")
     assert _rows(t, spark) == []                      # emptied
     old = t.read(spark, version=1)
     assert sorted((r.k, r.v) for r in old.collect()) == [(1, "a"), (2, "b")]
@@ -201,7 +202,6 @@ def test_table_properties_pin_and_reject_mismatch(spark, tmp_path):
 
 def test_snapshot_diff_statuses_and_flags(spark, tmp_path):
     import pytest
-    from pyspark.sql import functions as F
 
     from airflow_project_flight_price_analysis_spark.operators.transactional import (
         BucketedMergeTable,
@@ -217,19 +217,16 @@ def test_snapshot_diff_statuses_and_flags(spark, tmp_path):
     t.merge(spark, spark.createDataFrame(
         [(1, 11, "a"), (2, 20, "z"), (9, 90, "i")],
         "k long, v long, s string"))
-    t.merge(spark, spark.createDataFrame([(3,)], "k long")
-            .withColumn("v", F.lit(0)).withColumn("s", F.lit("")),
-            when_matched="delete")
+    t.merge(spark, spark.createDataFrame([(3, 0, "", "delete")],
+                                         "k long, v long, s string, op string"),
+            op_col="op")
     got = {r.k: r for r in snapshot_diff(spark, t, 1, 3).collect()}
+    # the unchanged k=4 is excluded
     assert {k: r.diff_status for k, r in got.items()} == \
         {1: "changed", 2: "changed", 3: "removed", 9: "added"}
     assert got[1].old_v == 10 and got[1].new_v == 11
     assert got[2].old_s is None and got[2].new_s == "z"
     assert got[3].new_v is None and got[9].old_v is None
-    # include_unchanged surfaces k=4
-    all_rows = {r.k: r.diff_status for r in snapshot_diff(
-        spark, t, 1, 3, include_unchanged=True).collect()}
-    assert all_rows[4] == "unchanged" and len(all_rows) == 5
     # identical versions diff to empty
     assert snapshot_diff(spark, t, 2, 2).count() == 0
     # missing version raises
@@ -256,8 +253,6 @@ def test_merge_mixed_op_batch(spark, tmp_path):
     assert v == 2  # ONE commit for the whole batch
     assert _rows(t, spark) == [(1, "a"), (2, "B"), (4, "d")]
     assert t.read(spark).columns == ["k", "v"]  # op col not stored
-    with pytest.raises(ValueError, match="op_col requires"):
-        t.merge(spark, mixed, op_col="__op", when_matched="delete")
 
 
 def test_merge_writes_one_file_per_bucket(spark, tmp_path):
