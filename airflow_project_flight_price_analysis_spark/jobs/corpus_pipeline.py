@@ -97,7 +97,8 @@ def curate_corpus(spark: SparkSession, sf_dir: str, out_dir: str, *,
     survivors.unpersist()
     deduped.unpersist()
 
-    out = spark.read.parquet(f"{out_dir}/curated")
+    # read back with the schema just written: no footer-inference job
+    out = spark.read.schema(curated.schema).parquet(f"{out_dir}/curated")
 
     # 5. chunk the curated corpus for training (128-token windows,
     # 96-token stride — the x30 operator shape) into its own table
@@ -123,7 +124,7 @@ def curate_corpus(spark: SparkSession, sf_dir: str, out_dir: str, *,
         "n_after_exact_dedup": n_exact,
         "n_after_neardup": n_neardup,
         "n_written": out.count(),
-        "n_chunks": spark.read.parquet(f"{out_dir}/chunks").count(),
+        "n_chunks": spark.read.schema(chunks.schema).parquet(f"{out_dir}/chunks").count(),
         "splits": {r["split"]: r["n"] for r in
                    out.groupBy("split").agg(F.count("*").alias("n")).collect()},
     }

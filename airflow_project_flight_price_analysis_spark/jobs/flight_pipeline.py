@@ -56,15 +56,18 @@ def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
         # clean_obs counts the bronze scan feeding the build (deduped_rows)
         # and its invalid rows (A7); each dim is counted as it is written
         clean_obs = Observation("clean_metrics")
-        bronze = spark.read.parquet(bronze_path)
+        bronze = star.read_bronze(spark, bronze_path)
         silver = star.clean_flights(bronze, observation=clean_obs)
         schema = star.build_star_schema(silver)
         observed = {name: _counted(getattr(schema, name), name) for name in dims}
         for name, (dim, _) in observed.items():
             dim.write.mode("overwrite").parquet(f"{warehouse}/{name}")
-        # FKs resolve against the dims as written: no dim aggregation reruns
-        fact = star.build_fact(silver, *(spark.read.parquet(f"{warehouse}/{n}")
-                                         for n in ("dim_airlines", "dim_airports")))
+        # FKs resolve against the dims as written: no dim aggregation reruns.
+        # Every table this run wrote is read back with the schema it was
+        # written with: inferring one costs a footer-reading job per read
+        fact = star.build_fact(silver, *(
+            spark.read.schema(observed[n][0].schema).parquet(f"{warehouse}/{n}")
+            for n in ("dim_airlines", "dim_airports")))
         fact.write.mode("overwrite").parquet(f"{warehouse}/fact_flights")
         dims = {name: obs.get["rows"] for name, (_, obs) in observed.items()}
         # the first dim write completes clean_obs. If its shuffle stage came
@@ -76,10 +79,11 @@ def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
         clean = clean_obs.get if dims["dim_airlines"] else _clean_metrics(bronze)
 
         # --- validate (validation.py:17-49, post-dedup semantics) ---
-        # independent read-backs: staged_rows re-counts bronze AFTER the build
-        # (a partition lost or doubled since its scan fails staging_ok)
-        staged_rows = spark.read.parquet(bronze_path).count()
-        fact_rows = spark.read.parquet(f"{warehouse}/fact_flights").count()
+        # independent read-backs: each lists and counts the files on storage
+        # now, so staged_rows re-counts bronze AFTER the build (a partition
+        # lost or doubled since its scan fails staging_ok)
+        staged_rows = star.read_bronze(spark, bronze_path).count()
+        fact_rows = spark.read.schema(fact.schema).parquet(f"{warehouse}/fact_flights").count()
     report = reconcile(source_rows=source_obs.get["rows"], deduped_rows=clean["rows_in"],
                        staged_rows=staged_rows, fact_rows=fact_rows)
     return {"ingested_new_rows": n_new,

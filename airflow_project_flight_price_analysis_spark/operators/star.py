@@ -10,6 +10,12 @@ DataFrame plans. Contrasts with the reference:
   its staging table drops the hash (``ingestion.py:93``). At 100 TB,
   partitioning bronze by hash prefix makes the anti-join a co-partitioned
   sort-merge (SURVEY §7.4.3).
+- Bronze is read with its declared schema (``BRONZE_PARQUET_SCHEMA``, the
+  reference's staging DDL, ``scripts/init_mysql.sql:6-26``), never by
+  inferring one from a footer: inference costs a Spark job per read and
+  looks at one part file only. A part file without ``row_hash`` then
+  reads as NULL hashes, and the anti-join's per-row guard fails the run
+  on the first one instead of re-ingesting those rows.
 - FK resolution is three broadcast hash joins, not driver-side dict maps
   (``transformation.py:43,123-125``) — no collect, no driver memory ceiling.
 - Surrogate keys are ``xxhash64`` of the natural key, not SERIAL
@@ -25,6 +31,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.cleaning import (
     clean_text_expr,
@@ -43,6 +50,14 @@ BRONZE_COLS = [
     "booking_source", "base_fare", "tax_surcharge", "total_fare",
     "seasonality", "days_before_departure",
 ]
+
+#: bronze as ``ingest_increment`` writes it: the CSV's columns as strings,
+#: the content hash, and the load time
+BRONZE_PARQUET_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in BRONZE_COLS]
+    + [T.StructField("row_hash", T.StringType()),
+       T.StructField("load_timestamp", T.TimestampType())]
+)
 
 TEXT_COLS = [
     # transformation.py:56-59 — the 7 standardized text columns
@@ -66,20 +81,25 @@ def dedup_against_ledger(incoming: DataFrame, ledger: DataFrame | None) -> DataF
     """D1 — drop rows whose hash is already in the ledger, then drop
     in-batch duplicates (keep one row per hash, ingestion.py:82-83).
 
-    A ledger that EXISTS but lacks ``row_hash`` is schema drift, not
-    first-run — silently skipping the anti-join would re-ingest the
-    entire source (the exact failure ingest_increment's fail-loud read
-    exists to prevent). ``None`` (genuinely absent path) means first
-    run."""
+    A ledger row without a hash is schema drift, not new data: a part
+    file written without ``row_hash`` (an older bronze, see
+    ``ROW_HASH_VERSION``) reads as NULL hashes under the declared schema,
+    and skipping those rows in the anti-join would silently re-ingest
+    them. The guard fails the job on the first such row, whichever part
+    file holds it. ``None`` (genuinely absent path) means first run."""
     hashed = with_row_hash(incoming)
     if ledger is not None:
-        if "row_hash" not in ledger.columns:
-            raise ValueError(
-                "dedup_against_ledger: ledger exists but has no "
-                f"'row_hash' column (schema drift? columns={ledger.columns})"
-            )
-        hashed = hashed.join(ledger.select("row_hash"), "row_hash", "left_anti")
+        guarded = F.coalesce("row_hash", F.raise_error(F.lit(
+            "dedup_against_ledger: a ledger row has no row_hash (schema drift: "
+            "a part file written without the hash column?)")))
+        hashed = hashed.join(ledger.select(guarded.alias("row_hash")), "row_hash", "left_anti")
     return hashed.dropDuplicates(["row_hash"])
+
+
+def read_bronze(spark: SparkSession, bronze_path: str) -> DataFrame:
+    """Bronze with its declared schema: no footer-inference job, and every
+    part file read alike (a missing column reads as NULL)."""
+    return spark.read.schema(BRONZE_PARQUET_SCHEMA).parquet(bronze_path)
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -107,7 +127,7 @@ def ingest_increment(spark: SparkSession, incoming: DataFrame, bronze_path: str)
 
     Returns the number of newly ingested rows.
     """
-    bronze = spark.read.parquet(bronze_path) if path_exists(spark, bronze_path) else None
+    bronze = read_bronze(spark, bronze_path) if path_exists(spark, bronze_path) else None
     fresh = dedup_against_ledger(incoming, bronze)
     fresh = fresh.withColumn("load_timestamp", F.current_timestamp())
     # the count and the write share one lineage: cache the anti-join
@@ -225,10 +245,11 @@ def build_dim_date(silver: DataFrame) -> DataFrame:
 
 @dataclass
 class StarSchema:
+    """The three dims; the fact is built by ``build_fact`` against the
+    dims as written."""
     dim_airlines: DataFrame
     dim_airports: DataFrame
     dim_date: DataFrame
-    fact_flights: DataFrame
 
 
 def build_fact(silver: DataFrame,
@@ -274,8 +295,5 @@ def build_fact(silver: DataFrame,
 
 
 def build_star_schema(silver: DataFrame) -> StarSchema:
-    dim_airlines = build_dim_airlines(silver)
-    dim_airports = build_dim_airports(silver)
-    dim_date = build_dim_date(silver)
-    fact = build_fact(silver, dim_airlines, dim_airports)
-    return StarSchema(dim_airlines, dim_airports, dim_date, fact)
+    return StarSchema(build_dim_airlines(silver), build_dim_airports(silver),
+                      build_dim_date(silver))

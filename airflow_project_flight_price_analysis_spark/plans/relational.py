@@ -91,16 +91,18 @@ _HASH_COLS_SQL = "concat_ws('|', " + ", ".join(_lp(e) for e in (
 )) + ")"
 
 
-def _row_hash_cols():
-    return [
-        F.col("l_orderkey"),
-        F.col("l_linenumber"),
-        F.col("l_quantity").cast("decimal(18,2)"),
-        F.col("l_extendedprice").cast("decimal(18,2)"),
-        F.col("l_returnflag"),
-        F.col("l_linestatus"),
-        F.col("l_shipdate").cast("date"),
-    ]
+#: the hashed lineitem columns, in hash order, and the casts that make
+#: their string forms engine-portable (doubles as decimals, timestamp as date)
+_HASH_COLS = ["l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
+              "l_returnflag", "l_linestatus", "l_shipdate"]
+_HASH_CASTS = {"l_quantity": "decimal(18,2)", "l_extendedprice": "decimal(18,2)",
+               "l_shipdate": "date"}
+
+
+def _hash_inputs(li: DataFrame) -> DataFrame:
+    """``li``'s hashed columns, each cast under its own name."""
+    return li.select(*(F.col(c).cast(_HASH_CASTS[c]).alias(c) if c in _HASH_CASTS else c
+                       for c in _HASH_COLS))
 
 
 def q08_row_hash_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,7 +111,7 @@ def q08_row_hash_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile. Doubles are decimal-cast before stringification so the hash is
     engine-portable; at scale sha2-256 replaces md5 (see row_hash_expr)."""
     li = load_table(spark, sf_dir, "lineitem")
-    hashed = li.select(row_hash_expr(_row_hash_cols()).alias("row_hash"))
+    hashed = _hash_inputs(li).select(row_hash_expr(_HASH_COLS).alias("row_hash"))
     return hashed.agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("row_hash").alias("n_unique"),
@@ -123,7 +125,7 @@ def q09_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix so this is a co-partitioned SMJ, not a broadcast (SURVEY §7.4.3).
     """
     li = load_table(spark, sf_dir, "lineitem")
-    hashed = li.withColumn("row_hash", row_hash_expr(_row_hash_cols()))
+    hashed = _hash_inputs(li).withColumn("row_hash", row_hash_expr(_HASH_COLS))
     ledger = hashed.filter(F.year("l_shipdate") < 1997).select("row_hash")
     fresh = hashed.join(ledger, "row_hash", "left_anti")
     return fresh.agg(F.count("*").alias("n_new_rows"))

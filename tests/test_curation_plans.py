@@ -482,6 +482,14 @@ def test_x67_direct_and_prefix_agree_on_real_data(spark):
     assert direct == prefix and len(direct) > 0
 
 
+def _write_documents(spark, rows, sf_dir, mode="errorifexists"):
+    """(doc_id, lang, text) rows as a documents table with every declared
+    column: the loader rejects a table that lacks one."""
+    (spark.createDataFrame(rows, "doc_id long, lang string, text string")
+     .withColumns({"source": F.lit("test"), "n_chars": F.length("text").cast("long")})
+     .write.mode(mode).parquet(f"{sf_dir}/documents.parquet"))
+
+
 def test_x67_prefix_bound_boundary_hot_shingles(spark, tmp_path):
     """Pin the probe-side prefix bound ``n − ⌈t·n⌉ + 1`` at its exact
     boundary, in the worst case for the rare-first order: every doc is
@@ -504,9 +512,7 @@ def test_x67_prefix_bound_boundary_hot_shingles(spark, tmp_path):
     rows += [(100 + i, "en", " ".join(f"z{i}n{j}" for j in range(12)))
              for i in range(3)]
     sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        rows, "doc_id long, lang string, text string"
-    ).write.parquet(f"{sf_dir}/documents.parquet")
+    _write_documents(spark, rows, sf_dir)
 
     expected_pairs = {(a, b) for a in range(k) for b in range(k) if a < b}
     for strategy in ("direct", "prefix"):
@@ -538,9 +544,7 @@ def test_x67_auto_switches_to_prefix_above_threshold(spark, tmp_path, monkeypatc
         (3, "en", "totally different words here now"),
     ]
     sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        rows, "doc_id long, lang string, text string"
-    ).write.parquet(f"{sf_dir}/documents.parquet")
+    _write_documents(spark, rows, sf_dir)
 
     monkeypatch.setattr(curation, "CONTAINMENT_DIRECT_MAX_DOCS", 1)
     monkeypatch.setattr(curation, "_CONTAINMENT_STRATEGY", {})
@@ -579,9 +583,7 @@ def test_x67_prefix_equals_direct_on_random_corpora(spark, tmp_path_factory,
         (i, "en", " ".join(words)) for i, words in enumerate(word_lists)
     ]
     sf_dir = str(tmp_path_factory.mktemp("x67prop"))
-    spark.createDataFrame(
-        rows, "doc_id long, lang string, text string"
-    ).write.parquet(f"{sf_dir}/documents.parquet")
+    _write_documents(spark, rows, sf_dir)
     direct = sorted(map(tuple,
                         _containment_pairs(spark, sf_dir, "direct").collect()))
     prefix = sorted(map(tuple,
@@ -600,9 +602,7 @@ def test_x67_auto_memo_invalidates_on_regeneration(spark, tmp_path,
 
     sf_dir = str(tmp_path)
     small = [(1, "en", "alpha beta gamma delta")]
-    spark.createDataFrame(
-        small, "doc_id long, lang string, text string"
-    ).write.parquet(f"{sf_dir}/documents.parquet")
+    _write_documents(spark, small, sf_dir)
     monkeypatch.setattr(curation, "CONTAINMENT_DIRECT_MAX_DOCS", 2)
     monkeypatch.setattr(curation, "_CONTAINMENT_STRATEGY", {})
     curation._containment_pairs(spark, sf_dir, "auto").collect()
@@ -613,9 +613,7 @@ def test_x67_auto_memo_invalidates_on_regeneration(spark, tmp_path,
         (2, "en", "alpha beta gamma zeta"),
         (3, "en", "unrelated words entirely here"),
     ]
-    spark.createDataFrame(
-        bigger, "doc_id long, lang string, text string"
-    ).write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
+    _write_documents(spark, bigger, sf_dir, mode="overwrite")
     os.utime(f"{sf_dir}/documents.parquet", (1e9, 2e9))  # force mtime change
     curation._containment_pairs(spark, sf_dir, "auto").collect()
     assert "prefix" in curation._CONTAINMENT_STRATEGY.values()

@@ -274,7 +274,7 @@ def test_x09_certification_sample_is_capped(spark, tmp_path):
                  F.col("id").cast("string")).alias("text"),
         F.lit("en").alias("lang"),
         F.lit("synthetic").alias("source"),
-    )
+    ).withColumn("n_chars", F.length("text").cast("long"))
     docs.coalesce(4).write.parquet(str(tmp_path / "documents.parquet"))
 
     df = entrymod.queries()["x09_simhash_pairs"](spark, str(tmp_path))

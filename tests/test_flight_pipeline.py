@@ -116,12 +116,12 @@ def test_silver_cleaning_and_validity_filter(spark, csv_file, tmp_path):
 
 
 def test_star_schema_shapes(spark, csv_file, tmp_path):
-    *_, schema = _run_pipeline(spark, csv_file, tmp_path)
+    *_, silver, schema = _run_pipeline(spark, csv_file, tmp_path)
     assert schema.dim_airlines.count() == 3
     # airports deduped on code: DAC, CXB, ZYL, CGP
     assert schema.dim_airports.count() == 4
     # fact: BAD_DATE_ROW dropped for null date → 2 rows
-    fact = schema.fact_flights.collect()
+    fact = star.build_fact(silver, schema.dim_airlines, schema.dim_airports).collect()
     assert len(fact) == 2
     assert all(r.airline_id is not None for r in fact)
     dim_date = {r.date_id.isoformat(): r for r in schema.dim_date.collect()}
@@ -136,7 +136,7 @@ def test_reconciliation_gate(spark, csv_file, tmp_path):
         source_rows=raw.count(),
         deduped_rows=bronze.count(),
         staged_rows=bronze.count(),
-        fact_rows=schema.fact_flights.count(),
+        fact_rows=star.build_fact(silver, schema.dim_airlines, schema.dim_airports).count(),
     )
     assert report.staging_ok
     # 2 of 4 deduped rows lost (bad fare, bad date) = 50% > 1% budget
@@ -204,6 +204,36 @@ def test_run_pipeline_runs_three_count_actions(spark, csv_file, tmp_path):
     _, executions = _executions_of(spark, run_pipeline, spark, csv_file, str(tmp_path / "wh"))
     counts = [e.description() for e in executions if e.description().startswith("count")]
     assert len(counts) == 3, counts
+
+
+def _jobs_outside_sql(spark, fn, *args):
+    """``fn(*args)`` and the ids of the Spark jobs it started that belong
+    to no SQL execution (a schema-inference footer read is one)."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+    as_java = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    lo = sc.dagScheduler().numTotalJobs()
+    out = fn(*args)
+    hi = sc.dagScheduler().numTotalJobs()
+    sc.listenerBus().waitUntilEmpty()
+    in_sql = {int(j) for e in as_java(store.executionsList())
+              for j in as_java(e.jobs().keySet())}
+    return out, [j for j in range(lo, hi) if j not in in_sql]
+
+
+def test_run_pipeline_starts_no_job_outside_sql(spark, csv_file, tmp_path):
+    """Every table a run reads has a known schema: neither a full load nor
+    a rerun starts a footer-inference job (5 and 6 on the inferring reads)."""
+    from airflow_project_flight_price_analysis_spark.jobs.flight_pipeline import (
+        run_pipeline,
+    )
+
+    wh = str(tmp_path / "wh")
+    for _ in ("full", "rerun"):
+        _, stray = _jobs_outside_sql(spark, run_pipeline, spark, csv_file, wh)
+        assert stray == []
+    # the declared bronze schema is the one the ingest writes
+    assert spark.read.parquet(f"{wh}/bronze_flights").schema == star.BRONZE_PARQUET_SCHEMA
 
 
 def test_empty_first_load_is_a_noop(spark, tmp_path):
@@ -324,6 +354,33 @@ def test_ingest_surfaces_corrupt_bronze(spark, csv_file, tmp_path):
         f.write("this is not parquet")
     with pytest.raises(Exception):
         star.ingest_increment(spark, raw, bronze)
+
+
+@pytest.mark.parametrize("old_part", ["part-00000-0.snappy.parquet",
+                                      "part-99999-z.snappy.parquet"],
+                         ids=["sorts_first", "sorts_last"])
+def test_bronze_part_without_hash_fails_loud(spark, csv_file, tmp_path, old_part):
+    """One part file written before bronze kept ``row_hash``, beside
+    current ones: whichever footer a reader looks at, the ingest must
+    fail instead of re-ingesting the old file's rows as new."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    bronze = str(tmp_path / "bronze")
+    assert star.ingest_increment(spark, read_flights_csv(spark, csv_file), bronze) == 4
+    extra_row = SECOND_ROW.replace("ZYL", "SPD")
+    extra = tmp_path / "extra.csv"
+    extra.write_text("\n".join([CSV_HEADER, extra_row]) + "\n")
+    old = str(tmp_path / "old")
+    (read_flights_csv(spark, str(extra)).withColumn("load_timestamp", F.current_timestamp())
+     .coalesce(1).write.parquet(old))
+    os.rename(glob.glob(f"{old}/part-*.parquet")[0], os.path.join(bronze, old_part))
+    with open(csv_file, "a") as f:
+        f.write(extra_row + "\n")
+    with pytest.raises(Exception, match="schema drift"):
+        star.ingest_increment(spark, read_flights_csv(spark, csv_file), bronze)
 
 
 def test_ingest_reads_only_bronze_hashes(spark, csv_file, tmp_path):

@@ -143,17 +143,23 @@ def test_bloom_rejects_mixed_key_types(spark):
         bloom_semi_join(probe, build, "k", "k", expected_items=4)
 
 
-def test_ledger_schema_drift_fails_loud(spark):
+def test_ledger_schema_drift_fails_loud(spark, tmp_path):
+    """A bronze written without ``row_hash`` (before bronze kept its
+    hash) is schema drift, not a first run: ingesting over it must fail,
+    not re-ingest every row."""
     import pytest
 
     from airflow_project_flight_price_analysis_spark.operators.star import (
-        dedup_against_ledger,
+        BRONZE_COLS,
+        ingest_increment,
     )
 
-    incoming = spark.createDataFrame([(1, "a")], "id long, v string")
-    drifted = spark.createDataFrame([("h",)], "hash string")  # renamed col
-    with pytest.raises(ValueError, match="schema drift"):
-        dedup_against_ledger(incoming, drifted)
+    incoming = spark.createDataFrame([tuple(f"v{i}" for i in range(17))],
+                                     ", ".join(f"{c} string" for c in BRONZE_COLS))
+    bronze = str(tmp_path / "bronze")
+    incoming.withColumn("load_timestamp", F.current_timestamp()).write.parquet(bronze)
+    with pytest.raises(Exception, match="schema drift"):
+        ingest_increment(spark, incoming, bronze)
 
 
 # --- r7: epoch shuffle + temperature mixture (operators/sampling.py) -------

@@ -25,9 +25,11 @@ def test_asof_join_includes_same_timestamp_click(spark, tmp_path):
         (6, 30, "error", 3_500_000_000_000),
     ]
     # ts stored as long nanoseconds, mirroring the driver testdata layout
-    # that sources.testdata.load_table normalizes via timestamp_micros.
+    # that sources.testdata.load_table normalizes via timestamp_micros;
+    # value and props complete the declared table
     spark.createDataFrame(
-        rows, "event_id long, user_id long, event_type string, ts long"
+        [(*r, 0.0, "{}") for r in rows],
+        "event_id long, user_id long, event_type string, ts long, value double, props string",
     ).write.parquet(f"{sf_dir}/events.parquet")
 
     got = {r["event_id"]: r for r in q32_asof_join(spark, sf_dir).collect()}

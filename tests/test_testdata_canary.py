@@ -2,14 +2,18 @@
 
 In round 3 the driver silently regenerated ``events.parquet`` with a new
 physical type for ``ts`` (TIMESTAMP(NANOS) → timestamp[us]) and 32 tests
-failed with a Catalyst stack trace that named none of them. This canary
-opens every testdata table at sf0.001 and asserts the loader-normalized
-schema (names + Spark types), so the next regeneration fails ONE obvious
-test with the table name in the message.
+failed with a Catalyst stack trace that named none of them. The loader
+reads every table with its declared schema, so its output schema alone
+no longer shows drift: this canary compares each declared schema with
+the one Spark infers from the files, at every scale factor present, and
+asserts the loader-normalized schema (names + Spark types), so the next
+regeneration fails ONE obvious test with the table name in the message.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 
 import pytest
@@ -18,6 +22,7 @@ from airflow_project_flight_price_analysis_spark.sources.testdata import (
     TABLES,
     events_stream,
     load_table,
+    read_schema,
     register_views,
 )
 
@@ -96,6 +101,14 @@ EXPECTED = {
 
 @pytest.mark.parametrize("name", TABLES)
 def test_loader_schema_matches_contract(spark, name):
+    for sf_dir in sorted(glob.glob(os.path.join(os.path.dirname(SF_SMALL), "sf*"))):
+        declared, _ = read_schema(spark, sf_dir, name)
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        assert declared == inferred, (
+            f"testdata table {name!r} drifted at {sf_dir}: the files hold "
+            f"{inferred.simpleString()}, sources/testdata.py declares "
+            f"{declared.simpleString()}; update SCHEMAS (and this canary) together."
+        )
     df = load_table(spark, SF_SMALL, name)
     got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     assert got == EXPECTED[name], (
@@ -117,7 +130,7 @@ def test_events_loader_yields_values(spark):
     assert row.n > 0, "events table is empty at sf0.001"
     assert 2000 <= row.lo <= row.hi <= 2100, (
         f"events.ts normalization is off: year range [{row.lo}, {row.hi}] — "
-        "storage type probably changed (see sources/testdata._events_ts_kind)"
+        "storage type probably changed (see sources/testdata._ts_kind)"
     )
 
 
@@ -158,17 +171,13 @@ def test_tz_aware_nanos_takes_nanos_path(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from airflow_project_flight_price_analysis_spark.sources.testdata import (
-        _events_ts_kind,
-    )
-
     t = pq.read_table(f"{SF_SMALL}/events.parquet")
     ts_nanos_tz = t.column("ts").cast(pa.timestamp("ns", tz="UTC"), safe=False)
     pq.write_table(
         t.set_column(t.schema.get_field_index("ts"), "ts", ts_nanos_tz),
         tmp_path / "events.parquet",
     )
-    assert _events_ts_kind(str(tmp_path)) == "nanos"
+    assert read_schema(spark, str(tmp_path), "events")[1] == "nanos"
     df = load_table(spark, str(tmp_path), "events")
     assert df.schema["ts"].dataType.simpleString() == "timestamp"
     got = df.selectExpr("min(ts) AS lo", "max(ts) AS hi", "count(*) AS n").first()
@@ -199,3 +208,27 @@ def test_canary_catches_dtype_corruption(spark, tmp_path):
     assert df.schema["ts"].dataType.simpleString() == "timestamp"
     lo = df.selectExpr("min(year(ts)) AS lo").first().lo
     assert lo < 2000  # the drift IS detectable by test_events_loader_yields_values
+
+
+def test_load_table_starts_no_job(spark):
+    """Declared schemas: loading every table submits no Spark job (an
+    inferring read submits one per table to read a footer)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("load_table_no_job", "load every testdata table")
+    try:
+        for name in TABLES:
+            load_table(spark, SF_SMALL, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("load_table_no_job")) == []
+
+
+def test_missing_column_names_table_and_column(spark, tmp_path):
+    """Spark reads a declared column the file lacks as NULL; the loader's
+    footer check must raise instead, naming the table and the column."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_SMALL}/orders.parquet")
+    pq.write_table(t.drop_columns(["o_totalprice"]), tmp_path / "orders.parquet")
+    with pytest.raises(ValueError, match="'orders'.*'o_totalprice'"):
+        load_table(spark, str(tmp_path), "orders")
