@@ -68,19 +68,18 @@ def row_hash_expr(cols: list[str]) -> Column:
     return F.expr("md5(concat_ws(" + ", ".join(["'|'", *parts]) + "))")
 
 
-def surrogate_key_expr(*natural_key_cols: str) -> Column:
+def surrogate_key_expr(natural_key_col: str) -> Column:
     """Distributed surrogate key replacing SERIAL (SURVEY §7.4 decision (c)).
 
     ``xxhash64(natural key)``: stable across runs, re-derivable without a
     join, no global sequence bottleneck (``monotonically_increasing_id`` is
     unstable; ``row_number()`` over a global order is a single-partition
     shuffle at 100 TB). Reference: ``scripts/init_postgres.sql:5,10,27``.
-    Built as one parsed expression over whole column names, as
-    ``row_hash_expr`` is.
+    Built as one parsed expression over the whole column name, as
+    ``row_hash_expr`` is; a NULL key hashes as the sentinel.
     """
-    return F.expr("xxhash64(" + ", ".join(
-        f"coalesce(cast({_quoted(c)} as string), '{NULL_SENTINEL}')"
-        for c in natural_key_cols) + ")")
+    return F.expr(f"xxhash64(coalesce(cast({_quoted(natural_key_col)} as string), "
+                  f"'{NULL_SENTINEL}'))")
 
 
 def clean_text_expr(col: Column | str) -> Column:

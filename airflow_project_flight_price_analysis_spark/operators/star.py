@@ -257,7 +257,7 @@ def build_fact(silver: DataFrame,
                dim_airports: DataFrame) -> DataFrame:
     """FK resolution via broadcast joins; unmatched rows and null dates are
     dropped (inner-join semantics = the reference's dropna,
-    ``transformation.py:134``)."""
+    ``transformation.py:134``). ``silver`` keeps bronze's ``row_hash``."""
     airlines = F.broadcast(dim_airlines.select("airline_id", "airline_name"))
     src_airports = F.broadcast(
         dim_airports.select(F.col("airport_id").alias("source_airport_id"),
@@ -274,8 +274,11 @@ def build_fact(silver: DataFrame,
         .join(src_airports, silver.source_code == src_airports.src_code)
         .join(dst_airports, silver.destination_code == dst_airports.dst_code)
         .select(
-            # flight_id doubles as the dedup key (SURVEY §7.4.1)
-            surrogate_key_expr(*BRONZE_COLS).alias("flight_id"),
+            # flight_id is the bronze row's identity: the hash of its
+            # full raw row, which is also the dedup key (SURVEY §7.4.1).
+            # Hashing the cleaned columns would merge rows the cleaner
+            # folds together (case, whitespace, NULL vs the sentinel).
+            F.xxhash64("row_hash").alias("flight_id"),
             "airline_id",
             "source_airport_id",
             "destination_airport_id",

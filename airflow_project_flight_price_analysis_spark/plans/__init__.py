@@ -46,10 +46,6 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
 # registered query has a green driver row (215/215 after r13). New
 # faces added this round, if any, enter tier 2 automatically.
 
-# No deliberate overflow this round. (Round 4 declared x77 here; its
-# driver row lands in CORRECTNESS_r05 via the no-green-row tier.)
-_BUDGET_OVERFLOW_OK: tuple[str, ...] = ()
-
 # Certification families (r8 verdict item 6): the registry grows ~5
 # queries/round while the driver budget stays ~50, so the freshness
 # floor was heading for 5 rounds by r10. Queries that re-certify the
@@ -92,11 +88,13 @@ _CERT_FAMILIES: tuple[tuple[str, ...], ...] = (
      # (content_hash64 + holdout_thresholds' exact integer bounds)
      "x114_group_holdout_split"),
     # r11 additions (r10 verdict item 3, ahead of the r7-cohort
-    # rotation): the dim-build family all exercises operators/star.py's
-    # union+distinct builders over the same flights scan
+    # rotation): the dim-build family — each face inlines its own
+    # distinct / union+distinct / date-part builder in the shape of
+    # operators/star.py's dim builders (none calls star.py)
     ("q10_dim_airlines", "q11_dim_airports", "q12_dim_date"),
-    # the cleaning family shares functions/cleaning.py's coercion /
-    # regex-standardize / parse expressions
+    # the cleaning family: q07 and q23 call functions/cleaning.py's
+    # parse_stopovers_expr and clean_text_expr; q06 inlines its own
+    # coercion (round/coalesce/cast, not coerce_money_expr)
     ("q06_clean_project", "q07_parse_priority", "q23_standardize_text"),
     # the codec family shares the mapInArrow row adapter
     # (operators/multimodal.py::_map_rows) — WAV and BMP are the two

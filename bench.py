@@ -35,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from airflow_project_flight_price_analysis_spark.plans import all_queries  # noqa: E402
 from airflow_project_flight_price_analysis_spark.session import get_spark  # noqa: E402
+from airflow_project_flight_price_analysis_spark.sources.testdata import load_table  # noqa: E402
 
 HEADLINE = [
     "q01_avg_fare_by_airline",
@@ -307,8 +308,8 @@ def main() -> None:
     # one-time framework initialization. No benchmark table data is
     # pre-read or cached by this.
     from pyspark.sql import functions as F  # noqa: PLC0415
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     (nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
      .groupBy("r_name").agg(F.avg("n_nationkey")).collect())
 

@@ -12,18 +12,7 @@ import math
 import duckdb
 import pandas as pd
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+from airflow_project_flight_price_analysis_spark.sources.testdata import TABLES
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:

@@ -130,6 +130,27 @@ def test_star_schema_shapes(spark, csv_file, tmp_path):
     assert not dim_date["2025-03-14"].is_weekend
 
 
+def test_flight_id_is_the_raw_row_identity(spark):
+    """Bronze rows that clean to the same silver row keep distinct
+    flight_ids: NULL vs the sentinel literal in one column, and two
+    spellings of an airline that differ only in case and padding."""
+    from airflow_project_flight_price_analysis_spark.functions.cleaning import (
+        NULL_SENTINEL,
+    )
+
+    base = dict(zip(star.BRONZE_COLS, GOOD_ROW.split(",")))
+    schema = ", ".join(f"`{c}` string" for c in star.BRONZE_COLS)
+    for pair in (({"booking_source": None}, {"booking_source": NULL_SENTINEL}),
+                 ({"airline": " biman "}, {"airline": "Biman"})):
+        bronze = star.with_row_hash(spark.createDataFrame(
+            [tuple({**base, **v}[c] for c in star.BRONZE_COLS) for v in pair], schema))
+        silver = star.clean_flights(bronze)
+        dims = star.build_star_schema(silver)
+        ids = [r.flight_id for r in star.build_fact(
+            silver, dims.dim_airlines, dims.dim_airports).select("flight_id").collect()]
+        assert len(ids) == 2 and ids[0] != ids[1], pair
+
+
 def test_reconciliation_gate(spark, csv_file, tmp_path):
     _, raw, bronze, silver, schema = _run_pipeline(spark, csv_file, tmp_path)
     report = reconcile(

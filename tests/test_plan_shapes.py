@@ -81,18 +81,6 @@ def test_q01_scan_prunes_columns(spark):
         assert col in read
 
 
-def test_core_queries_have_no_python_udf(spark):
-    """The relational core stays JVM-side: no BatchEvalPython /
-    ArrowEvalPython stages in any oracle-checked relational/KPI plan."""
-    for name, fn in _Q.items():
-        if name.startswith("x"):
-            continue  # extensions may use mapInPandas by design
-        if name == "x17_stream_tumbling":
-            continue
-        plan = _plan(fn(spark, SF_ORACLE))
-        assert "EvalPython" not in plan, f"{name} runs Python per-row"
-
-
 def test_customer_join_strategy_left_to_aqe(spark):
     """customer is a *scaling* dimension (150k·sf rows): q05/q16 must not
     force-broadcast it. With the auto-broadcast threshold disabled, only

@@ -26,27 +26,16 @@ def test_touched_queries_lead():
 
 def test_unverified_queries_fit_in_driver_budget():
     """Every query lacking a green row in recorded CORRECTNESS artifacts
-    must land inside the driver's per-round budget — except the ones
-    explicitly declared as deliberate overflow in
-    ``plans._BUDGET_OVERFLOW_OK`` (still gate- and replica-verified)."""
+    must land inside the driver's per-round budget."""
     names = list(entrymod.queries())
     green = set(plans._latest_green_round())
     late_unverified = [
         n for i, n in enumerate(names)
         if n not in green and i >= DRIVER_BUDGET
-        and n not in plans._BUDGET_OVERFLOW_OK
     ]
     assert not late_unverified, (
         f"unverified queries ordered past the {DRIVER_BUDGET}-query driver "
         f"budget: {late_unverified}"
-    )
-    stale_overflow = [
-        n for n in plans._BUDGET_OVERFLOW_OK
-        if n in names[:DRIVER_BUDGET]
-    ]
-    assert not stale_overflow, (
-        f"overflow-declared queries now fit the budget — clear them from "
-        f"_BUDGET_OVERFLOW_OK: {stale_overflow}"
     )
 
 

@@ -1,8 +1,8 @@
 """Registry-wide physical-plan lint — sweep EVERY registered query's
 plan for the scale anti-patterns the 100 TB design forbids.
 
-Run: python tools/plan_lint.py     (prints one line per finding, then
-a summary; exit 1 if any un-allowlisted finding)
+Run: python tools/plan_lint.py [--post-exec]   (prints one line per
+finding, then a summary; exit 1 if any un-allowlisted finding)
 
 What it flags and why:
 
@@ -12,34 +12,34 @@ What it flags and why:
   ONLY when the broadcast side is a bounded statistic (one row, or a
   few-row threshold table) attached to every row; those sites are
   allowlisted BY QUERY NAME below with the bounded side documented.
-- ``Exchange SinglePartition`` feeding a ``Sort`` or ``Window`` — the
+- ``SinglePartition`` feeding a ``Sort`` or ``Window`` — the
   single-partition funnel: ALL rows through one task. (The same
   exchange under a grand-total ``HashAggregate(keys=[])`` is fine —
   each upstream partition contributes one partial row, so the funnel
   carries |partitions| rows, not |data|.)
-- ``BatchEvalPython`` — row-at-a-time Python UDF. The tree is supposed
-  to contain ZERO (Arrow ``mapInArrow``/``applyInPandas`` show as
-  ``MapInArrow``/``FlatMapGroupsInPandas`` and are fine where used).
+- ``*EvalPython*`` — a Python UDF evaluated per row (``BatchEvalPython``)
+  or per Arrow batch (``ArrowEvalPython``, a scalar ``pandas_udf``). The
+  tree is supposed to contain ZERO (``mapInArrow``/``applyInPandas``
+  show as ``MapInArrow``/``FlatMapGroupsInPandas`` and are fine where
+  used).
+- ``RepeatedScan`` — one source relation scanned more than
+  ``MAX_SCANS_PER_RELATION`` times. Final plans only (see ``_jlint``).
 
-Queries that EXECUTE a streaming protocol inside their builder (the
-availableNow faces) are skipped: their returned DataFrame reads a
-memory sink, so there is no distributed plan to lint — their scale
-properties are pinned by the streaming operators' own docs/tests.
+One implementation, ``_jlint``, walks the JVM plan tree. Its callers:
 
-The lint inspects the PRE-EXECUTION plan (``executedPlan`` before any
-job runs, i.e. the AQE initial plan). That is deliberate: AQE can only
-IMPROVE on it at runtime (broadcast conversion, skew splits), so a
-clean initial plan is the conservative bar.
-
-``--post-exec`` (r11 verdict item 7) adds a second axis: every bench
-HEADLINE face is additionally EXECUTED once at sf0.001 (``collect()``,
-which drives the df's OWN QueryExecution — a noop ``write()`` spawns a
-separate one and leaves this plan un-finalized, ADVICE r12) and the
-FINAL adaptive plan (``isFinalPlan=true`` — what actually ran, after
-AQE's runtime re-planning) is linted with the same rules. This
-catches a funnel that only materializes at runtime (e.g. an AQE
-coalesce collapsing a window's input to one partition) that the
-initial-plan sweep cannot see.
+- the default sweep lints each plan before any job runs (``executedPlan``
+  is then the AQE initial plan). AQE can only IMPROVE on it at runtime
+  (broadcast conversion, skew splits), so a clean initial plan is the
+  conservative bar;
+- ``--post-exec`` additionally EXECUTES every bench HEADLINE face once
+  at sf0.001 (``collect()``, which drives the df's OWN QueryExecution — a
+  noop ``write()`` spawns a separate one and leaves this plan
+  un-finalized) and lints the FINAL adaptive plan (``isFinalPlan=true``
+  — what actually ran). This catches a funnel that only materializes at
+  runtime (e.g. an AQE coalesce collapsing a window's input to one
+  partition) that the initial plan cannot show;
+- ``tests/test_queries_vs_oracle.py`` lints every registered face's plan
+  before executing it against its oracle.
 """
 
 from __future__ import annotations
@@ -56,23 +56,11 @@ from airflow_project_flight_price_analysis_spark.session import get_spark  # noq
 
 SF_DIR = "/root/testdata/sf0.001"
 
-#: availableNow protocol faces — the builder runs a real streaming
-#: query and returns a memory-sink read; nothing distributed to lint.
-STREAM_FACES = {
-    "x17_stream_tumbling",
-    "x24_stream_dedup",
-    "x25_stream_sessions",
-    "x29_stream_interval_join",
-    "x55_stream_static_enrich",
-    "x111_stateful_running_totals",
-    "x112_stateful_ttl_eviction",
-}
-
 #: (query, pattern) pairs adjudicated legitimate. Every entry documents
 #: WHY the flagged node is bounded. Grep-audited when added; a new
 #: finding outside this list fails the lint. (BNLJs whose build side is
 #: a grand ``keys=[]`` aggregate — the one-row statistic attachment —
-#: are auto-accepted by ``_bnlj_is_bounded`` and never reach here.)
+#: are auto-accepted by ``_jbnlj_is_bounded`` and never reach here.)
 ALLOWLIST: dict[tuple[str, str], str] = {
     # --- BNLJ with a bounded (but not provably-one-row) build side ---
     ("x37_nearest_centroid", "BroadcastNestedLoopJoin"):
@@ -141,83 +129,13 @@ ALLOWLIST: dict[tuple[str, str], str] = {
 }
 
 
-def _indent(line: str) -> int:
-    return len(line) - len(line.lstrip(" +-:*"))
-
-
-def _subtree(lines: list[str], i: int) -> list[str]:
-    """The plan lines forming node i's subtree (deeper indent until the
-    next node at i's indent or shallower)."""
-    base = _indent(lines[i])
-    out = []
-    for j in range(i + 1, len(lines)):
-        if lines[j].strip() and _indent(lines[j]) <= base:
-            break
-        out.append(lines[j])
-    return out
-
-
-def _bnlj_is_bounded(lines: list[str], i: int) -> bool:
-    """True iff the BroadcastNestedLoopJoin at line i broadcasts a
-    GRAND aggregate (``HashAggregate(keys=[]``) — exactly one row, the
-    statistic-attachment pattern (a global mean/total/threshold joined
-    onto every row). Anything else (a keyed build side) must be
-    allowlisted by name with its bound documented."""
-    sub = _subtree(lines, i)
-    for k, line in enumerate(sub):
-        if "BroadcastExchange" not in line:
-            continue
-        # the build side: the grand aggregate must be INSIDE it, so a
-        # keys=[] agg on the streamed side can never false-accept
-        for inner in _subtree(sub, k):
-            # SortAggregate prints the SINGULAR `key=[]` where
-            # Hash/ObjectHashAggregate print `keys=[]` — a grand
-            # min(struct(...)) forces the sort-based impl (r14,
-            # x130's boundary-row statistic), same one-row bound
-            if re.search(r"(Hash|Sort|ObjectHash)Aggregate\(keys?=\[\]",
-                         inner):
-                return True
-    return False
-
-
-def _lint(plan: str) -> list[str]:
-    found: list[str] = []
-    lines = plan.splitlines()
-    if "CartesianProduct" in plan:
-        found.append("CartesianProduct")
-    for i, line in enumerate(lines):
-        if "BroadcastNestedLoopJoin" in line and not _bnlj_is_bounded(lines, i):
-            found.append("BroadcastNestedLoopJoin")
-    if "BatchEvalPython" in plan:
-        found.append("BatchEvalPython")
-    # single-partition funnel: Exchange SinglePartition whose CONSUMER
-    # (the nearest enclosing node, i.e. the previous line at a smaller
-    # indent) is a Sort or Window — all rows through one task. The
-    # same exchange under HashAggregate(keys=[]) / CollectLimit is the
-    # bounded grand-total pattern and passes.
-    for i, line in enumerate(lines):
-        if "Exchange SinglePartition" not in line:
-            continue
-        indent = len(line) - len(line.lstrip(" +-:*"))
-        consumer = ""
-        for j in range(i - 1, -1, -1):
-            pj = lines[j]
-            ij = len(pj) - len(pj.lstrip(" +-:*"))
-            if ij < indent and pj.strip():
-                consumer = pj.strip()
-                break
-        if re.search(r"\b(Sort|Window|WindowGroupLimit)\b", consumer):
-            found.append(f"SinglePartition->({consumer[:60]})")
-    return found
-
-
-# --- post-exec axis: JVM plan-tree walk ------------------------------------
-# The FINAL adaptive plan's toString interleaves query-stage and
-# cached-plan reprints whose indentation resets mid-tree, which breaks
-# the text subtree walk above (x83's one-row statistic BNLJs were
-# false-flagged 70x from one plan). The post-exec axis therefore walks
-# the actual SparkPlan tree via py4j — query stages, reused exchanges,
-# and in-memory relations are unwrapped structurally, not textually.
+# --- the JVM plan-tree walk ------------------------------------------------
+# A FINAL adaptive plan's toString interleaves query-stage and
+# cached-plan reprints whose indentation resets mid-tree, so a walk of
+# the text misreads it (x83's one-row statistic BNLJs were false-flagged
+# 70x from one plan). The lint walks the actual SparkPlan tree via py4j —
+# query stages, reused exchanges, and in-memory relations are unwrapped
+# structurally, not textually.
 
 def _jchildren(node) -> list:
     cname = node.getClass().getSimpleName()
@@ -291,8 +209,6 @@ def _jscan_counts(root) -> dict[str, int]:
     Reused exchanges are NOT re-walked (a ReusedExchangeExec consumer
     shares the original's single execution), so the count reflects
     real re-reads."""
-    import re as _re
-
     counts: dict[str, int] = {}
     seen_reuse: set[int] = set()
 
@@ -319,7 +235,7 @@ def _jscan_counts(root) -> dict[str, int]:
                 path = ";".join(
                     roots.apply(i).toString() for i in range(roots.size()))
             except Exception:  # noqa: BLE001 — fall back to the text form
-                m = _re.search(r"Location:[^\[]*\[([^\]]*)",
+                m = re.search(r"Location:[^\[]*\[([^\]]*)",
                                node.simpleString(3))
                 path = m.group(1) if m else node.nodeName()
             counts[path] = counts.get(path, 0) + 1
@@ -330,7 +246,18 @@ def _jscan_counts(root) -> dict[str, int]:
     return counts
 
 
+def _is_initial(root) -> bool:
+    """True iff ``root`` is an AQE plan that has not run yet."""
+    return (root.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+            and "isFinalPlan=false" in root.simpleString(10))
+
+
 def _jlint(root) -> list[str]:
+    """The findings for the plan tree under ``root``. RepeatedScan is
+    checked on a final plan only: AQE reuses an exchange only as it
+    creates query stages, so an initial plan still shows one scan per
+    consumer of a shared subtree (x07, x15, x61, x108 and x121 would
+    flag there and pass on the plan that runs)."""
     found: list[str] = []
     for n in _jwalk(root):
         cname = n.getClass().getSimpleName()
@@ -338,61 +265,59 @@ def _jlint(root) -> list[str]:
             found.append("CartesianProduct")
         elif cname == "BroadcastNestedLoopJoinExec" and not _jbnlj_is_bounded(n):
             found.append("BroadcastNestedLoopJoin")
-        elif cname in ("BatchEvalPythonExec", "BatchEvalPythonUDTFExec"):
-            found.append("BatchEvalPython")
+        elif "EvalPython" in cname:
+            found.append(cname.removesuffix("Exec"))
         elif cname in ("SortExec", "WindowExec", "WindowGroupLimitExec"):
             # the funnel: this operator's input IS a single-partition
-            # shuffle (same consumer-of-exchange rule as the text lint)
+            # shuffle
             feeder = _jthrough(_jchildren(n)[0])
             if "Exchange" in feeder.getClass().getSimpleName() and \
                     "SinglePartition" in feeder.simpleString(10):
                 found.append(
                     f"SinglePartition->({cname.removesuffix('Exec')})")
-    for path, cnt in _jscan_counts(root).items():
-        if cnt > MAX_SCANS_PER_RELATION:
-            found.append(f"RepeatedScan->({cnt}x {path[:50]})")
+    if not _is_initial(root):
+        for path, cnt in _jscan_counts(root).items():
+            if cnt > MAX_SCANS_PER_RELATION:
+                found.append(f"RepeatedScan->({cnt}x {path[:50]})")
     return found
+
+
+def verdicts(name: str, df) -> list[tuple[str, str | None]]:
+    """Each finding in ``df``'s current physical plan, paired with its
+    ``ALLOWLIST`` reason for face ``name`` (None: not allowlisted)."""
+    return [(pat, ALLOWLIST.get((name, pat.split("->")[0])))
+            for pat in _jlint(df._jdf.queryExecution().executedPlan())]
 
 
 def main(post_exec: bool = False) -> int:
     spark = get_spark(app_name="fpa-plan-lint")
-    queries = all_queries()
     post_exec_faces: set[str] = set()
     if post_exec:
         from bench import HEADLINE  # noqa: PLC0415
 
-        post_exec_faces = set(HEADLINE) - STREAM_FACES
+        post_exec_faces = set(HEADLINE)
     failures: list[str] = []
     n_linted = n_post = 0
-    for name, fn in queries.items():
-        if name in STREAM_FACES:
-            continue
+    for name, fn in all_queries().items():
         t0 = time.time()
         df = fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
         n_linted += 1
-        checks = [("", _lint(plan))]
+        checks = [("", verdicts(name, df))]
         if name in post_exec_faces:
             # run the face once via collect(): a write()/noop sink
             # spawns a SEPARATE QueryExecution, leaving THIS df's plan
-            # un-executed (isFinalPlan=false — ADVICE r12, verified
-            # empirically); collect() drives the df's own
-            # QueryExecution, matching tests/test_plan_shapes.py::
+            # un-executed (isFinalPlan=false); collect() drives the
+            # df's own QueryExecution, matching tests/test_plan_shapes.py::
             # _final_plan. sf0.001 keeps the collected sets tiny.
             df.collect()
-            root = df._jdf.queryExecution().executedPlan()
-            if root.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-                assert "isFinalPlan=true" in \
-                    root.toString().splitlines()[0], (
-                        f"{name}: post-exec plan did not finalize")
-            checks.append(("post-exec ", _jlint(root)))
+            assert not _is_initial(df._jdf.queryExecution().executedPlan()), (
+                f"{name}: post-exec plan did not finalize")
+            checks.append(("post-exec ", verdicts(name, df)))
             n_post += 1
-        for axis, pats in checks:
-            for pat in pats:
-                key = (name, pat.split("->")[0])
-                if key in ALLOWLIST:
-                    print(f"allow  {axis}{name}: {pat}  "
-                          f"[{ALLOWLIST[key]}]")
+        for axis, found in checks:
+            for pat, why in found:
+                if why is not None:
+                    print(f"allow  {axis}{name}: {pat}  [{why}]")
                 else:
                     print(f"FLAG   {axis}{name}: {pat}")
                     failures.append(f"{axis}{name}: {pat}")
@@ -400,8 +325,7 @@ def main(post_exec: bool = False) -> int:
         if dt > 10:
             print(f"slow-build {name}: {dt:.1f}s (builder runs side effects)")
     print(f"\nlinted {n_linted} query plans "
-          f"({len(STREAM_FACES)} stream faces skipped; "
-          f"{n_post} post-exec final plans); "
+          f"({n_post} post-exec final plans); "
           f"{len(failures)} un-allowlisted findings")
     spark.stop()
     return 1 if failures else 0
