@@ -274,10 +274,9 @@ def build_fact(silver: DataFrame,
         .join(src_airports, silver.source_code == src_airports.src_code)
         .join(dst_airports, silver.destination_code == dst_airports.dst_code)
         .select(
-            # flight_id is the bronze row's identity: the hash of its
-            # full raw row, which is also the dedup key (SURVEY §7.4.1).
-            # Hashing the cleaned columns would merge rows the cleaner
-            # folds together (case, whitespace, NULL vs the sentinel).
+            # the raw row's identity, as the dedup key is (SURVEY §7.4.1):
+            # a hash of the cleaned columns would merge rows the cleaner
+            # folds together (case, padding, NULL vs the sentinel)
             F.xxhash64("row_hash").alias("flight_id"),
             "airline_id",
             "source_airport_id",

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from airflow_project_flight_price_analysis_spark.functions.cleaning import NULL_SENTINEL
 from airflow_project_flight_price_analysis_spark.operators import star
 from airflow_project_flight_price_analysis_spark.sources.flights_csv import (
     read_flights_csv,
@@ -134,10 +135,6 @@ def test_flight_id_is_the_raw_row_identity(spark):
     """Bronze rows that clean to the same silver row keep distinct
     flight_ids: NULL vs the sentinel literal in one column, and two
     spellings of an airline that differ only in case and padding."""
-    from airflow_project_flight_price_analysis_spark.functions.cleaning import (
-        NULL_SENTINEL,
-    )
-
     base = dict(zip(star.BRONZE_COLS, GOOD_ROW.split(",")))
     schema = ", ".join(f"`{c}` string" for c in star.BRONZE_COLS)
     for pair in (({"booking_source": None}, {"booking_source": NULL_SENTINEL}),
