@@ -42,14 +42,10 @@ from ..functions.cleaning import (
     surrogate_key_expr,
 )
 from ..session import hadoop_fs
+from ..sources.flights_csv import RENAME_MAP
 
-BRONZE_COLS = [
-    "airline", "source_code", "source_name", "destination_code",
-    "destination_name", "departure_datetime", "arrival_datetime",
-    "duration_hours", "stopovers", "aircraft_type", "class",
-    "booking_source", "base_fare", "tax_surcharge", "total_fare",
-    "seasonality", "days_before_departure",
-]
+#: the CSV's 17 columns under their engine names, in file order
+BRONZE_COLS = list(RENAME_MAP.values())
 
 #: bronze as ``ingest_increment`` writes it: the CSV's columns as strings,
 #: the content hash, and the load time
@@ -74,7 +70,7 @@ MONEY_COLS = ["duration_hours", "base_fare", "tax_surcharge", "total_fare"]
 
 def with_row_hash(df: DataFrame) -> DataFrame:
     """P4 — content hash over all bronze columns (ingestion.py:69)."""
-    return df.withColumn("row_hash", row_hash_expr([c for c in BRONZE_COLS if c in df.columns]))
+    return df.withColumn("row_hash", row_hash_expr(BRONZE_COLS))
 
 
 def dedup_against_ledger(incoming: DataFrame, ledger: DataFrame | None) -> DataFrame:
@@ -125,6 +121,15 @@ def ingest_increment(spark: SparkSession, incoming: DataFrame, bronze_path: str)
     them; a run after bronze files are lost re-ingests exactly the rows
     they held.
 
+    File sizing: the append is sized as it is written, so bronze needs no
+    compaction pass. Without a hint it would write one file per cached
+    dedup partition (``spark.sql.shuffle.partitions``, empty ones
+    included): AQE keeps a cached plan's output partitioning
+    (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is
+    off). The ``rebalance`` hint sits above the cache, and AQE sizes its
+    partitions from the data: one file for a small increment,
+    ``advisoryPartitionSizeInBytes``-sized files at scale.
+
     Returns the number of newly ingested rows.
     """
     bronze = read_bronze(spark, bronze_path) if path_exists(spark, bronze_path) else None
@@ -135,7 +140,7 @@ def ingest_increment(spark: SparkSession, incoming: DataFrame, bronze_path: str)
     try:
         n_new = fresh.count()
         if n_new:
-            fresh.write.mode("append").parquet(bronze_path)
+            fresh.hint("rebalance").write.mode("append").parquet(bronze_path)
     finally:
         fresh.unpersist()
     return n_new
@@ -155,11 +160,7 @@ def clean_flights(df: DataFrame, observation=None) -> DataFrame:
     length calls (``transformation.py:75-79``) — at 100 TB a pre/post
     ``count()`` pair is two additional full-table passes."""
     for c in TEXT_COLS:
-        if c in df.columns:
-            df = df.withColumn(c, clean_text_expr(c))
-    missing = [c for c in MONEY_COLS if c not in df.columns]
-    for c in missing:  # transformation.py:70-72 — absent column → 0.0
-        df = df.withColumn(c, F.lit(0.0))
+        df = df.withColumn(c, clean_text_expr(c))
     df = df.withColumns({c: coerce_money_expr(c) for c in MONEY_COLS})
     df = df.withColumn("stopovers", parse_stopovers_expr("stopovers"))
     df = df.withColumn(

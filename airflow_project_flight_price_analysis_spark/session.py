@@ -5,7 +5,9 @@ per-executor: AQE enabled (runtime re-plan, skew-join handling, partition
 coalescing), shuffle partitions sized to cores (not the 200 default), UTC
 session timezone (parquet testdata is written tz-naive; DuckDB oracle reads
 it UTC-naive, so a non-UTC session tz would shift every timestamp), and
-Arrow enabled for the few pandas-UDF code paths.
+Arrow enabled for the few pandas-UDF code paths. Python workers get the
+package's parent directory on their ``PYTHONPATH``, so a worker can
+unpickle package code whatever directory the driver was started from.
 """
 
 from __future__ import annotations
@@ -13,6 +15,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the directory that holds the package, for the Python workers' path
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -41,6 +46,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

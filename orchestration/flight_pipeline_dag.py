@@ -6,14 +6,12 @@ Mirrors the reference DAG structure (``dags/flight_pipeline_dag.py``):
 - readiness sensors before work                          (:30-46)
 - linear deps sensors >> ingest >> transform >> validate (:68)
 
-One linear DAG, one run at a time (``max_active_runs=1``): the weekly
-bronze compaction and its swap run downstream of the pipeline, behind a
-weekly gate. As a separately scheduled DAG it could list bronze while a
-pipeline run appended to it, and the swap would move those rows, and
-the hashes stored with them, into ``bronze_flights.old``. The next run
-would re-ingest them, but until then bronze would lack rows the star
-just built from them, and an append committing during the swap would
-fail or land in the rollback copy.
+One linear DAG, one run at a time (``max_active_runs=1``): two
+overlapping runs would anti-join the same bronze and both append the
+same new rows, so bronze would hold them twice, and a run whose
+read-back counts the other run's append fails ``staging_ok``. Each
+append is sized as it is written (``star.ingest_increment``), so there
+is no compaction task.
 
 Differences by design:
 - Task bodies are ``spark-submit`` invocations of
@@ -26,8 +24,8 @@ Differences by design:
   state (SURVEY.md §2.7).
 
 The warehouse (``FPA_WAREHOUSE``) must be a mounted file-system path:
-the weekly swap publishes the compacted table with ``mv``, which an
-object-store URI does not support.
+the readiness probe checks its parent directory with ``os.path.isdir``,
+so an object-store URI holds the DAG at its sensor.
 
 Import-gated: Airflow is not installed in the build container; this
 module is importable only where Airflow is (it no-ops otherwise so the
@@ -42,7 +40,6 @@ from datetime import datetime, timedelta
 try:
     from airflow import DAG
     from airflow.operators.bash import BashOperator
-    from airflow.operators.python import ShortCircuitOperator
     from airflow.sensors.python import PythonSensor
 
     HAVE_AIRFLOW = True
@@ -59,10 +56,6 @@ PY_FILES = os.environ.get(
     "FPA_PY_FILES", os.path.join(os.path.dirname(__file__), "fpa_package.zip")
 )
 LAUNCHER = os.path.join(os.path.dirname(__file__), "launch_flight_pipeline.py")
-MAINT_LAUNCHER = os.path.join(
-    os.path.dirname(__file__), "launch_maintenance.py"
-)
-
 PIPELINE_CMD = (
     f"{SPARK_SUBMIT} --deploy-mode cluster "
     "--conf spark.sql.adaptive.enabled=true "
@@ -71,65 +64,10 @@ PIPELINE_CMD = (
 )
 
 
-def _maint_cmd(args: str) -> str:
-    return (
-        f"{SPARK_SUBMIT} --deploy-mode cluster "
-        f"--py-files {PY_FILES} {MAINT_LAUNCHER} {args}"
-    )
-
-
 def _warehouse_ready() -> bool:
     """Readiness probe (reference: SqlSensor SELECT 1, poke 10s/timeout
     600s, flight_pipeline_dag.py:30-46). Here: storage reachable."""
     return os.path.isdir(os.path.dirname(WAREHOUSE))
-
-
-def _compaction_due(data_interval_end, **_) -> bool:
-    """Weekly gate: compact after the run that ends on a Sunday (the
-    slot the @weekly preset fires at). Other days skip compaction and
-    the swap."""
-    return data_interval_end.weekday() == 6
-
-
-def _swap(src: str) -> str:
-    # Rerun-safe at EVERY crash point, not just after complete
-    # success (r7 ADVICE + r8 review):
-    # - outer guard on the staged .compact: a retry after the
-    #   swap already completed (or where compaction never
-    #   produced output) is a no-op instead of deleting the
-    #   rollback and mv-ing the LIVE table away with nothing to
-    #   replace it;
-    # - the rollback rotation (drop last week's .old, move the
-    #   live table to .old) is additionally guarded on the live
-    #   table existing: a retry after a crash BETWEEN the two
-    #   mv steps (X already at X.old, X.compact still staged)
-    #   skips straight to publishing X.compact and PRESERVES
-    #   the rollback — the unguarded form re-ran `rm -rf
-    #   {src}.old` first, destroying the only pre-compaction
-    #   copy and then failing forever at `mv {src}`.
-    # Plain `mv X X.old` against an existing .old would NEST
-    # and fail by week 3, hence the rm inside the inner guard.
-    # The no-.compact branch distinguishes 'already swapped'
-    # (live table present — a benign retry) from 'nothing ever
-    # staged' (NEITHER present — no state a completed swap can
-    # leave, so a compaction that silently produced no output
-    # fails HERE instead of being masked by a green no-op; r8
-    # ADVICE).
-    return (
-        f"if [ -d {src}.compact ]; then "
-        f"if [ -d {src} ]; then "
-        f"rm -rf {src}.old && mv {src} {src}.old; "
-        f"fi && "
-        f"mv {src}.compact {src}; "
-        f"elif [ -d {src} ]; then "
-        f"echo 'swap: {src} already live, no staged .compact "
-        f"(retry no-op)'; "
-        f"else "
-        f"echo 'swap: neither {src}.compact nor {src} exists "
-        f"— upstream compaction produced no output' >&2; "
-        f"exit 1; "
-        f"fi"
-    )
 
 
 if HAVE_AIRFLOW:
@@ -160,26 +98,5 @@ if HAVE_AIRFLOW:
             bash_command=PIPELINE_CMD,
         )
 
-        weekly_gate = ShortCircuitOperator(
-            task_id="weekly_compaction_gate",
-            python_callable=_compaction_due,
-        )
-
-        # small-file compaction writes a NEW directory; the swap then
-        # publishes it (mv is atomic on the same filesystem)
-        compact_bronze = BashOperator(
-            task_id="compact_bronze",
-            bash_command=_maint_cmd(
-                f"compact --path {WAREHOUSE}/bronze_flights "
-                f"--out {WAREHOUSE}/bronze_flights.compact --target-mb 128"
-            ),
-        )
-
-        swap_compacted = BashOperator(
-            task_id="swap_compacted",
-            bash_command=_swap(f"{WAREHOUSE}/bronze_flights"),
-        )
-
-        # :68 (linear deps), with the weekly maintenance tail
-        (wait_for_storage >> run_pipeline >> weekly_gate
-         >> compact_bronze >> swap_compacted)
+        # :68 (linear deps)
+        wait_for_storage >> run_pipeline

@@ -327,7 +327,9 @@ def test_observations_report_a_stage_that_empties(spark, tmp_path, row, dims):
 def test_lost_bronze_heals_on_rerun(spark, csv_file, tmp_path, whole_table):
     """Bronze is its own hash ledger, so losing bronze files loses their
     hashes with them: a rerun re-ingests exactly the lost rows and reports
-    what the first run reported, with no row ingested twice."""
+    what the run before the loss reported, with no row ingested twice.
+    Each append writes one file, so the one-file case builds bronze from
+    two appends: the fixture without SECOND_ROW, then the whole fixture."""
     import glob
     import os
     import shutil
@@ -337,13 +339,18 @@ def test_lost_bronze_heals_on_rerun(spark, csv_file, tmp_path, whole_table):
     )
 
     wh = tmp_path / "wh"
-    first = run_pipeline(spark, csv_file, str(wh))
     bronze = str(wh / "bronze_flights")
     if whole_table:
+        first = run_pipeline(spark, csv_file, str(wh))
         shutil.rmtree(bronze)
         assert run_pipeline(spark, csv_file, str(wh)) == first
         return
 
+    partial = tmp_path / "partial.csv"
+    partial.write_text("\n".join([CSV_HEADER, GOOD_ROW, DUP_ROW, BAD_FARE_ROW,
+                                   BAD_DATE_ROW]) + "\n")
+    run_pipeline(spark, str(partial), str(wh))
+    first = run_pipeline(spark, csv_file, str(wh))
     rows = {p: spark.read.parquet(p).count()
             for p in glob.glob(os.path.join(bronze, "part-*.parquet"))}
     part, lost = max(rows.items(), key=lambda kv: kv[1])
@@ -356,6 +363,21 @@ def test_lost_bronze_heals_on_rerun(spark, csv_file, tmp_path, whole_table):
     hashes = spark.read.parquet(bronze).groupBy("row_hash").count()
     assert hashes.count() == first["staged_rows"]
     assert hashes.where("count > 1").count() == 0
+
+
+def test_append_is_one_file_and_a_rerun_writes_none(spark, csv_file, tmp_path):
+    """The fixture's append lands as one part file, not one per shuffle
+    partition, and a rerun with no new rows leaves bronze's files as
+    they were."""
+    import os
+
+    bronze = str(tmp_path / "bronze")
+    raw = read_flights_csv(spark, csv_file)
+    assert star.ingest_increment(spark, raw, bronze) == 4
+    files = sorted(os.listdir(bronze))
+    assert len([f for f in files if f.startswith("part-")]) == 1, files
+    assert star.ingest_increment(spark, raw, bronze) == 0
+    assert sorted(os.listdir(bronze)) == files
 
 
 def test_ingest_surfaces_corrupt_bronze(spark, csv_file, tmp_path):

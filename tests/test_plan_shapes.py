@@ -109,48 +109,6 @@ def test_x16_broadcast_is_size_gated(spark):
     assert "BroadcastExchange" in plan  # small corpus keeps the fast path
 
 
-def test_compaction_hits_target_file_count(spark, tmp_path):
-    from airflow_project_flight_price_analysis_spark.operators.compaction import (
-        compact_parquet,
-        dir_bytes,
-    )
-
-    src = str(tmp_path / "frag")
-    # fragment: 40 tiny files
-    spark.range(0, 4000).repartition(40).write.parquet(src)
-    out = str(tmp_path / "compact")
-    target = max(1, dir_bytes(spark, src) // 4)
-    n = compact_parquet(spark, src, out, target_file_bytes=target)
-    files = [f for f in __import__("os").listdir(out) if f.endswith(".parquet")]
-    assert len(files) == n <= 8
-    assert spark.read.parquet(out).count() == 4000
-
-
-def test_compaction_sizes_a_uri_like_a_plain_path(spark, tmp_path):
-    """The file count comes from the path's Hadoop FileSystem, so a
-    ``file://`` URI (like an ``s3://`` warehouse) sizes the same table
-    to the same count as its plain path — not to 0 bytes, one file."""
-    import os
-
-    from airflow_project_flight_price_analysis_spark.operators.compaction import (
-        compact_parquet,
-    )
-
-    src = str(tmp_path / "frag")
-    spark.range(0, 4000).repartition(20).write.parquet(src)
-    data = sum(os.path.getsize(os.path.join(src, f))
-               for f in os.listdir(src) if f.endswith(".parquet"))
-    target = max(1, data // 4)
-    counts = [compact_parquet(spark, path, str(tmp_path / out),
-                              target_file_bytes=target)
-              for path, out in ((src, "by_path"), (f"file://{src}", "by_uri"))]
-    assert counts[0] == counts[1] >= 4, counts
-    for out in ("by_path", "by_uri"):
-        files = [f for f in os.listdir(tmp_path / out)
-                 if f.endswith(".parquet")]
-        assert len(files) == counts[0]
-
-
 def test_x26_single_shuffle(spark):
     """x26's repetition metrics are map-side array expressions: exactly
     one aggregation Exchange (the per-language rollup) plus the

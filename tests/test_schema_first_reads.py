@@ -21,8 +21,6 @@ PKG = "airflow_project_flight_price_analysis_spark"
 #: Readers of paths whose schema the package does not know, mapped to the
 #: reason; a key ending in ``/`` covers the whole directory.
 EXEMPT = {
-    f"{PKG}/operators/compaction.py":
-        "compacts whatever table the caller names; it rewrites the schema it finds",
     f"{PKG}/operators/transactional.py":
         "reads the bucket files of a merge table whose schema the caller chose",
     f"{PKG}/plans/":
