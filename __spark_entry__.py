@@ -41,5 +41,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL per query; omitted keys → rows-only check."""
+    """DuckDB-runnable ANSI SQL per query; every ``queries()`` key has one."""
     return all_oracle_sql()

@@ -115,10 +115,10 @@ def parse_stopovers_expr(col: Column | str) -> Column:
     )
 
 
-def coerce_money_expr(col: Column | str, scale: int = 2) -> Column:
+def coerce_money_expr(col: Column | str) -> Column:
     """Numeric coercion (``dags/tasks/transformation.py:65-72``):
-    ``pd.to_numeric(errors='coerce').fillna(0).round(scale)`` →
-    ``round(coalesce(try_cast(c as double), 0.0), scale)``.
+    ``pd.to_numeric(errors='coerce').fillna(0).round(2)`` →
+    ``round(coalesce(try_cast(c as double), 0.0), 2)``.
 
     ``try_cast`` (not ``cast``): Spark 4 defaults to ANSI mode, where a
     malformed cast throws — coerce-to-null is the reference's contract.
@@ -126,7 +126,7 @@ def coerce_money_expr(col: Column | str, scale: int = 2) -> Column:
     engine pins half-up (FIXTURES.md §5 'numeric coercion').
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.coalesce(c.try_cast("double"), F.lit(0.0)), scale)
+    return F.round(F.coalesce(c.try_cast("double"), F.lit(0.0)), 2)
 
 
 def weekday_expr(date_col: Column | str) -> Column:

@@ -35,12 +35,12 @@ LANG_PROFILES: dict[str, list[str]] = {
 }
 
 
-def tokens_expr(col: Column | str, pattern: str = TOKEN_SPLIT_RE) -> Column:
+def tokens_expr(col: Column | str) -> Column:
     """Whitespace tokens of trimmed text (empty text → empty array)."""
     c = F.col(col) if isinstance(col, str) else col
     t = F.trim(c)
     return F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, pattern)
+        F.split(t, TOKEN_SPLIT_RE)
     )
 
 

@@ -58,8 +58,8 @@ def run_pipeline(spark: SparkSession, csv_path: str, warehouse: str) -> dict:
         clean_obs = Observation("clean_metrics")
         bronze = star.read_bronze(spark, bronze_path)
         silver = star.clean_flights(bronze, observation=clean_obs)
-        schema = star.build_star_schema(silver)
-        observed = {name: _counted(getattr(schema, name), name) for name in dims}
+        observed = {name: _counted(dim, name)
+                    for name, dim in star.build_star_schema(silver).items()}
         for name, (dim, _) in observed.items():
             dim.write.mode("overwrite").parquet(f"{warehouse}/{name}")
         # FKs resolve against the dims as written: no dim aggregation reruns.

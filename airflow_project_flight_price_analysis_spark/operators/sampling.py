@@ -475,11 +475,9 @@ def weighted_systematic_sample(df: DataFrame, key_col: str, weight_col: str,
     # total — persist them or each consumer re-scans the corpus (the
     # r13 RepeatedScan lint rule caught exactly this: 5 source scans
     # where 2 suffice)
-    from ..cache import track_persist  # noqa: PLC0415
-
     bt = d.groupBy("__ws_band").agg(
         F.sum(weight_col).cast("long").alias("__ws_bw")
-    ).transform(track_persist)
+    ).persist()
     off = bt.withColumn(
         "__ws_off",
         F.coalesce(

@@ -27,7 +27,6 @@ DataFrame plans. Contrasts with the reference:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -244,15 +243,6 @@ def build_dim_date(silver: DataFrame) -> DataFrame:
 # Fact (J1 + P14 + P2, transformation.py:121-137)
 # --------------------------------------------------------------------------
 
-@dataclass
-class StarSchema:
-    """The three dims; the fact is built by ``build_fact`` against the
-    dims as written."""
-    dim_airlines: DataFrame
-    dim_airports: DataFrame
-    dim_date: DataFrame
-
-
 def build_fact(silver: DataFrame,
                dim_airlines: DataFrame,
                dim_airports: DataFrame) -> DataFrame:
@@ -297,6 +287,9 @@ def build_fact(silver: DataFrame,
     )
 
 
-def build_star_schema(silver: DataFrame) -> StarSchema:
-    return StarSchema(build_dim_airlines(silver), build_dim_airports(silver),
-                      build_dim_date(silver))
+def build_star_schema(silver: DataFrame) -> dict[str, DataFrame]:
+    """The three dims by table name; the fact is built by ``build_fact``
+    against the dims as written."""
+    return {"dim_airlines": build_dim_airlines(silver),
+            "dim_airports": build_dim_airports(silver),
+            "dim_date": build_dim_date(silver)}

@@ -173,31 +173,42 @@ def _latest_green_round() -> dict[str, int]:
 
 
 def _with_cache_rotation(fn: Callable) -> Callable:
-    """Release the PREVIOUS query invocation's tracked persists before
-    building this one (see ``cache.py`` — harnesses that don't
-    ``clearCache()`` between queries would otherwise accumulate every
-    query's cached blocks across a 133-query sweep)."""
-    import functools
+    """Clear the session cache before building this query.
 
-    from .. import cache
+    Several faces ``persist()`` an intermediate that more than one
+    consumer inside their own plan reads. A face returns an unmaterialized
+    DataFrame, so it cannot unpersist at the right moment; by the time a
+    harness asks for the next query, the previous result has run and its
+    cache has served. Without this, a sweep that never calls
+    ``clearCache()`` itself would keep every face's cached blocks alive.
+
+    This drops EVERY cached plan of the session, including any a caller
+    persisted itself: do not hold a cache across registered face builds.
+    A caller that interleaves builds and collects still gets the same
+    results; a released subplan recomputes per consumer.
+    """
+    import functools
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        cache.release_prior_persists()
+        spark.catalog.clearCache()
         return fn(spark, sf_dir)
 
     return wrapped
 
 
-def _raw_queries() -> dict:
+def _plan_modules() -> tuple:
+    """The registry's plan modules, in registration order."""
     from . import (
         kpi, relational, temporal, extensions, curation, insights, mining,
     )
 
+    return (kpi, relational, temporal, extensions, curation, insights, mining)
+
+
+def _raw_queries() -> dict:
     out: dict = {}
-    for mod in (
-        kpi, relational, temporal, extensions, curation, insights, mining,
-    ):
+    for mod in _plan_modules():
         out.update(mod.QUERIES)
     return out
 
@@ -260,14 +271,8 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def all_oracle_sql() -> dict[str, str]:
-    from . import (
-        kpi, relational, temporal, extensions, curation, insights, mining,
-    )
-
     out: dict = {}
-    for mod in (
-        kpi, relational, temporal, extensions, curation, insights, mining,
-    ):
+    for mod in _plan_modules():
         out.update(mod.ORACLE)
     # mirror the queries() schedule exactly, so the driver sees one
     # order — via the cached name order, not a second full

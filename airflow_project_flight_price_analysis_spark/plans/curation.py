@@ -728,8 +728,6 @@ def x47_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize+shingle+fingerprint stage runs three times (measured
     2.4s → 0.9s at sf0.1; the x08 lesson).
     """
-    from ..cache import track_persist  # noqa: PLC0415
-
     from ..functions.text import fingerprint_expr
     from ..operators.dedup import document_grams
 
@@ -740,8 +738,7 @@ def x47_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise("test"),
     )
     grams = document_grams(docs, "text", "doc_id", shingle_n=5,
-                           keep_cols=("lang", "split")) \
-        .transform(track_persist)
+                           keep_cols=("lang", "split")).persist()
     test_post = grams.filter(F.col("split") == "test").select(
         "id", "lang", F.explode("grams").alias("g")
     )
@@ -1266,12 +1263,10 @@ def tfidf_cosine_pairs(docs: DataFrame, posting_cap: int = TFIDF_POSTING_CAP,
     # persist class — not the wide raw explode (``terms`` stays
     # unpersisted; its two consumers are the tf and df aggregates that
     # the persist of ``w`` already collapses into one materialization).
-    from ..cache import track_persist  # noqa: PLC0415
-
     w = (
         tf.join(F.broadcast(df_t), "term")
         .select("doc_id", "term", (F.col("tf") * idf).alias("w"))
-        .transform(track_persist)
+        .persist()
     )
     norms = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
     a, b = w.alias("a"), w.alias("b")
@@ -1599,7 +1594,6 @@ def x120_count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     across partitions/days at scale: union → sum, the x54/x57 merge
     algebra.
     """
-    from ..cache import track_persist  # noqa: PLC0415
     from ..operators.profiling import (  # noqa: PLC0415
         cms_buckets,
         count_min_estimates,
@@ -1615,7 +1609,7 @@ def x120_count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derivation and the probe; `probed` is consumed by two branches
     # (law aggregate + top-10).
     exact = li.groupBy("suppkey").agg(
-        F.count(F.lit(1)).alias("exact_cnt")).transform(track_persist)
+        F.count(F.lit(1)).alias("exact_cnt")).persist()
     sketch = (
         exact.select(F.explode(F.array(*[
             F.struct(F.lit(i).alias("i"), b.alias("b"))
@@ -1627,8 +1621,7 @@ def x120_count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probed = count_min_estimates(
         exact, sketch, "suppkey", _X120_DEPTH, _X120_WIDTH
-    ).withColumn("overest", F.col("cms_est") - F.col("exact_cnt")) \
-        .transform(track_persist)
+    ).withColumn("overest", F.col("cms_est") - F.col("exact_cnt")).persist()
     law = probed.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.min("overest").alias("min_slack"),
@@ -1967,15 +1960,12 @@ def x60_prefix_filtered_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     x10 but over prefix postings only; verification touches candidate
     pairs, never the corpus square.
     """
-    from ..cache import track_persist  # noqa: PLC0415
-
     from ..operators.dedup import document_grams, prefix_filter_postings
 
     t = 0.5
     docs = load_table(spark, sf_dir, "documents")
     grams = document_grams(docs, "text", "doc_id", shingle_n=3,
-                           keep_cols=("lang",)) \
-        .transform(track_persist)
+                           keep_cols=("lang",)).persist()
     # shared machinery (operators/dedup.prefix_filter_postings): the
     # rare-first ranking, the n − ⌈t·n⌉ + 1 cut, and the lossless df≥2
     # prune are ONE implementation for x60 and x67b, so the certified
@@ -2531,8 +2521,6 @@ def _containment_pairs(
     full postings on (lang, shingle); verification touches candidate
     pairs, never the corpus square.
     """
-    from ..cache import track_persist  # noqa: PLC0415
-
     from ..operators.dedup import document_grams
 
     t = 0.2
@@ -2590,8 +2578,7 @@ def _containment_pairs(
     if strategy != "prefix":
         raise ValueError(f"unknown strategy {strategy!r}")
     grams = document_grams(docs, "text", "doc_id", shingle_n=3,
-                           keep_cols=("lang",)) \
-        .transform(track_persist)
+                           keep_cols=("lang",)).persist()
     # probe-side prefix: first n − ⌈t·n⌉ + 1 shingles, rarest first —
     # the SAME shared machinery as x60 (operators/dedup.
     # prefix_filter_postings), so the certified and product prefix
@@ -2968,8 +2955,6 @@ def x71_sequence_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over event-scale data shuffles only on user_id for the final
     per-user reduce.
     """
-    from ..cache import track_persist  # noqa: PLC0415
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
@@ -2978,7 +2963,7 @@ def x71_sequence_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.withColumn("to_type", F.lead("event_type").over(w))
         .filter(F.col("to_type").isNotNull())
         .select("user_id", F.col("event_type").alias("from_type"), "to_type")
-        .transform(track_persist)
+        .persist()
     )
     cnt = pairs.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).alias("n")
@@ -3341,8 +3326,6 @@ def x76_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginals derive from that tiny frame and ride back as broadcasts.
     Nothing after the first aggregate touches event-scale data.
     """
-    from ..cache import track_persist  # noqa: PLC0415
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.dayofweek("ts").alias("dow")
     )
@@ -3353,7 +3336,7 @@ def x76_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = (
         ev.groupBy("event_type", "dow")
         .agg(F.count(F.lit(1)).alias("observed"))
-        .transform(track_persist)
+        .persist()
     )
     row_m = obs.groupBy("event_type").agg(F.sum("observed").alias("row_n"))
     col_m = obs.groupBy("dow").agg(F.sum("observed").alias("col_n"))
@@ -3425,8 +3408,6 @@ def x77_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a BROADCAST; the burst flags and rollup stay on the tiny bucket
     table. Same one-pass + broadcast-stats shape as x40/x76.
     """
-    from ..cache import track_persist  # noqa: PLC0415
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         (F.floor(F.unix_micros("ts") / F.lit(600_000_000))).alias("bucket"),
@@ -3434,7 +3415,7 @@ def x77_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = (
         ev.groupBy("event_type", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(track_persist)
+        .persist()
     )
     stats = buckets.groupBy("event_type").agg(
         F.avg("n").alias("mu"), F.stddev_pop("n").alias("sigma")
@@ -4094,7 +4075,6 @@ def x122_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     remains the operator's prefilter-pushed scan form
     (profiling.kmv_sketch_table).
     """
-    from ..cache import track_persist  # noqa: PLC0415
     from ..operators.profiling import (  # noqa: PLC0415
         _KMV_DOMAIN,
         kmv_hash,
@@ -4118,7 +4098,7 @@ def x122_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # likely and a deployment must keep a .distinct() on h after the
     # projection. Re-certified vs the unchanged oracle at all three
     # sfs.)
-    dk = li.distinct().transform(track_persist)
+    dk = li.distinct().persist()
     exact = dk.agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
     surv = (
         dk.select(kmv_hash(F.col("key")).alias("h"),
@@ -4529,15 +4509,13 @@ def x125_weighted_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFra
     from ..functions.text import token_count_expr  # noqa: PLC0415
     from ..operators.sampling import weighted_systematic_sample  # noqa: PLC0415
 
-    from ..cache import track_persist  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", token_count_expr("text").cast("long").alias("tokens"))
     # ≤ n_picks rows, consumed by the law aggregate AND the output —
     # persist or the whole selection pipeline runs twice (RepeatedScan
     # lint rule, r13)
     sel = weighted_systematic_sample(
-        docs, "doc_id", "tokens", _X125_PICKS).transform(track_persist)
+        docs, "doc_id", "tokens", _X125_PICKS).persist()
     law = sel.agg(
         F.sum("multiplicity").cast("long").alias("picks_assigned"),
         F.max(
@@ -5001,7 +4979,6 @@ def x129_kmv_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB replays every hash, membership bit, and double ratio
     exactly (the x122 discipline).
     """
-    from ..cache import track_persist  # noqa: PLC0415
     from ..operators.profiling import (  # noqa: PLC0415
         _KMV_DOMAIN,
         kmv_hash,
@@ -5029,7 +5006,7 @@ def x129_kmv_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_key = (
         li.groupBy("key")
         .agg(F.max("a").alias("in_a"), F.max("b").alias("in_b"))
-        .transform(track_persist)
+        .persist()
     )
     surv = (
         per_key.select(kmv_hash(F.col("key")).alias("h"), "in_a", "in_b")
@@ -5217,7 +5194,6 @@ def x130_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zero pairwise covariance, so Var of ANY subset sum is at
     most Var of the total, which Szegedy bounds by W²/(k−1)).
     """
-    from ..cache import track_persist  # noqa: PLC0415
     from ..operators.sampling import priority_sample  # noqa: PLC0415
     from ..session import scale_out  # noqa: PLC0415
 
@@ -5232,7 +5208,7 @@ def x130_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise run the per-row md5 priority draw on one core (A/B at
     # sf0.1: 1.33 → 0.79 s; scale_out no-ops on already-split inputs)
     top = priority_sample(
-        scale_out(li), ["k1", "k2"], "w", k).transform(track_persist)
+        scale_out(li), ["k1", "k2"], "w", k).persist()
     est = (
         top.filter(~F.col("is_boundary"))
         .withColumn("wq", F.expr(
@@ -5249,7 +5225,7 @@ def x130_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus scan disappears; the ≤ |flags|-row exact table feeds both
     # the join and the envelope total.
     exact = li.groupBy("flag").agg(
-        F.sum("w").cast("long").alias("w_exact")).transform(track_persist)
+        F.sum("w").cast("long").alias("w_exact")).persist()
     total = exact.agg(F.sum("w_exact").cast("long").alias("total_w"))
     env = (f"CAST(FLOOR(CAST(3 AS DOUBLE) * CAST(total_w AS DOUBLE)"
            f" / SQRT(CAST({k - 1} AS DOUBLE))) AS BIGINT)")
@@ -5394,7 +5370,6 @@ def x131_fk_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     when c = 1, where the estimator is deterministically exact), and
     the ``fk_candidate`` verdict (est ≥ 9900 bp).
     """
-    from ..cache import track_persist  # noqa: PLC0415
     from ..operators.profiling import kmv_sketch_by_group  # noqa: PLC0415
 
     k = _X131_K
@@ -5437,7 +5412,7 @@ def x131_fk_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     cores = spark.sparkContext.defaultParallelism
     ks_width = (max(1, min(cores, melt_rows // 400_000 + 1))
                 if melt_rows is not None else cores)
-    ks = ks.distinct().repartition(ks_width, "key").transform(track_persist)
+    ks = ks.distinct().repartition(ks_width, "key").persist()
     # ks is already distinct on (g, key), so the sketch skips its own
     # distinct exchange (r14 optimization; the 60-bit hash is 1:1 per
     # key, so the rank window sees the identical row set)
@@ -5869,7 +5844,6 @@ def x134_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces). The exact side is the same table's one-row aggregate —
     the certification harness; the product path keeps the sketches.
     """
-    from ..cache import track_persist  # noqa: PLC0415
     from ..operators.profiling import cms_buckets  # noqa: PLC0415
 
     d, w = _X134_DEPTH, _X134_WIDTH
@@ -5879,7 +5853,7 @@ def x134_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).groupBy("k").agg(
         F.count(F.lit(1)).alias("fr"),
         F.sum("s").alias("fs"),
-    ).transform(track_persist)
+    ).persist()
     both = (
         fr.select(F.explode(F.array(*[
             F.struct(F.lit(i).alias("i"), b.alias("b"))
@@ -6008,7 +5982,6 @@ def x135_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (allowlisted bounded window); the exact CDF probe is ONE corpus
     scan computing all four counts in a single partial aggregate.
     """
-    from ..cache import track_persist  # noqa: PLC0415
     from ..operators.sampling import priority_sample  # noqa: PLC0415
     from ..session import scale_out  # noqa: PLC0415
 
@@ -6027,7 +6000,7 @@ def x135_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("wq", F.expr(
             f"CAST(FLOOR(w_est * CAST({_X130_QUANT} AS DOUBLE)) AS BIGINT)"))
         .select("v", "__ps_h", "wq")
-        .transform(track_persist)
+        .persist()
     )
     wtot = samp.agg(F.sum("wq").cast("long").alias("wq_tot"))
     cum = samp.withColumn(

@@ -178,11 +178,9 @@ def x08_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize+shingle is the CPU-dominant stage and MinHash signatures are
     invariant to the distinct-grams form (measured 3.4s → 2.4s at
     sf0.1)."""
-    from ..cache import track_persist  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents")
     grams = document_grams(docs, "text", "doc_id", keep_cols=("lang",)) \
-        .transform(track_persist)
+        .persist()
     true_pairs = ngram_jaccard_pairs(docs, "text", "doc_id",
                                      block_col="lang", threshold=0.5,
                                      grams=grams)
@@ -221,11 +219,9 @@ def x09_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``simhash_candidate_pairs`` over the sample signatures. The
     full-corpus path in this plan is the banded equi-join alone
     (``has_candidates``)."""
-    from ..cache import track_persist  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents")
     sigs = simhash_signatures(docs, "text", "doc_id")
-    sigs = sigs.transform(track_persist)
+    sigs = sigs.persist()
     banded = simhash_candidate_pairs(sigs, max_hamming=3)
 
     sample_cap = 2000
@@ -237,7 +233,7 @@ def x09_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sigs.crossJoin(F.broadcast(smod))
         .filter(F.col("id") % F.col("smod") == 0)
         .select("id", "simhash")
-        .transform(track_persist)
+        .persist()
     )
     banded_sample = simhash_candidate_pairs(sample, max_hamming=3)
     a, b = sample.alias("a"), sample.alias("b")
@@ -615,8 +611,6 @@ def x115_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantized_cosine_topk,
     )
 
-    from ..cache import track_persist  # noqa: PLC0415
-
     # Persist BOTH shared frames (r13 RepeatedScan rule: the original
     # composition re-scanned embeddings 9× — queries / float baseline /
     # quantized top-k / stats / both error-join sides each re-read the
@@ -638,12 +632,12 @@ def x115_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings"), "vec_id"
     ).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    ).transform(track_persist)
+    ).persist()
     queries = emb.filter(F.col("vec_id") < 10)
     widen = F.transform(F.col("qvec"), lambda x: x.cast("double"))
     qv = quantize_embeddings(emb).filter(F.col("qscale") > 0).select(
         "vec_id", widen.alias("qd")
-    ).transform(track_persist)
+    ).persist()
     stats = qv.agg(
         F.count("*").cast("bigint").alias("n_vectors"),
         F.sum(
@@ -657,7 +651,7 @@ def x115_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15: `exact` feeds TWO consumers (the recall join and the error
     # join) — unpersisted, each re-ran the full float brute-force pass
     # (the face's single most expensive stage, twice). ≤ 50 rows cached.
-    exact = cosine_topk(emb, queries, k=5).transform(track_persist)
+    exact = cosine_topk(emb, queries, k=5).persist()
     qtop = quantized_cosine_topk(emb, queries, k=5).select(
         "query_id", "neighbor_id", F.lit(1).alias("__hit")
     )
@@ -1324,8 +1318,6 @@ def x26_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Flags mirror Gopher's repetition filters: ``n_top_heavy`` = docs
     whose most frequent token exceeds 10% of tokens; ``n_repetitive`` =
     docs whose duplicate-bigram fraction exceeds 20%."""
-    from ..cache import track_persist  # noqa: PLC0415
-
     docs = scale_out(load_table(spark, sf_dir, "documents"), "doc_id")
     # persisted: the five metric expressions below reference ``th`` from
     # inside HOF lambdas, which get no subexpression elimination — an
@@ -1339,7 +1331,7 @@ def x26_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang",
         F.transform(tokens_expr(F.lower(F.col("text"))),
                     lambda t: F.xxhash64(t)).alias("th"),
-    ).transform(track_persist)
+    ).persist()
 
     # run-length fold over the sorted hash array: acc = (prev, run, best)
     sorted_th = F.array_sort("th")
@@ -2273,7 +2265,6 @@ def x100_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     The eval-set count that sizes the filter is one tiny aggregate
     (|eval| rows); fpp=1% only adds verify rows, never errors.
     """
-    from ..cache import track_persist
     from ..functions.text import tokens_expr
     from ..operators.bloom import bloom_semi_join
 
@@ -2284,7 +2275,7 @@ def x100_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: the tokenize+md5 projection feeds the eval count, the
     # bloom build, the exact-verify keys AND the probe — four consumers
     # that would otherwise each re-run the CPU-dominant pass
-    keyed = docs.withColumn("fp", fp).transform(track_persist)
+    keyed = docs.withColumn("fp", fp).persist()
     eval_set = keyed.filter(F.col("doc_id") % 13 == 0).select("fp")
     corpus = keyed.filter(F.col("doc_id") % 13 != 0)
     n_eval = max(eval_set.count(), 1)
@@ -2421,22 +2412,20 @@ def x102_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketched here only because the certification needs its signatures —
     an ingest path would read them from its stored ledger.
     """
-    from ..cache import track_persist
     from ..operators.dedup import minhash_signatures, screen_against_ledger
 
     docs = load_table(spark, sf_dir, "documents")
     # constant block = unblocked truth (the certification harness is
     # exhaustive-by-collision; the product path is the banded screen)
     grams = document_grams(docs.withColumn("__blk", F.lit(1)),
-                           "text", "doc_id", keep_cols=("__blk",)) \
-        .transform(track_persist)
+                           "text", "doc_id", keep_cols=("__blk",)).persist()
     even = F.col("id") % 2 == 0
     sig_corpus = minhash_signatures(docs, "text", "doc_id",
                                     grams=grams.filter(even))
     sig_batch = minhash_signatures(docs, "text", "doc_id",
                                    grams=grams.filter(~even))
     flagged = screen_against_ledger(sig_batch, sig_corpus, threshold=0.5) \
-        .transform(track_persist)
+        .persist()
 
     all_pairs = ngram_jaccard_pairs(docs, "text", "doc_id",
                                     block_col="__blk", threshold=0.25,

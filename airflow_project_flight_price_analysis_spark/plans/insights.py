@@ -64,19 +64,17 @@ def x78_event_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    # persisted (cache.py-tracked): every one of the K iterations joins
+    # persisted: every one of the K iterations joins
     # against p — without the persist each iteration RE-RUNS the
     # event-scale window+aggregate (measured: 22 parquet scans in the
     # executed plan vs 2 with it; the plan-shape test pins the 2).
-    from ..cache import track_persist  # noqa: PLC0415
-
     p = edges.withColumn(
         "p", F.col("n") / F.sum("n").over(W.partitionBy("from_type"))
-    ).select("from_type", "to_type", "p").transform(track_persist)
+    ).select("from_type", "to_type", "p").persist()
 
     nodes = (
         ev.select(F.col("event_type").alias("node"))
-        .distinct().transform(track_persist)
+        .distinct().persist()
     )
     nn = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
     pr = nodes.crossJoin(F.broadcast(nn)).select(
@@ -528,7 +526,6 @@ def x83_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .repartition(n_par, "p")
     )
-    from ..cache import track_persist  # noqa: PLC0415
 
     a, b = ps.alias("a"), ps.alias("b")
     # pairs is consumed twice — the threshold aggregate AND the edge
@@ -542,7 +539,7 @@ def x83_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, (F.col("a.p") == F.col("b.p")) & (F.col("a.s") < F.col("b.s")))
         .groupBy(F.col("a.s").alias("s1"), F.col("b.s").alias("s2"))
         .agg(F.count(F.lit(1)).alias("shared"))
-        .transform(track_persist)
+        .persist()
     )
     st = pairs.agg(
         (F.avg("shared") + 0.5 * F.stddev_pop("shared")).alias("thr")
@@ -552,7 +549,7 @@ def x83_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("shared") >= F.col("thr"))
         .select("s1", "s2")
     )
-    e = e.transform(track_persist)
+    e = e.persist()
     deg = (
         e.select(F.col("s1").alias("v"))
         .unionAll(e.select(F.col("s2").alias("v")))
@@ -578,7 +575,7 @@ def x83_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         # intersect stage (Σ |N+(u) ∩ N+(v)| — the other CPU peak)
         # would run as one task against the broadcast adjacency
         .repartition(n_par, "u", "v")
-        .transform(track_persist)
+        .persist()
     )
     # Triangle count WITHOUT materializing wedge pairs (r12, r11
     # verdict item 3): tri = Σ over oriented edges (u,v) of
@@ -838,8 +835,6 @@ def x86_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, one window pass per source over the value grid, one
     |sources|-row max aggregate.
     """
-    from ..cache import track_persist  # noqa: PLC0415
-
     d = load_table(spark, sf_dir, "documents").select("source", "n_chars")
     # ONE corpus scan: the (source, n_chars) counts are the bounded
     # |sources|×|distinct lengths| grain every other statistic is an
@@ -847,7 +842,7 @@ def x86_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grid downstream. The original five independent aggregates of the
     # raw projection re-scanned documents 5× (r13 RepeatedScan rule).
     cnt_s = d.groupBy("source", "n_chars").agg(
-        F.count(F.lit(1)).alias("c")).transform(track_persist)
+        F.count(F.lit(1)).alias("c")).persist()
     n_s = cnt_s.groupBy("source").agg(F.sum("c").alias("n_src"))
     cnt_g = cnt_s.groupBy("n_chars").agg(F.sum("c").alias("cg"))
     total = cnt_s.agg(F.sum("c").alias("n_tot"))

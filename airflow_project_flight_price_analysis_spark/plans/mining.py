@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..cache import track_persist
 from ..functions.exact_agg import (
     exact_parts,
     exact_parts_oracle,
@@ -50,7 +49,7 @@ def _bm25_raw_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.filter(toks, lambda x: x == F.lit(t))).alias(f"tf{i}")
         for i, t in enumerate(BM25_QUERY_TERMS)
     ]
-    # persisted (cache.py-tracked): consumed by the stats aggregate AND
+    # persisted: consumed by the stats aggregate AND
     # the scoring pass — without it the tokenizer runs the corpus twice.
     # r15 (the x115 cache-width hazard): the single-file documents scan
     # is ONE partition, so the persisted projection — and the tokenizer
@@ -60,7 +59,7 @@ def _bm25_raw_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     per_doc = scale_out(docs, "doc_id").select(
         "doc_id", F.size(toks).alias("dl"), *tf_cols
-    ).transform(track_persist)
+    ).persist()
 
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -729,7 +728,7 @@ def x95_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(track_persist)
+        .persist()
     )
     vocab = (
         term_counts.groupBy("term")
@@ -1183,9 +1182,7 @@ def x99_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized aggregate; the head is a TakeOrdered.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    basket = li.select("l_orderkey", "l_partkey").distinct().transform(
-        track_persist
-    )
+    basket = li.select("l_orderkey", "l_partkey").distinct().persist()
     # one-row broadcast, never a driver-side count (the x78 nn rule)
     n = basket.agg(
         F.countDistinct("l_orderkey").cast("double").alias("n_orders")

@@ -57,8 +57,8 @@ def _run_pipeline(spark, csv_file, tmp_path):
     n_new = star.ingest_increment(spark, raw, bronze_path)
     bronze = spark.read.parquet(bronze_path)
     silver = star.clean_flights(bronze)
-    schema = star.build_star_schema(silver)
-    return n_new, raw, bronze, silver, schema
+    dims = star.build_star_schema(silver)
+    return n_new, raw, bronze, silver, dims
 
 
 def _executions_of(spark, fn, *args):
@@ -117,15 +117,15 @@ def test_silver_cleaning_and_validity_filter(spark, csv_file, tmp_path):
 
 
 def test_star_schema_shapes(spark, csv_file, tmp_path):
-    *_, silver, schema = _run_pipeline(spark, csv_file, tmp_path)
-    assert schema.dim_airlines.count() == 3
+    *_, silver, dims = _run_pipeline(spark, csv_file, tmp_path)
+    assert dims["dim_airlines"].count() == 3
     # airports deduped on code: DAC, CXB, ZYL, CGP
-    assert schema.dim_airports.count() == 4
+    assert dims["dim_airports"].count() == 4
     # fact: BAD_DATE_ROW dropped for null date → 2 rows
-    fact = star.build_fact(silver, schema.dim_airlines, schema.dim_airports).collect()
+    fact = star.build_fact(silver, dims["dim_airlines"], dims["dim_airports"]).collect()
     assert len(fact) == 2
     assert all(r.airline_id is not None for r in fact)
-    dim_date = {r.date_id.isoformat(): r for r in schema.dim_date.collect()}
+    dim_date = {r.date_id.isoformat(): r for r in dims["dim_date"].collect()}
     assert dim_date["2025-03-14"].seasonality == "Eid"
     assert dim_date["2025-03-14"].day_of_week == 4  # Friday
     assert not dim_date["2025-03-14"].is_weekend
@@ -144,17 +144,17 @@ def test_flight_id_is_the_raw_row_identity(spark):
         silver = star.clean_flights(bronze)
         dims = star.build_star_schema(silver)
         ids = [r.flight_id for r in star.build_fact(
-            silver, dims.dim_airlines, dims.dim_airports).select("flight_id").collect()]
+            silver, dims["dim_airlines"], dims["dim_airports"]).select("flight_id").collect()]
         assert len(ids) == 2 and ids[0] != ids[1], pair
 
 
 def test_reconciliation_gate(spark, csv_file, tmp_path):
-    _, raw, bronze, silver, schema = _run_pipeline(spark, csv_file, tmp_path)
+    _, raw, bronze, silver, dims = _run_pipeline(spark, csv_file, tmp_path)
     report = reconcile(
         source_rows=raw.count(),
         deduped_rows=bronze.count(),
         staged_rows=bronze.count(),
-        fact_rows=star.build_fact(silver, schema.dim_airlines, schema.dim_airports).count(),
+        fact_rows=star.build_fact(silver, dims["dim_airlines"], dims["dim_airports"]).count(),
     )
     assert report.staging_ok
     # 2 of 4 deduped rows lost (bad fare, bad date) = 50% > 1% budget

@@ -25,3 +25,13 @@ def test_query_matches_oracle(spark, name):
     flagged = [pat for pat, why in verdicts(name, df) if why is None]
     assert not flagged, f"{name}: plan-lint findings not in ALLOWLIST: {flagged}"
     assert_matches_oracle(df, _ORACLES[name], SF_SMALL, name=name)
+
+
+def test_building_a_face_releases_the_previous_faces_cache(spark):
+    """A face's persisted intermediates stay cached until the next
+    registered face is built, which clears the session cache first."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    _QUERIES["x122_kmv_distinct"](spark, SF_SMALL).collect()
+    assert not cache.isEmpty()
+    _QUERIES["q01_avg_fare_by_airline"](spark, SF_SMALL)
+    assert cache.isEmpty()

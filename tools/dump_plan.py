@@ -20,6 +20,12 @@ from airflow_project_flight_price_analysis_spark.plans import all_queries  # noq
 from airflow_project_flight_price_analysis_spark.session import get_spark  # noqa: E402
 
 
+def formatted_plan(df) -> str:
+    """``df``'s pre-execution ``explain("formatted")`` text."""
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    return df._jdf.queryExecution().explainString(mode.fromString("formatted"))
+
+
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
@@ -31,10 +37,7 @@ def main() -> None:
     spark = get_spark(app_name="fpa-dump-plan")
     queries = all_queries()
     for name in names:
-        df = queries[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("formatted"))
+        plan = formatted_plan(queries[name](spark, sf_dir))
         short = name.split("_", 1)[0]
         path = os.path.join(out_dir, f"{short}_{suffix}.txt")
         with open(path, "w") as f:

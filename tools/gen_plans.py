@@ -13,6 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from airflow_project_flight_price_analysis_spark.plans import all_queries  # noqa: E402
 from airflow_project_flight_price_analysis_spark.session import get_spark  # noqa: E402
+from tools.dump_plan import formatted_plan  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -240,8 +241,8 @@ sf0.01; plan shapes are scale-invariant; AQE may re-plan sizes at
 runtime). What to look for: `PushedFilters`/`ReadSchema` on scans
 (pushdown + pruning), `BroadcastHashJoin` on every dimension join (zero
 fact shuffle), `TakeOrderedAndProject` for top-k (no global sort), and
-the absence of `BatchEvalPython` anywhere in the relational core
-(asserted by tests/test_plan_shapes.py).
+the absence of `BatchEvalPython` (checked for every registered face by
+the plan lint, `tools/plan_lint.py`, inside tests/test_queries_vs_oracle.py).
 """
 
 
@@ -265,10 +266,7 @@ def main() -> None:
 def _render(spark, out: io.StringIO) -> None:
     queries = all_queries()
     for name, note in SECTIONS:
-        df = queries[name](spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        plan = formatted_plan(queries[name](spark, SF_DIR))
         # queries that persist() intermediates replay the full cached
         # subplan inside every InMemoryRelation dump — cap each section
         # so one such query can't balloon the doc by 300 KB
